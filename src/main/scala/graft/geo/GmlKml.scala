@@ -24,7 +24,8 @@ object GmlKml {
 
   // ------------------------------------------------------------------ GML
 
-  private def parseGmlNode(n: Node): Geometry = {
+  /** A GML geometry element that a [[SecureXml]] loader already parsed. */
+  private[graft] def parseGmlNode(n: Node): Geometry = {
     val f = GeomSerde.factory
     n.label match {
       case "Point"      => f.createPoint(singleCoord(n))
@@ -88,7 +89,8 @@ object GmlKml {
 
   // ------------------------------------------------------------------ KML
 
-  private def parseKmlNode(n: Node): Geometry = {
+  /** A KML geometry element that a [[SecureXml]] loader already parsed. */
+  private[graft] def parseKmlNode(n: Node): Geometry = {
     val f = GeomSerde.factory
     n.label match {
       case "Point"      => f.createPoint(kmlCoords(n).head)

@@ -903,8 +903,10 @@ object Corpus {
       .where(struct(col("__id"), col("__pos")) =!= col("__first"))
       .select(col("__id"),
         explode(sequence(col("__pos"), col("__pos") + lit(windowTokens - 1))).as("__i"))
+    // a set, not a list: overlapping windows cover a position many times,
+    // and the set stays at most n entries per document
     val coveredSets = covered.groupBy(col("__id"))
-      .agg(collect_list(col("__i")).as("__cov"))
+      .agg(collect_set(col("__i")).as("__cov"))
     val emptyInts = array().cast("array<int>")
     val keptPos = when(size(col("__ts")) < 1, emptyInts)
       .otherwise(array_except(sequence(lit(0), size(col("__ts")) - 1),

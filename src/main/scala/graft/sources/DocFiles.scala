@@ -156,6 +156,49 @@ private[sources] object DocFiles {
     text
   }
 
+  /** One flattened record: column → string value, plus the geometry WKB. */
+  type Record = (Map[String, String], Option[Array[Byte]])
+
+  /** The decoded records of one document, and whether they came from
+    * `cache`. Every whole-document decode of the file scans and of schema
+    * inference goes through here. The bytes are read on every call; the
+    * decode runs only when `(format, SHA-256 of the bytes)` is not cached,
+    * so a rewritten file is never served stale, whatever its mtime or
+    * length. Pushed filters, bbox, LIMIT, TopN and partial aggregates stay
+    * per query, on the returned records. */
+  def records(file: String, format: DocFormat, timeoutMs: Int,
+              cache: DecodedDocs = DecodedDocs.shared): (IndexedSeq[Record], Boolean) = {
+    val in = openDocStream(file, timeoutMs)
+    val bytes = try in.readAllBytes() finally in.close()
+    cache.getOrDecode(format, bytes)(format.decode(file, bytes))
+  }
+
+  /** The two scan metrics of the graft-xml / graft-geojson file scans. */
+  def scanMetrics: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new DocumentsDecodedMetric, new DocumentsCachedMetric)
+
+  /** One reader's counts behind [[scanMetrics]]. */
+  final class ScanCounts {
+    private var decoded = 0L
+    private var cached = 0L
+
+    def records(file: String, format: DocFormat, timeoutMs: Int): IndexedSeq[Record] = {
+      val (recs, hit) = DocFiles.records(file, format, timeoutMs)
+      if (hit) cached += 1 else decoded += 1
+      recs
+    }
+
+    def values: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+      Array(taskMetric(DocumentsDecodedMetric.Name, decoded),
+        taskMetric(DocumentsCachedMetric.Name, cached))
+
+    private def taskMetric(n: String, v: Long) =
+      new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }
+  }
+
   /** Spark encodes `.load(p1, p2, …)` as a JSON array under "paths". */
   def pathsOf(options: CaseInsensitiveStringMap): Seq[String] = {
     val multi = Option(options.get("paths")).map { js =>
@@ -203,3 +246,101 @@ trait GraftDocStatistics
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
 }
+
+/** How one document's bytes decode to flattened records. The value is half
+  * of the [[DecodedDocs]] key, so every field that changes the decode
+  * (the record tag, the line mode) belongs in it. */
+private[sources] sealed trait DocFormat {
+  def decode(file: String, bytes: Array[Byte]): IndexedSeq[DocFiles.Record]
+}
+
+/** An XML document: the `recordTag` descendants, or the root's children,
+  * flattened by [[Xml.flattenRecord]]. */
+private[sources] final case class XmlDoc(recordTag: Option[String]) extends DocFormat {
+  override def decode(file: String, bytes: Array[Byte]): IndexedSeq[DocFiles.Record] = {
+    // XXE-hardened loader: document text is data
+    val doc = graft.geo.SecureXml.document.load(new java.io.ByteArrayInputStream(bytes))
+    val kml = graft.sources.xml.XmlDataSource.isKml(doc)
+    Xml.records(doc, recordTag).iterator.map(Xml.flattenRecord(_, kml)).toIndexedSeq
+  }
+}
+
+/** A GeoJSON document: one Feature or FeatureCollection per file, or one
+  * per non-blank line (`multiLine = false`, NDJSON). */
+private[sources] final case class GeoJsonDoc(multiLine: Boolean) extends DocFormat {
+  override def decode(file: String, bytes: Array[Byte]): IndexedSeq[DocFiles.Record] = {
+    val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    if (multiLine) {
+      // a whole-file document is ONE JSON value; flattenFeature parses the
+      // first object and would silently IGNORE anything after it — so an
+      // NDJSON export read back without multiLine=false must error loudly
+      // instead of returning one row per file
+      val p = new com.fasterxml.jackson.core.JsonFactory().createParser(text)
+      try {
+        p.nextToken()
+        p.skipChildren()
+        if (p.nextToken() != null)
+          throw new IllegalArgumentException(
+            s"$file: trailing JSON after the first document — NDJSON input " +
+              """needs .option("multiLine", "false")""")
+      } finally p.close()
+      GeoJsonSource.flattenFeature(text).toIndexedSeq
+    } else text.linesIterator.map(_.trim).filter(_.nonEmpty)
+      .flatMap(GeoJsonSource.flattenFeature).toIndexedSeq
+  }
+}
+
+/** Decoded documents, least recently used first out, keyed by (format,
+  * SHA-256 of the bytes). Weighed by the estimated size of the decoded
+  * records; an entry heavier than the whole bound is not kept. Decodes run
+  * outside the lock, so concurrent tasks never wait on one another's
+  * parse. Production uses the one [[DecodedDocs.shared]] instance. */
+private[sources] final class DecodedDocs(maxBytes: Long) {
+  private final class Entry(val records: IndexedSeq[DocFiles.Record], val bytes: Long)
+
+  // access order: iteration starts at the least recently used entry
+  private val lru = new java.util.LinkedHashMap[(DocFormat, String), Entry](16, 0.75f, true)
+  private var total = 0L
+
+  def getOrDecode(format: DocFormat, content: Array[Byte])(
+      decode: => IndexedSeq[DocFiles.Record]): (IndexedSeq[DocFiles.Record], Boolean) = {
+    val key = (format, java.util.HexFormat.of().formatHex(
+      java.security.MessageDigest.getInstance("SHA-256").digest(content)))
+    val hit = synchronized(lru.get(key))
+    if (hit != null) (hit.records, true)
+    else {
+      val recs = decode
+      val weight = org.apache.spark.util.SizeEstimator.estimate(recs)
+      if (weight <= maxBytes) synchronized {
+        Option(lru.put(key, new Entry(recs, weight))).foreach(old => total -= old.bytes)
+        total += weight
+        val it = lru.values.iterator
+        while (total > maxBytes) { total -= it.next().bytes; it.remove() }
+      }
+      (recs, false)
+    }
+  }
+
+  def clear(): Unit = synchronized { lru.clear(); total = 0L }
+}
+
+private[sources] object DecodedDocs {
+  /** The JVM-wide cache, bounded by a tenth of the maximum heap. */
+  val shared = new DecodedDocs(Runtime.getRuntime.maxMemory / 10)
+}
+
+/** Scan metric: documents a graft-xml / graft-geojson file scan decoded. */
+class DocumentsDecodedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = DocumentsDecodedMetric.Name
+  override def description(): String = "documents decoded"
+}
+
+object DocumentsDecodedMetric { val Name = "documentsDecoded" }
+
+/** Scan metric: documents a file scan took from [[DecodedDocs]]. */
+class DocumentsCachedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = DocumentsCachedMetric.Name
+  override def description(): String = "documents served from cache"
+}
+
+object DocumentsCachedMetric { val Name = "documentsFromCache" }

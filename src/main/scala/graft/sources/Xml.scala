@@ -29,7 +29,8 @@ object Xml {
     "MultiPoint", "MultiLineString", "MultiPolygon", "MultiGeometry")
 
   /** Flattens one record element to (column → string value) plus optional
-    * geometry WKB. */
+    * geometry WKB. Geometry parses straight from the record's DOM nodes,
+    * which a hardened [[graft.geo.SecureXml]] loader already produced. */
   def flattenRecord(rec: Node, kml: Boolean): (Map[String, String], Option[Array[Byte]]) = {
     val out = LinkedHashMap.empty[String, String]
     var geom: Option[Array[Byte]] = None
@@ -38,7 +39,7 @@ object Xml {
 
     rec.child.collect { case e: Elem => e }.foreach { c =>
       if (SpatialTypes(c.label)) {
-        val g = if (kml) GmlKml.parseKml(c.toString) else GmlKml.parseGml(c.toString)
+        val g = if (kml) GmlKml.parseKmlNode(c) else GmlKml.parseGmlNode(c)
         geom = Some(GeomSerde.toWkb(g))
       } else if (c.attribute("group").isDefined) {
         // un-named grouped member → `_undef__<group>` (reference:
@@ -52,7 +53,7 @@ object Xml {
         } else {
           grandchildren.foreach { gc =>
             if (SpatialTypes(gc.label)) {
-              val g = if (kml) GmlKml.parseKml(gc.toString) else GmlKml.parseGml(gc.toString)
+              val g = if (kml) GmlKml.parseKmlNode(gc) else GmlKml.parseGmlNode(gc)
               geom = Some(GeomSerde.toWkb(g))
             } else {
               out(s"${c.label}__${gc.label}") = gc.text

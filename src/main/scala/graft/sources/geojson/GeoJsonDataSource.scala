@@ -61,9 +61,8 @@ class GeoJsonDataSource extends TableProvider with DataSourceRegister {
           val multiLine = Option(options.get("multiLine")).forall(_.toBoolean)
           val sample = DocFiles.listFiles(DocFiles.pathsOf(options)).take(8) // bounded inference
           sample.foreach { f =>
-            GeoJsonDataSource.documents(f, multiLine).foreach { json =>
-              GeoJsonSource.flattenFeature(json).foreach { case (m, _) => keys ++= m.keys }
-            }
+            DocFiles.records(f, graft.sources.GeoJsonDoc(multiLine), DocFiles.HttpTimeoutMs)._1
+              .foreach { case (m, _) => keys ++= m.keys }
           }
         }
         GeoJsonDataSource.schemaFor(keys.toSeq)
@@ -96,37 +95,6 @@ object GeoJsonDataSource {
   private[geojson] def serverMode(options: Map[String, String]): Boolean =
     options.get("serverPushdown").orElse(options.get("serverpushdown"))
       .exists(_.toBoolean)
-
-  /** One whole-file document, or one document per non-blank line (NDJSON).
-    * URL-stream read (no SparkSession dependency) so it runs identically on
-    * driver (inference) and executors (scan) — same model as graft-xml. */
-  def documents(file: String, multiLine: Boolean,
-      timeoutMs: Int = graft.sources.DocFiles.HttpTimeoutMs): Iterator[String] = {
-    val in = graft.sources.DocFiles.openDocStream(file, timeoutMs)
-    val text = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString(java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    if (multiLine) {
-      // a whole-file document is ONE JSON value; flattenFeature parses the
-      // first object and would silently IGNORE anything after it — so an
-      // NDJSON export read back without multiLine=false must error loudly
-      // instead of returning one row per file
-      val p = new com.fasterxml.jackson.core.JsonFactory().createParser(text)
-      try {
-        p.nextToken()
-        p.skipChildren()
-        if (p.nextToken() != null)
-          throw new IllegalArgumentException(
-            s"$file: trailing JSON after the first document — NDJSON input " +
-              """needs .option("multiLine", "false")""")
-      } finally p.close()
-      Iterator.single(text)
-    } else text.linesIterator.map(_.trim).filter(_.nonEmpty)
-  }
 }
 
 private class GeoJsonTable(schema: StructType, properties: Map[String, String],
@@ -297,6 +265,9 @@ private[graft] case class GeoJsonScan(required: StructType, options: Map[String,
   override def planInputPartitions(): Array[InputPartition] =
     files.map(f => GeoJsonInputPartition(f, runtime.toIndexedSeq): InputPartition).toArray
 
+  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    DocFiles.scanMetrics
+
   override def createReaderFactory(): PartitionReaderFactory =
     GeoJsonReaderFactory(readSchema(),
       options.get("multiline").orElse(options.get("multiLine")).forall(_.toBoolean),
@@ -411,21 +382,24 @@ private case class GeoJsonReaderFactory(schema: StructType, multiLine: Boolean,
   private def transferHint(eff: Seq[Filter]): Option[Int] =
     if (eff.isEmpty && bbox.isEmpty) limit else None
 
-  /** Feature documents of one partition. Local mode reads files/URLs;
-    * server mode runs the pushed predicates INSIDE the store — CouchDB
-    * via paginated `_find`, MongoDB via the OP_MSG find/getMore cursor —
-    * but the caller still re-applies every filter, so all modes agree
-    * even against a server that ignored the selector. */
-  private def documents(file: String, eff: Seq[Filter]): Iterator[String] =
-    if (serverPushdown && graft.sources.mongo.MongoWire.isMongoUrl(file))
+  /** Whether `file` is a document-store endpoint the scan queries, rather
+    * than a file read through [[DocFiles.records]]. */
+  private def fromServer(file: String): Boolean =
+    serverPushdown && (graft.sources.mongo.MongoWire.isMongoUrl(file) || file.startsWith("http"))
+
+  /** Feature documents of one server-mode partition: the pushed predicates
+    * run INSIDE the store — CouchDB via paginated `_find`, MongoDB via the
+    * OP_MSG find/getMore cursor — but the caller still re-applies every
+    * filter, so all modes agree even against a server that ignored the
+    * selector. */
+  private def serverDocuments(file: String, eff: Seq[Filter]): Iterator[String] =
+    if (graft.sources.mongo.MongoWire.isMongoUrl(file))
       // bare column names: MongoFindGen.projection prefixes `properties.`
       // itself (the reference's constructProjectionQuery contract)
       graft.sources.mongo.MongoWire.docs(file, serverSelector(eff), neededColumns(eff),
         httpTimeoutMs, transferHint(eff), featuresPassthrough = true)
-    else if (serverPushdown && file.startsWith("http"))
-      graft.sources.mongo.CouchFind.docs(file, serverSelector(eff),
-        serverFields(eff), httpTimeoutMs, transferHint(eff))
-    else GeoJsonDataSource.documents(file, multiLine, httpTimeoutMs)
+    else graft.sources.mongo.CouchFind.docs(file, serverSelector(eff),
+      serverFields(eff), httpTimeoutMs, transferHint(eff))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GeoJsonInputPartition]
@@ -437,15 +411,18 @@ private case class GeoJsonReaderFactory(schema: StructType, multiLine: Boolean,
         if (schema.fieldNames.contains("geometry")) schema.fieldIndex("geometry") else -1
       private val bboxKeep = bbox.map(StringFilterEval.bboxPredicate)
       private val serverAggMode = serverAggApplicable(file, eff)
-      // kept for close(): a pushed LIMIT (or any early stop) leaves the
-      // Mongo wire cursor mid-page — its socket must not outlive the task
+      private val scanCounts = new DocFiles.ScanCounts
+      // the server's document stream (empty for a file), kept for close():
+      // a pushed LIMIT (or any early stop) leaves the Mongo wire cursor
+      // mid-page — its socket must not outlive the task
       private val source: Iterator[String] =
         if (serverAggMode)
           graft.sources.mongo.MongoWire.aggregate(file,
             graft.sources.mongo.MongoFindGen.aggregationPipeline(
               agg.get._1, serverAggCountCols.get,
               serverAggMatch(eff).filter(_ != "true")), httpTimeoutMs)
-        else documents(file, eff)
+        else if (fromServer(file)) serverDocuments(file, eff)
+        else Iterator.empty
       private val rows: Iterator[InternalRow] = if (serverAggMode) {
         // the pipeline's per-group partial documents ({_id: {g0: …},
         // a0: n, …}) ARE the scan output — decode straight into the
@@ -469,14 +446,14 @@ private case class GeoJsonReaderFactory(schema: StructType, multiLine: Boolean,
         else if (base.hasNext) base
         else Iterator.single(InternalRow.fromSeq(counts.map(_ => 0L)))
       } else {
-        val matching = source.flatMap { json =>
-          GeoJsonSource.flattenFeature(json).iterator.flatMap { case (m, g) =>
-            // pushed + runtime filters run on the FULL property map (they
-            // may reference columns pruned from the output schema) before
-            // any row is built
-            if (bboxKeep.forall(_(g)) && eff.forall(StringFilterEval.passes(_, m))) Some((m, g))
-            else None
-          }
+        val decoded: Iterator[DocFiles.Record] =
+          if (fromServer(file)) source.flatMap(GeoJsonSource.flattenFeature)
+          else scanCounts.records(file, graft.sources.GeoJsonDoc(multiLine), httpTimeoutMs).iterator
+        // pushed + runtime filters run on the FULL property map (they may
+        // reference columns pruned from the output schema) before any row
+        // is built
+        val matching = decoded.filter { case (m, g) =>
+          bboxKeep.forall(_(g)) && eff.forall(StringFilterEval.passes(_, m))
         }
         // pushed LIMIT: per-partition truncation after the re-apply; the
         // lazy _find pages stop pulling once n rows are consumed. Pushed
@@ -502,6 +479,8 @@ private case class GeoJsonReaderFactory(schema: StructType, multiLine: Boolean,
       override def next(): Boolean =
         if (rows.hasNext) { current = rows.next(); true } else false
       override def get(): InternalRow = current
+      override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+        scanCounts.values
       override def close(): Unit = source match {
         case c: AutoCloseable => c.close()
         case _                => ()

@@ -44,11 +44,8 @@ class XmlDataSource extends TableProvider with DataSourceRegister {
         val sample = DocFiles.listFiles(DocFiles.pathsOf(options)).take(8) // bounded inference
         val keys = scala.collection.mutable.SortedSet.empty[String]
         sample.foreach { f =>
-          val doc = XmlDataSource.loadDoc(f)
-          val kml = XmlDataSource.isKml(doc)
-          Xml.records(doc, recordTag).foreach { r =>
-            keys ++= Xml.flattenRecord(r, kml)._1.keys
-          }
+          DocFiles.records(f, graft.sources.XmlDoc(recordTag), DocFiles.HttpTimeoutMs)._1
+            .foreach { case (m, _) => keys ++= m.keys }
         }
         XmlDataSource.schemaFor(keys.toSeq)
     }
@@ -75,16 +72,6 @@ object XmlDataSource {
   private[sources] def kmlish(e: scala.xml.Elem): Boolean =
     (e.namespace != null && e.namespace.contains("kml")) ||
       e.child.exists(c => c.namespace != null && c.namespace.contains("kml"))
-
-  /** Parses one document by path/URL: XXE-hardened parser, and HTTP(S)
-    * fetches carry connect/read timeouts so a stalled server fails the
-    * task instead of hanging it. */
-  private[sources] def loadDoc(file: String,
-      timeoutMs: Int = graft.sources.DocFiles.HttpTimeoutMs): scala.xml.Elem = {
-    val in = graft.sources.DocFiles.openDocStream(file, timeoutMs)
-    try graft.geo.SecureXml.document.load(in)
-    finally in.close()
-  }
 }
 
 private class XmlTable(schema: StructType, properties: Map[String, String],
@@ -560,6 +547,9 @@ private[graft] case class XmlScan(required: StructType, options: Map[String, Str
   override def planInputPartitions(): Array[InputPartition] =
     files.map(f => XmlInputPartition(f, runtime.toIndexedSeq): InputPartition).toArray
 
+  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    DocFiles.scanMetrics
+
   override def createReaderFactory(): PartitionReaderFactory = {
     val dialect = options.get("dialect")
     val basexVersion = options.get("basexVersion").orElse(options.get("basexversion"))
@@ -608,14 +598,16 @@ private case class XmlReaderFactory(schema: StructType, recordTag: Option[String
       (if (bbox.isDefined) Seq("geometry") else Nil)).distinct
   }
 
-  /** Record elements of one partition's document. Local mode parses the
-    * whole document; server mode ([[graft.sources.xquery.BaseXRest]]) runs
-    * the pushed predicates INSIDE the database and receives only matching
+  /** Flattened records of one partition's document. Local mode takes the
+    * whole document's records from [[DocFiles.records]] (decoded once per
+    * content); server mode ([[graft.sources.xquery.BaseXRest]]) runs the
+    * pushed predicates INSIDE the database and receives only matching
     * records (projected to [[neededColumns]] when expressible) — but the
     * caller still re-applies every filter, so the two modes agree even
     * against a server that ignored the query. `eff` = pushed + runtime
     * filters of this partition. */
-  private def recordElems(file: String, eff: Seq[Filter]): Iterator[(scala.xml.Node, Boolean)] =
+  private def docRecords(file: String, eff: Seq[Filter],
+                         scanCounts: DocFiles.ScanCounts): Iterator[DocFiles.Record] =
     if (serverPushdown && file.startsWith("http")) {
       if (bbox.contains("empty")) Iterator.empty // unsatisfiable prune: no query
       else graft.sources.xquery.BaseXRest.fetchRecords(file,
@@ -635,12 +627,8 @@ private case class XmlReaderFactory(schema: StructType, recordTag: Option[String
           else None)
         // kml-ness is per record here (no document root to inspect); a
         // projected record carries it only on the copied spatial children
-        .map(r => (r, XmlDataSource.kmlish(r)))
-    } else {
-      val doc = XmlDataSource.loadDoc(file, httpTimeoutMs)
-      val kml = XmlDataSource.isKml(doc)
-      Xml.records(doc, recordTag).iterator.map(r => (r, kml))
-    }
+        .map(r => Xml.flattenRecord(r, XmlDataSource.kmlish(r)))
+    } else scanCounts.records(file, graft.sources.XmlDoc(recordTag), httpTimeoutMs).iterator
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[XmlInputPartition]
@@ -653,6 +641,7 @@ private case class XmlReaderFactory(schema: StructType, recordTag: Option[String
       private val geomIdx =
         if (schema.fieldNames.contains("geometry")) schema.fieldIndex("geometry") else -1
       private val bboxKeep = bbox.map(graft.sources.StringFilterEval.bboxPredicate)
+      private val scanCounts = new DocFiles.ScanCounts
       private val rows: Iterator[InternalRow] = {
         // COUNT(+GROUP BY) can aggregate INSIDE the database when every
         // pushed piece is XQuery-expressible — only per-group partials
@@ -675,13 +664,10 @@ private case class XmlReaderFactory(schema: StructType, recordTag: Option[String
             graft.sources.xquery.BaseXRest.versionOf(dialect, basexVersion),
             recordTag, eff.toIndexedSeq, groups, specs, httpTimeoutMs).iterator
         } else {
-          val matching = recordElems(file, eff).flatMap { case (r, kml) =>
-            val (m, g) = Xml.flattenRecord(r, kml)
-            // pushed filters run on the FULL flattened map (they may reference
-            // columns pruned from the output schema) before any row is built
-            if (bboxKeep.forall(_(g)) &&
-                eff.forall(graft.sources.StringFilterEval.passes(_, m))) Some((m, g))
-            else None
+          // pushed filters run on the FULL flattened map (they may reference
+          // columns pruned from the output schema) before any row is built
+          val matching = docRecords(file, eff, scanCounts).filter { case (m, g) =>
+            bboxKeep.forall(_(g)) && eff.forall(graft.sources.StringFilterEval.passes(_, m))
           }
           // pushed LIMIT: per-partition truncation AFTER the re-apply —
           // LocalLimit's contract exactly (builder refuses limit+agg);
@@ -709,6 +695,8 @@ private case class XmlReaderFactory(schema: StructType, recordTag: Option[String
       override def next(): Boolean =
         if (rows.hasNext) { current = rows.next(); true } else false
       override def get(): InternalRow = current
+      override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+        scanCounts.values
       override def close(): Unit = ()
     }
   }

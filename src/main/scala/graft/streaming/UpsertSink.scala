@@ -883,7 +883,11 @@ object UpsertSink {
     }
     val effectiveDdl = effectiveSchema.toDDL
     if (prev.exists(_.batchId >= batchId)) return false // replayed batch
-    val bucketOf = bucketExpr(key, numBuckets)
+    // xxhash64 skips NULLs, so a NULL key would hash to the seed and land
+    // in a real bucket: the change rows fail loudly instead
+    val bucketOf = when(col(key).isNull,
+        raise_error(lit(s"applyBatch: NULL $key in a change row")))
+      .otherwise(bucketExpr(key, numBuckets))
     // one micro-batch — bounded; checkpointed because it is read twice
     // below (touched list, merge) and the foreachBatch source frame is
     // only valid inside this call. LAZY: the touched-bucket collect is
@@ -901,11 +905,7 @@ object UpsertSink {
       val touched = batch.select(BucketCol).queryExecution.toRdd
         .mapPartitions { it =>
           val s = new java.util.HashSet[Int]()
-          it.foreach { r =>
-            if (r.isNullAt(0)) throw new IllegalArgumentException(
-              s"applyBatch: NULL $key in a change row")
-            s.add(r.getInt(0))
-          }
+          it.foreach(r => s.add(r.getInt(0)))
           scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
         }.collect().distinct.sorted
       if (touched.isEmpty) return false // empty batch

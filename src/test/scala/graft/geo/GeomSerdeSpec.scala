@@ -160,4 +160,71 @@ class GeomSerdeSpec extends AnyFunSuite {
     }
     ext.foreach(d => assert((d \\ "name").text.isEmpty, "external entity must not resolve"))
   }
+
+  test("GML/KML parsed from an already-parsed DOM node equals the string path") {
+    val gmlNs = """xmlns:gml="http://www.opengis.net/gml""""
+    val gml = Seq(
+      s"""<gml:Point $gmlNs><gml:coordinates>1,2</gml:coordinates></gml:Point>""",
+      s"""<gml:Point $gmlNs><gml:pos>7 8</gml:pos></gml:Point>""",
+      s"""<gml:LineString $gmlNs><gml:posList>0 0 1 1 2 0</gml:posList></gml:LineString>""",
+      s"""<gml:LineString $gmlNs><gml:coordinates>0,0 1,1 2,0</gml:coordinates></gml:LineString>""",
+      s"""<gml:Polygon $gmlNs>
+         |  <gml:outerBoundaryIs><gml:LinearRing><gml:coordinates>0,0 4,0 4,4 0,4 0,0</gml:coordinates></gml:LinearRing></gml:outerBoundaryIs>
+         |  <gml:innerBoundaryIs><gml:LinearRing><gml:coordinates>1,1 2,1 2,2 1,2 1,1</gml:coordinates></gml:LinearRing></gml:innerBoundaryIs>
+         |</gml:Polygon>""".stripMargin,
+      s"""<gml:Polygon $gmlNs>
+         |  <gml:exterior><gml:LinearRing><gml:posList>0 0 10 0 10 10 0 10 0 0</gml:posList></gml:LinearRing></gml:exterior>
+         |  <gml:interior><gml:LinearRing><gml:posList>1 1 2 1 2 2 1 2 1 1</gml:posList></gml:LinearRing></gml:interior>
+         |  <gml:interior><gml:LinearRing><gml:posList>5 5 6 5 6 6 5 6 5 5</gml:posList></gml:LinearRing></gml:interior>
+         |</gml:Polygon>""".stripMargin,
+      s"""<gml:MultiPoint $gmlNs>
+         |  <gml:pointMember><gml:Point><gml:coordinates>1,1</gml:coordinates></gml:Point></gml:pointMember>
+         |  <gml:Point><gml:pos>2 2</gml:pos></gml:Point>
+         |</gml:MultiPoint>""".stripMargin,
+      s"""<gml:MultiLineString $gmlNs>
+         |  <gml:lineStringMember><gml:LineString><gml:posList>0 0 1 1</gml:posList></gml:LineString></gml:lineStringMember>
+         |  <gml:lineStringMember><gml:LineString><gml:posList>2 2 3 3</gml:posList></gml:LineString></gml:lineStringMember>
+         |</gml:MultiLineString>""".stripMargin,
+      s"""<gml:MultiPolygon $gmlNs>
+         |  <gml:polygonMember><gml:Polygon><gml:exterior><gml:LinearRing><gml:posList>0 0 1 0 1 1 0 0</gml:posList></gml:LinearRing></gml:exterior></gml:Polygon></gml:polygonMember>
+         |  <gml:polygonMember><gml:Polygon><gml:exterior><gml:LinearRing><gml:posList>5 5 6 5 6 6 5 5</gml:posList></gml:LinearRing></gml:exterior></gml:Polygon></gml:polygonMember>
+         |</gml:MultiPolygon>""".stripMargin,
+      s"""<gml:MultiGeometry $gmlNs>
+         |  <gml:geometryMember><gml:Point><gml:coordinates>1,1</gml:coordinates></gml:Point></gml:geometryMember>
+         |  <gml:geometryMember><gml:LineString><gml:coordinates>0,0 1,1</gml:coordinates></gml:LineString></gml:geometryMember>
+         |</gml:MultiGeometry>""".stripMargin,
+      s"""<gml:LineString $gmlNs><gml:posList srsDimension="3">0 0 5 1 1 6 2 0 7</gml:posList></gml:LineString>""",
+      s"""<gml:Polygon $gmlNs><gml:exterior><gml:LinearRing><gml:posList srsDimension="3">0 0 1 4 0 2 4 4 3 0 0 1</gml:posList></gml:LinearRing></gml:exterior></gml:Polygon>""",
+      s"""<gml:Point $gmlNs><gml:coordinates>1,2,3</gml:coordinates></gml:Point>""")
+    val kml = Seq(
+      "<Point><coordinates>100.0,10.0,0</coordinates></Point>",
+      "<LineString><coordinates>0,0 1,1 2,2</coordinates></LineString>",
+      """<Polygon>
+        |  <outerBoundaryIs><LinearRing><coordinates>0,0 4,0 4,4 0,4 0,0</coordinates></LinearRing></outerBoundaryIs>
+        |  <innerBoundaryIs><LinearRing><coordinates>1,1 2,1 2,2 1,2 1,1</coordinates></LinearRing></innerBoundaryIs>
+        |</Polygon>""".stripMargin,
+      """<MultiGeometry>
+        |  <Point><coordinates>1,1</coordinates></Point>
+        |  <Polygon><outerBoundaryIs><LinearRing><coordinates>0,0 1,0 1,1 0,0</coordinates></LinearRing></outerBoundaryIs></Polygon>
+        |</MultiGeometry>""".stripMargin,
+      "<Placemark><name>p</name><Point><coordinates>3,4,5</coordinates></Point></Placemark>",
+      "<LineString><coordinates>0,0,1 1,1,2</coordinates></LineString>")
+    // the node as the document scan sees it: a child of a record, inside a
+    // document parsed by the document loader
+    def asRecordChild(fragment: String): scala.xml.Node = {
+      val doc = SecureXml.document.loadString(
+        s"<doc $gmlNs><record><name>x</name>$fragment</record></doc>")
+      (doc \\ "record").head.child.collect { case e: scala.xml.Elem => e }.last
+    }
+    val wkt = new org.locationtech.jts.io.WKTWriter(3)
+    def same(a: org.locationtech.jts.geom.Geometry, b: org.locationtech.jts.geom.Geometry, what: String) = {
+      assert(a.getGeometryType == b.getGeometryType, what)
+      assert(a.equalsExact(b), what)
+      assert(wkt.write(a) == wkt.write(b), what) // the Z ordinates too
+    }
+    gml.foreach(f => same(GmlKml.parseGmlNode(asRecordChild(f)), GmlKml.parseGml(f), f))
+    kml.foreach(f => same(GmlKml.parseKmlNode(asRecordChild(f)), GmlKml.parseKml(f), f))
+    // the 3-D fixtures really carry Z
+    assert(GmlKml.parseGmlNode(asRecordChild(gml(10))).getCoordinates.map(_.getZ).toSeq == Seq(5.0, 6.0, 7.0))
+  }
 }

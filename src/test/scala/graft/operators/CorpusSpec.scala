@@ -485,6 +485,43 @@ class CorpusSpec extends SparkTestBase {
     assert(!plan.contains("Window"), plan)
   }
 
+  test("removeDupSpans: overlapping duplicate windows excise exactly the covered tokens") {
+    import spark.implicits._
+    val w = 3
+    // repeats inside one document, a document that repeats another with
+    // overlapping shifted windows, and a seeded corpus over a 4-word
+    // vocabulary where most positions sit under several duplicate windows
+    val rng = new scala.util.Random(17)
+    val vocab = Seq("ab", "cd", "Ab", "ef")
+    val seeded = (10L until 22L).map(id =>
+      id -> Seq.fill(5 + rng.nextInt(12))(vocab(rng.nextInt(vocab.size))).mkString(" "))
+    val corpus = Seq(
+      1L -> "p q r p q r p q r",
+      2L -> "a b c d e f g h",
+      3L -> "x a b c d e f g h y",
+      4L -> "b c d z b c d") ++ seeded
+    // the documented rule in plain Scala: every non-first occurrence (by
+    // (doc, position)) of a lower-cased window covers its w positions
+    val toks = corpus.map { case (id, t) => id -> t.trim.split("\\s+").filter(_.nonEmpty).toSeq }
+    val occ = for ((id, ts) <- toks; p <- 0 to ts.length - w)
+      yield (ts.slice(p, p + w).map(_.toLowerCase), id, p)
+    val covered = occ.groupBy(_._1).values.filter(_.size > 1).flatMap { group =>
+      val first = group.map(o => (o._2, o._3)).min
+      group.filter(o => (o._2, o._3) != first).flatMap(o => (o._3 until o._3 + w).map(o._2 -> _))
+    }.toSet
+    val expected = toks.map { case (id, ts) =>
+      val kept = ts.indices.filterNot(i => covered((id, i))).map(ts)
+      id -> ((kept.mkString(" "), ts.length, (ts.length - kept.length).toLong))
+    }.toMap
+    val out = Corpus.removeDupSpans(corpus.toDF("doc_id", "text"), "doc_id", "text", w)
+      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getInt(2), r.getLong(3)))).toMap
+    assert(out == expected)
+    assert(out(1L) == (("p q r", 9, 6L)))
+    assert(out(3L) == (("x y", 10, 8L)))
+    assert(out(4L) == (("z", 7, 6L)))
+    assert(expected.values.map(_._3).sum > 30) // the seeded docs overlap heavily
+  }
+
   test("profile: single-pass per-column stats with type-correct min/max") {
     import spark.implicits._
     val df = Seq((1L, Some(10.0), Some("b")), (2L, Some(2.0), None),

@@ -24,6 +24,21 @@ class UpsertSinkSpec extends SparkTestBase {
     UpsertSink.applyBatch(spark, path, "id", "seq", "op", Seq("v"), B)(
       rows.toDF("id", "seq", "op", "v"), id)
 
+  test("a NULL key in a change batch fails the apply instead of landing in a bucket") {
+    val path = tmp()
+    val rows = Seq((Some(1L), 1L, "I", "one"), (None, 1L, "I", "ghost"))
+      .toDF("id", "seq", "op", "v")
+    val e = intercept[Exception] {
+      UpsertSink.applyBatch(spark, path, "id", "seq", "op", Seq("v"), B)(rows, 0)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("applyBatch: NULL id in a change row")), messages)
+    // nothing was committed
+    assert(intercept[IllegalStateException](UpsertSink.readSnapshot(spark, path))
+      .getMessage.contains("no snapshot"))
+  }
+
   test("sequential batches fold exactly like batch mergeChanges") {
     val path = tmp()
     val b0 = Seq((1L, 1L, "I", "one"), (2L, 1L, "I", "two"), (3L, 1L, "I", "three"))
