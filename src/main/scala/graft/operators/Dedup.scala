@@ -73,11 +73,11 @@ object Dedup {
 
   /** Internal persists that must OUTLIVE their call — the returned plan
     * references them lazily (minhash signatures, the embedding base frame,
-    * the final clustering-label RDD), so they cannot be unpersisted before
-    * the caller executes the result. A long-lived session releases them
-    * with [[releaseCaches]] once results are consumed; without it the
-    * blocks linger until evicted (MEMORY_AND_DISK is LRU-evictable, so
-    * this is hygiene, not an OOM). */
+    * the cached minhash pair result, the final clustering-label RDD), so they
+    * cannot be unpersisted before the caller executes the result. A
+    * long-lived session releases them with [[releaseCaches]] once results
+    * are consumed; without it the blocks linger until evicted
+    * (MEMORY_AND_DISK is LRU-evictable, so this is hygiene, not an OOM). */
   private val tracked = new Registry
   private[operators] def track[A <: AnyRef](h: A): A = { tracked.add(h); h }
 
@@ -124,7 +124,10 @@ object Dedup {
       val it = set.iterator()
       while (it.hasNext) {
         it.next() match {
-          case ds: org.apache.spark.sql.Dataset[_]        => releaseFrame(ds.toDF(), blocking)
+          // only SQL-cached frames reach here (see Registry.add): drop the
+          // cache, never the plan's checkpoint leaves — those belong to
+          // whoever checkpointed them (often the caller's own input)
+          case ds: org.apache.spark.sql.Dataset[_]        => ds.unpersist(blocking)
           case rdd: org.apache.spark.rdd.RDD[_]           => rdd.unpersist(blocking)
           case b: org.apache.spark.broadcast.Broadcast[_] => b.destroy()
           case _                                          => ()
@@ -471,12 +474,20 @@ object Dedup {
     // O(|doc|) work each, on the partitioning established above.
     val shingles = base.select(col("id"),
       call_function("sorted_shingles", col("text"), lit(shingleK)).as("sh"))
-    est
+    // The result is a lazily cached frame: the first action fills the
+    // cache, and a later one (a re-collect, [[clusters]]' probe and
+    // checkpoint) reads it instead of re-running the candidate + refine
+    // DAG. `persist`, not `localCheckpoint(eager = false)`: under AQE a
+    // checkpoint executes every shuffle stage at call time, which would
+    // make the operator eager. A released persist just recomputes, so
+    // releaseCaches can never strand this result.
+    track(est
       .join(shingles.toDF("id_a", "sh_a"), "id_a")
       .join(shingles.toDF("id_b", "sh_b"), "id_b")
       .withColumn("jaccard", call_function("jaccard_sorted", col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** SimHash near-duplicate pairs: 64-bit simhash, block-permutation LSH
@@ -608,7 +619,9 @@ object Dedup {
     * integral ids it runs as a Pregel-style RDD loop whose edge table is
     * hash-partitioned once and never re-shuffled ([[clustersRddLoop]]);
     * duplicate clusters are shallow in practice so this converges in a
-    * handful of rounds. */
+    * handful of rounds. `pairs` is executed at most once: an uncached input
+    * is cached for the call and unpersisted before returning; a frame the
+    * caller persisted or checkpointed is read as is and left to the caller. */
   /** @param reliableCheckpoint when true, iteration state checkpoints to the
     *                            cluster-durable checkpoint dir (set
     *                            `sc.setCheckpointDir` first) instead of
@@ -642,60 +655,90 @@ object Dedup {
       pairs.schema.find(_.name == n).exists(f =>
         f.dataType == LongType || f.dataType == IntegerType ||
           f.dataType == ShortType || f.dataType == ByteType))
-    if (smallGraphThreshold > 0 && integralIds) {
-      // limit-bounded probe: fetches at most threshold+1 rows, so deciding
-      // the path never materializes a billion-edge list on the driver.
-      // Probed on the RAW pair frame (round 15): the driver path consumes
-      // the edge list exactly once — right here — so checkpointing the
-      // whole pair DAG first paid a full materialization pass plus a
-      // corpus-sized cache write that the common (small-graph) path
-      // immediately threw away. Only the distributed loops below, which
-      // re-read the pairs every round, checkpoint.
-      val appliedLimit = math.min(smallGraphThreshold + 1, (Int.MaxValue - 1).toLong).toInt
-      val sample = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .limit(appliedLimit).collect()
-      // driver path only when the probe provably fetched the COMPLETE edge
-      // list (compare against the limit actually applied, not the threshold:
-      // a threshold >= Int.MaxValue-1 must not let a truncated list through)
-      if (sample.length < appliedLimit) {
-        // driver union-find with path halving; O(E α(E)) on ≤ threshold edges
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x0: Long): Long = {
-          var x = x0
-          var p = parent.getOrDefault(x, x)
-          while (p != x) {
-            val gp = parent.getOrDefault(p, p)
-            parent.put(x, gp)
-            x = gp
-            p = parent.getOrDefault(x, x)
+    // ONE execution of the pair DAG serves the probe and, when the graph
+    // is too big for the driver, the distributed checkpoint. A minhash
+    // result (already cached), a caller-persisted frame and a frame read
+    // from checkpoints (a re-read is a block read, not a pipeline run) are
+    // read as is. Any other input is cached for this call only and
+    // unpersisted before returning — nothing returned references it — so
+    // a caller's own cache or checkpoint is never released here.
+    val probe = smallGraphThreshold > 0 && integralIds
+    import org.apache.spark.storage.StorageLevel
+    val ownCache = probe && pairs.storageLevel == StorageLevel.NONE &&
+      checkpointRdds(pairs).isEmpty
+    val input = if (ownCache) pairs.persist(StorageLevel.MEMORY_AND_DISK) else pairs
+    def releaseOwnCache(): Unit = if (ownCache) input.unpersist(blocking = false)
+    // which path ran (and how many rounds) shows as the job description
+    val priorDescription = sc.getLocalProperty(JobDescription)
+    try {
+      if (probe) {
+        // limit-bounded probe: fetches at most threshold+1 rows, so deciding
+        // the path never materializes a billion-edge list on the driver.
+        // The driver path consumes the edge list exactly once — right here
+        // — so only the distributed loops below, which re-read the pairs
+        // every round, checkpoint.
+        describeClusters(sc, "driver union-find")
+        val appliedLimit = math.min(smallGraphThreshold + 1, (Int.MaxValue - 1).toLong).toInt
+        val sample = input.select(col("id_a").cast("long"), col("id_b").cast("long"))
+          .limit(appliedLimit).collect()
+        // driver path only when the probe provably fetched the COMPLETE edge
+        // list (compare against the limit actually applied, not the threshold:
+        // a threshold >= Int.MaxValue-1 must not let a truncated list through)
+        if (sample.length < appliedLimit) {
+          // driver union-find with path halving; O(E α(E)) on ≤ threshold edges
+          val parent = new java.util.HashMap[Long, Long]()
+          def find(x0: Long): Long = {
+            var x = x0
+            var p = parent.getOrDefault(x, x)
+            while (p != x) {
+              val gp = parent.getOrDefault(p, p)
+              parent.put(x, gp)
+              x = gp
+              p = parent.getOrDefault(x, x)
+            }
+            x
           }
-          x
-        }
-        sample.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          val (ra, rb) = (find(a), find(b))
-          // union by MIN root so the final label is the min reachable id,
-          // matching the distributed propagation's contract
-          if (ra != rb) {
-            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+          sample.foreach { r =>
+            val (a, b) = (r.getLong(0), r.getLong(1))
+            val (ra, rb) = (find(a), find(b))
+            // union by MIN root so the final label is the min reachable id,
+            // matching the distributed propagation's contract
+            if (ra != rb) {
+              if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+            }
           }
+          val ids = sample.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
+            .toArray.distinct
+          val spark = pairs.sparkSession
+          import spark.implicits._
+          return ids.map(id => (id, find(id))).toSeq.toDF("id", "cluster")
         }
-        val ids = sample.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-          .toArray.distinct
-        val spark = pairs.sparkSession
-        import spark.implicits._
-        return ids.map(id => (id, find(id))).toSeq.toDF("id", "cluster")
       }
+      // distributed paths: materialize the pair list once — the loops
+      // reference it every propagation round. Tracked: localCheckpoint
+      // blocks persist for the JVM's lifetime otherwise (releaseCaches is
+      // the only way to drop them).
+      describeClusters(sc, "distributed, 0 rounds")
+      val mat = track(ckpt(input))
+      releaseOwnCache() // the checkpoint holds the edge list now
+      if (integralIds) clustersRddLoop(mat, maxIterations, reliableCheckpoint)
+      else clustersDfLoop(mat, maxIterations, ckpt)
+    } finally {
+      releaseOwnCache() // a no-op once released
+      sc.setLocalProperty(JobDescription, priorDescription)
     }
-    // distributed paths: materialize the pair list once — the loops
-    // reference it every propagation round, and without the checkpoint
-    // the full upstream pipeline (e.g. the MinHash-LSH DAG) re-runs per
-    // reference. Tracked: localCheckpoint blocks persist for the JVM's
-    // lifetime otherwise (releaseCaches is the only way to drop them).
-    val mat = track(ckpt(pairs))
-    if (integralIds) clustersRddLoop(mat, maxIterations, reliableCheckpoint)
-    else clustersDfLoop(mat, maxIterations, ckpt)
   }
+
+  /** `SparkContext.SPARK_JOB_DESCRIPTION` (private to Spark). */
+  private val JobDescription = "spark.job.description"
+
+  /** Labels the jobs [[clusters]] runs from here on with the path it took:
+    * `dedup.clusters: driver union-find` (the probe, which collects the
+    * whole edge list when it is small) or `dedup.clusters: distributed,
+    * <R> rounds` (R counts the rounds started so far, so the last job
+    * carries the total). */
+  private def describeClusters(sc: org.apache.spark.SparkContext, what: String): Unit =
+    sc.setJobDescription(s"dedup.clusters: $what")
 
   /** Distributed label propagation + pointer jumping as a Pregel-style RDD
     * loop (integral-id path). Two properties the per-round DataFrame
@@ -750,6 +793,7 @@ object Dedup {
     var converged = labels.isEmpty()
     var i = 0
     while (!converged && i < maxIterations) {
+      describeClusters(spark.sparkContext, s"distributed, ${i + 1} rounds")
       // neighbor min: edges join labels is partitioner-aligned (narrow);
       // only the (dst, label) messages shuffle, V rows not E
       val nbrMin = edges.join(labels)
@@ -801,6 +845,7 @@ object Dedup {
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
+      describeClusters(mat.sparkSession.sparkContext, s"distributed, ${i + 1} rounds")
       // each node adopts the min cluster label among itself and neighbors,
       // carrying its pre-round label as `old` so convergence is decidable
       // from this round's output alone (no extra join job below)…

@@ -612,7 +612,7 @@ object Layout {
     * groupBy, the snapshot's join shuffle, and the sort-merge join);
     * at 100 TB the snapshot side is the only heavy flow and it now
     * crosses the network once. Requires at most one snapshot row per
-    * non-null key (the snapshot contract).
+    * key (the snapshot contract); a duplicated snapshot key raises.
     */
   def mergeChanges(snapshot: DataFrame, changes: DataFrame, key: String,
                    seqCol: String, opCol: String,
@@ -643,9 +643,9 @@ object Layout {
     require(payloadCols.nonEmpty, "payloadCols must be non-empty")
     require(!payloadCols.contains(key), "payloadCols must not repeat the key")
     val reserved = (Seq(key, seqCol, opCol) ++ payloadCols)
-      .filter(c => c == "__chg" || c == "__cand" || c == "__w")
+      .filter(c => c == "__chg" || c == "__cand" || c == "__w" || c == "__snap")
     require(reserved.isEmpty,
-      s"mergeChanges reserves __chg/__cand/__w: ${reserved.mkString(", ")}")
+      s"mergeChanges reserves __chg/__cand/__w/__snap: ${reserved.mkString(", ")}")
     val missing = (Seq(key, seqCol, opCol) ++ payloadCols)
       .filterNot(changes.columns.contains)
     require(missing.isEmpty, s"changes is missing columns: ${missing.mkString(", ")}")
@@ -686,13 +686,20 @@ object Layout {
     * projected to `prefixCols ++ key ++ payloads`. `grouped` must group
     * a [[mergeCandidates]] frame by `key` (plus any prefix columns that
     * are functions of the key — how the sink keeps its bucket routing
-    * clustered through the aggregation). */
+    * clustered through the aggregation). A key with more than one
+    * snapshot candidate fails LOUDLY: the snapshot contract is broken,
+    * and `max` would otherwise collapse the duplicates to one row. The
+    * count rides the same aggregate, so the merge stays one exchange. */
   private[graft] def mergeWinners(
       grouped: org.apache.spark.sql.RelationalGroupedDataset, key: String,
       opCol: String, payloadCols: Seq[String],
       prefixCols: Seq[String] = Nil): DataFrame =
-    grouped.agg(max(col("__cand")).as("__w"))
-      .where(col("__w.__chg") === 0 || col(s"__w.$opCol") =!= "D")
+    grouped.agg(max(col("__cand")).as("__w"),
+        count(when(col("__cand.__chg") === 0, lit(1))).as("__snap"))
+      .where(when(col("__snap") > 1,
+          raise_error(concat(lit(s"mergeChanges: duplicate $key "),
+            coalesce(col(key).cast("string"), lit("NULL")), lit(" in the snapshot"))))
+        .otherwise(col("__w.__chg") === 0 || col(s"__w.$opCol") =!= "D"))
       .select(prefixCols.map(col) ++ (col(key) +:
         payloadCols.map(c => col(s"__w.$c").as(c))): _*)
 }

@@ -1,7 +1,9 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{JobLog, SparkTestBase}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -228,5 +230,164 @@ class DedupSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("setCheckpointDir"))
     }
+  }
+
+  // ------------------------------------------------- one execution per result
+
+  /** The corpus plus `n` planted near-copies, ids offset by `off`. */
+  private def planted(off: Long, suffix: String, n: Int = 8): DataFrame =
+    docs.select($"doc_id", $"text").union(docs.limit(n)
+      .select(($"doc_id" + off).as("doc_id"), concat($"text", lit(suffix)).as("text")))
+
+  private def pairSet(df: DataFrame): Set[(Long, Long)] =
+    df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** An uncached edge list whose rows tick `acc` each time the upstream
+    * projection runs. */
+  private def tapped(edges: Seq[(Long, Long)], acc: org.apache.spark.util.LongAccumulator): DataFrame = {
+    val tap = udf((a: Long) => { acc.add(1L); a }).asNondeterministic()
+    edges.toDF("id_a", "id_b").select(tap($"id_a").as("id_a"), $"id_b")
+  }
+
+  test("clusters reads a collected minhash result from its cache: no shuffle writes") {
+    Dedup.releaseCaches()
+    val pairs = Dedup.minhashPairs(planted(700000L, " tail"), "doc_id", "text")
+    val rows = pairSet(pairs)
+    assert(rows.count { case (a, b) => b - a == 700000L } >= 8, rows.size)
+    val (labels, log) = JobLog.during(spark.sparkContext)(Dedup.clusters(pairs).collect())
+    assert(log.descriptions.nonEmpty)
+    assert(log.shuffleWriteBytes == 0L,
+      s"clusters re-ran the pair pipeline: ${log.shuffleWriteBytes} shuffle bytes written")
+    val label = labels.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(label.keySet == rows.flatMap { case (a, b) => Seq(a, b) })
+    assert(rows.forall { case (a, b) => label(a) == label(b) && label(a) <= a })
+    Dedup.releaseCaches()
+  }
+
+  test("clusters executes an uncached upstream once, on every path") {
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt1").toFile
+    ckptDir.deleteOnExit()
+    spark.sparkContext.setCheckpointDir(ckptDir.getAbsolutePath)
+    val acc = spark.sparkContext.longAccumulator("upstream rows")
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+      20L -> 20L, 21L -> 20L, 22L -> 20L)
+    // driver path; probe, then the distributed loop; distributed only
+    for ((threshold, reliable) <- Seq((1L << 20, false), (2L, false), (0L, false), (0L, true))) {
+      Dedup.releaseCaches()
+      acc.reset()
+      val got = Dedup.clusters(tapped(edges, acc), reliableCheckpoint = reliable,
+          smallGraphThreshold = threshold)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want)
+      assert(acc.value == edges.size,
+        s"threshold=$threshold reliable=$reliable: upstream ran ${acc.value / edges.size.toDouble} times")
+    }
+    Dedup.releaseCaches(); Dedup.releaseResults()
+  }
+
+  test("clusters never releases a frame the caller persisted") {
+    val own = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+      .persist(StorageLevel.MEMORY_ONLY)
+    try {
+      own.count()
+      for (threshold <- Seq(1L << 20, 0L))
+        assert(Dedup.clusters(own, smallGraphThreshold = threshold).count() == 5)
+      Dedup.releaseCaches(); Dedup.releaseResults()
+      assert(own.storageLevel == StorageLevel.MEMORY_ONLY)
+    } finally own.unpersist()
+  }
+
+  test("both clusters paths return to the cache baseline after the releases") {
+    val sc = spark.sparkContext
+    // driver path; probe, then the distributed loop; distributed only
+    for (threshold <- Seq(1L << 20, 1L, 0L)) {
+      Dedup.releaseCaches(); Dedup.releaseResults()
+      val baseline = sc.getPersistentRDDs.size
+      val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+      assert(Dedup.clusters(pairs, smallGraphThreshold = threshold).count() == 5)
+      // the driver path's result is local: its input cache is already gone
+      if (threshold == (1L << 20)) assert(sc.getPersistentRDDs.size == baseline)
+      else assert(sc.getPersistentRDDs.size > baseline,
+        s"threshold=$threshold: expected a tracked checkpoint")
+      Dedup.releaseCaches(); Dedup.releaseResults()
+      assert(sc.getPersistentRDDs.size <= baseline,
+        s"threshold=$threshold: releases left ${sc.getPersistentRDDs.size - baseline} RDDs")
+    }
+  }
+
+  test("the releases never free a checkpoint the caller made") {
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b").localCheckpoint(true)
+    val derived = edges.where($"id_a" =!= 99L) // a plan over the caller's checkpoint
+    for (pairs <- Seq(edges, derived); threshold <- Seq(1L << 20, 1L, 0L)) {
+      assert(Dedup.clusters(pairs, smallGraphThreshold = threshold).count() == 5)
+      Dedup.releaseCaches(); Dedup.releaseResults()
+      assert(pairs.count() == 3, s"threshold=$threshold: the caller's checkpoint was freed")
+    }
+    // the pair producers' own caches sit on the caller's plan too
+    val docsCkpt = planted(700000L, " tail").localCheckpoint(true)
+    assert(Dedup.minhashPairs(docsCkpt, "doc_id", "text").count() > 0)
+    Dedup.releaseCaches()
+    assert(docsCkpt.count() == docs.count() + 8)
+  }
+
+  test("cached minhash results of different inputs stay apart in one session") {
+    Dedup.releaseCaches()
+    val a = Dedup.minhashPairs(planted(700000L, " tail"), "doc_id", "text")
+    val b = Dedup.minhashPairs(planted(800000L, " other tail", n = 5), "doc_id", "text")
+    val (a1, b1) = (pairSet(a), pairSet(b)) // both caches filled, no release
+    val a2 = pairSet(a)
+    assert(a1 == a2)
+    def plantedIn(set: Set[(Long, Long)], off: Long) = set.count { case (x, y) => y - x == off }
+    assert(plantedIn(a1, 700000L) >= 8 && plantedIn(a1, 800000L) == 0)
+    assert(plantedIn(b1, 800000L) >= 5 && plantedIn(b1, 700000L) == 0)
+    // the natural pairs agree: same corpus underneath
+    assert(a1.filter(_._2 < 700000L) == b1.filter(_._2 < 700000L))
+    Dedup.releaseCaches()
+  }
+
+  test("pair results re-collect the same rows after releaseCaches") {
+    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val minhash = Dedup.minhashPairs(planted(700000L, " tail"), "doc_id", "text")
+    val results = Seq(minhash,
+      Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8),
+      Dedup.embeddingPairs(embs, "vec_id", "embedding", minCosine = 0.4),
+      Dedup.embeddingPairs(embs, "vec_id", "embedding", minCosine = 0.4, planes = 8, tables = 8))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val first = results.map(rows)
+    assert(first.forall(_.nonEmpty))
+    assert(minhash.storageLevel != StorageLevel.NONE)
+    Dedup.releaseCaches()
+    assert(minhash.storageLevel == StorageLevel.NONE)
+    assert(results.map(rows) == first)
+    Dedup.releaseCaches()
+  }
+
+  test("clusters names the path it took in its job descriptions") {
+    val sc = spark.sparkContext
+    val chain = (1L to 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    for (prior <- Seq("caller's own description", null)) {
+      sc.setJobDescription(prior)
+      try {
+        val (_, driver) = JobLog.during(sc)(Dedup.clusters(chain).collect())
+        assert(driver.descriptions.nonEmpty &&
+          driver.descriptions.forall(_ == "dedup.clusters: driver union-find"), driver.descriptions)
+        assert(sc.getLocalProperty("spark.job.description") == prior)
+
+        for (pairs <- Seq(chain, chain.select($"id_a".cast("string"), $"id_b".cast("string")))) {
+          val (_, dist) = JobLog.during(sc)(Dedup.clusters(pairs, smallGraphThreshold = 0))
+          val Rounds = "dedup\\.clusters: distributed, (\\d+) rounds".r
+          val rounds = dist.descriptions.collect { case Rounds(r) => r.toInt }
+          assert(dist.descriptions.forall(_.startsWith("dedup.clusters: distributed, ")),
+            dist.descriptions)
+          // every round labels its jobs, in order; a chain needs ≥ 2 (one
+          // that changes labels, one that confirms nothing changed)
+          assert(rounds.nonEmpty && rounds.head == 0 && rounds.max >= 2, rounds)
+          assert(rounds.distinct == (0 to rounds.max), rounds)
+          assert(sc.getLocalProperty("spark.job.description") == prior)
+        }
+      } finally sc.setJobDescription(null)
+    }
+    Dedup.releaseCaches(); Dedup.releaseResults()
   }
 }

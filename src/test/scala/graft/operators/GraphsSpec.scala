@@ -384,4 +384,34 @@ class GraphsSpec extends SparkTestBase {
     assert(bf === Map("a" -> 0, "b" -> 1, "c" -> 2))
     Dedup.releaseCaches()
   }
+
+  test("SqlHashPartitioner routes every string where repartition(n, col) sends it") {
+    // the graph loops zip SQL-exchanged adjacency against RDD state routed
+    // by this partitioner; if a Spark upgrade changes HashPartitioning's
+    // formula, this fails instead of the loops silently misrouting state
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val nonAscii = Gen.oneOf("é", "ß", "Ω", "ж", "中", "文", "😀", "𝄞", "\u0000", "ﬀ")
+    val str = Gen.frequency(
+      1 -> Gen.const(""),
+      4 -> Gen.asciiStr,
+      4 -> Gen.listOf(Gen.oneOf(Gen.alphaNumChar.map(_.toString), nonAscii)).map(_.mkString))
+    var seed = Seed(31337L)
+    val strings = (0 until 300).flatMap { _ =>
+      val s = str.apply(Gen.Parameters.default, seed); seed = seed.next; s
+    }.distinct
+    assert(strings.contains("") && strings.exists(_.exists(_ > '\u007f')) &&
+      strings.exists(s => s.nonEmpty && s.forall(_ < '\u0080')))
+    val df = strings.toDF("s")
+    for (n <- Seq(1, 3, 4, 32)) {
+      val part = new Graphs.SqlHashPartitioner(n)
+      val routed = df.repartition(n, col("s"))
+        .select(col("s"), spark_partition_id().as("p")).collect()
+      assert(routed.length == strings.size)
+      val wrong = routed.filter(r => part.getPartition(r.getString(0)) != r.getInt(1))
+      assert(wrong.isEmpty, s"n=$n: ${wrong.take(5).map(r =>
+        s"'${r.getString(0)}' -> spark ${r.getInt(1)}, partitioner ${part.getPartition(r.getString(0))}")
+        .mkString("; ")}")
+    }
+  }
 }

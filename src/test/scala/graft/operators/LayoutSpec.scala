@@ -500,4 +500,29 @@ class LayoutSpec extends SparkTestBase {
     assert(msgs(e).exists(m => m.contains("NULL id")),
       s"expected a NULL-key failure, got: ${msgs(e).mkString(" | ")}")
   }
+
+  test("mergeChanges rejects a snapshot with a duplicated key instead of collapsing it") {
+    // a keyed snapshot holds at most one row per key; max(__cand) would
+    // silently fold the duplicates into one row
+    val snap = Seq((1L, "a"), (1L, "a-dup"), (2L, "b")).toDF("id", "v")
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    // with or without a change on the duplicated key
+    for (changes <- Seq(Seq((3L, 1L, "I", "c")), Seq((1L, 1L, "U", "a2")))) {
+      val merged = Layout.mergeChanges(snap, changes.toDF("id", "seq", "op", "v"),
+        "id", "seq", "op", Seq("v"))
+      // the guard rides the winner aggregate: still ONE exchange
+      val plan = merged.queryExecution.executedPlan.toString
+      val exchanges = "Exchange".r.findAllIn(plan).size
+      assert(exchanges == 1, s"merge planned $exchanges exchanges (want 1):\n$plan")
+      val e = intercept[Exception](merged.collect())
+      assert(msgs(e).exists(_.contains("mergeChanges: duplicate id 1 in the snapshot")),
+        s"expected a duplicate-key failure, got: ${msgs(e).mkString(" | ")}")
+    }
+    // a clean snapshot still merges
+    val ok = Layout.mergeChanges(snap.where($"v" =!= "a-dup"),
+      Seq((1L, 1L, "U", "a2")).toDF("id", "seq", "op", "v"), "id", "seq", "op", Seq("v"))
+    assert(ok.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq ===
+      Seq((1L, "a2"), (2L, "b")))
+  }
 }
