@@ -396,20 +396,30 @@ object Dedup {
       .toDF("id", "band", "h")
 
     import org.apache.spark.sql.expressions.Window
-    // NOTE: the routed self-joins consume this frame from several branches
-    // and each recomputes the explode + window shuffle from the cached
-    // `sig`. Persisting it here was measured SLOWER at sf0.1 (cache-write
-    // barrier > the narrow recomputes); the recompute reads the signature
-    // cache, so no O(len·numHashes) work repeats.
-    val sized = buckets.withColumn("n",
-      count(lit(1)).over(Window.partitionBy("band", "h")))
+    // ONE (band, h) exchange per call, sized and cached: the narrow
+    // self-join's two sides and the salted branch's two sides all read
+    // this frame, and Spark does not reuse the exchange across them (the
+    // posexplode Generate under it keeps branch-specific output ids), so
+    // uncached the same bucket rows shuffled four times per call. AQE also
+    // coalesced each of those byte-small reads into ONE task, and the
+    // window count ran four times on one core: measured on a 4-core
+    // corpus_dedup pass, 4 × 1.53 MB of shuffle writes and 4 single-task
+    // window stages of 170–220 ms CPU each, ~490 ms of a 1.24 s minhash
+    // stage. The explicit-width repartition (the spreadPairs pattern) is
+    // exempt from AQE coalescing, so the window runs at the session's
+    // shuffle width, once; releaseCaches frees the cache like `sig`.
+    val sized = track(buckets
+      .repartition(buckets.sparkSession.sessionState.conf.numShufflePartitions,
+        col("band"), col("h"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("band", "h")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // a forced salt cap below the inline cap must also force the inline
     // path, so the salted sub-plan sees every bucket it is asked to split
     val inlineCap = if (saltCap > 0) math.min(InlineBucketCap, saltCap)
                     else InlineBucketCap
 
-    // small buckets: narrow self-join on (band, h) — the window already
-    // hash-partitioned both sides by the join key, so no extra exchange
+    // small buckets: narrow self-join on (band, h) — the cached frame is
+    // already hash-partitioned by the join key, so no extra exchange
     val small = sized.where(col("n") <= inlineCap).select("id", "band", "h")
     val candNarrow = small.toDF("id_a", "band", "h")
       .join(small.toDF("id_b", "band", "h"), Seq("band", "h"))

@@ -82,9 +82,9 @@ object Graphs {
     * ((String, String), w) reduceByKey are both gone. Partition i holds
     * exactly the srcs [[SqlHashPartitioner]] routes to i (the explicit
     * partition count pins the layout — AQE never coalesces
-    * REPARTITION_BY_NUM exchanges), so the state loops zip against it
-    * narrowly. `checkW` validates weights executor-side, where the data
-    * is. */
+    * REPARTITION_BY_NUM exchanges; [[checkRouted]] fails the build
+    * otherwise), so the state loops zip against it narrowly. `checkW`
+    * validates weights executor-side, where the data is. */
   private def buildAdj(e: DataFrame, undirected: Boolean, weighted: Boolean,
                        merge: (Double, Double) => Double, n: Int,
                        checkW: Double => Unit = null)
@@ -99,9 +99,10 @@ object Graphs {
         e.select(explode(array(s("src", "dst"), s("dst", "src"))).as("e"))
           .select(base.map(c => col(s"e.$c").as(c)): _*)
       }
+    val part = new SqlHashPartitioner(n)
     doubled.repartition(n, col("src")).queryExecution.toRdd
-      .mapPartitions { it =>
-        val b = new PackBuilder(weighted, mergeDup = merge)
+      .mapPartitionsWithIndex { (i, it) =>
+        val b = new PackBuilder(weighted, mergeDup = merge, newSrc = checkRouted(part, _, i))
         it.foreach { r =>
           val w = if (weighted) r.getDouble(2) else 0.0
           if (checkW ne null) checkW(w)
@@ -109,6 +110,18 @@ object Graphs {
         }
         b.result()
       }
+  }
+
+  /** The runtime half of the layout contract above: raises when a src
+    * node arrives in adjacency partition `i` although `part` routes it to
+    * another partition. The state loops zip partition i against it
+    * narrowly, so a misrouted node would silently lose its state instead
+    * of failing. [[PackBuilder]] calls it once per distinct src per
+    * build, never per iteration. */
+  private[operators] def checkRouted(part: SqlHashPartitioner, node: String, i: Int): Unit = {
+    val j = part.getPartition(node)
+    if (j != i) throw new IllegalStateException(
+      s"buildAdj: node $node arrived in partition $i, SqlHashPartitioner routes it to $j")
   }
 
   /** Dictionary-packed adjacency partition — what the |E|-sized
@@ -138,9 +151,12 @@ object Graphs {
     * where the edge multiset dedups now that the input arrives as a raw
     * (possibly doubled) row stream instead of a reduceByKey output. */
   private final class PackBuilder(weighted: Boolean,
-                                  mergeDup: (Double, Double) => Double) {
+                                  mergeDup: (Double, Double) => Double,
+                                  newSrc: String => Unit) {
     private val index = new java.util.HashMap[String, Integer]()
     private val dict = scala.collection.mutable.ArrayBuffer.empty[String]
+    // dict ids already handed to `newSrc`
+    private val srcSeen = new java.util.BitSet()
     // (srcId << 32 | dstId) -> edge slot, for the duplicate merge
     private val seen = new java.util.HashMap[java.lang.Long, Integer]()
     private var srcA = new Array[Int](64)
@@ -156,6 +172,7 @@ object Graphs {
     }
     def add(s: String, d: String, weight: Double): Unit = {
       val si = id(s); val di = id(d)
+      if (!srcSeen.get(si)) { srcSeen.set(si); newSrc(s) }
       val k = java.lang.Long.valueOf((si.toLong << 32) | (di & 0xffffffffL))
       val at = seen.get(k)
       if (at ne null) {

@@ -2,6 +2,11 @@ package graft.operators
 
 import graft.{JobLog, SparkTestBase}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec,
+  QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -389,5 +394,111 @@ class DedupSpec extends SparkTestBase {
       } finally sc.setJobDescription(null)
     }
     Dedup.releaseCaches(); Dedup.releaseResults()
+  }
+
+  // --------------------------------------------- band buckets, once per call
+
+  /** 120 random 30-word lowercase documents, 12 of them with a near-copy
+    * (two words replaced) and 6 with a far copy (ten replaced), plus 70
+    * identical boilerplate documents: a bucket of at least 70 members in
+    * every band, above the inline cap, so both the narrow and the
+    * big/salted branch carry rows. */
+  private lazy val bucketCorpus: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(7)
+    val vocab = IndexedSeq.fill(500)(
+      Iterator.continually(('a' + rnd.nextInt(26)).toChar).take(3 + rnd.nextInt(6)).mkString)
+    val texts = IndexedSeq.fill(120)(IndexedSeq.fill(30)(vocab(rnd.nextInt(vocab.size))))
+    def edit(words: IndexedSeq[String], n: Int) =
+      rnd.shuffle(words.indices.toList).take(n)
+        .foldLeft(words)((w, i) => w.updated(i, vocab(rnd.nextInt(vocab.size))))
+    val base = texts.zipWithIndex.map { case (w, i) => (i.toLong, w) }
+    val near = base.take(12).map { case (i, w) => (1000L + i, edit(w, 2)) }
+    val far = base.slice(12, 18).map { case (i, w) => (2000L + i, edit(w, 10)) }
+    val boiler = (0 until 70).map(i => (3000L + i, texts.last))
+    (base ++ near ++ far).map { case (i, w) => (i, w.mkString(" ")) } ++
+      boiler.map { case (i, w) => (i, "footer " + w.mkString(" ")) }
+  }
+
+  /** Every distinct node of an executed plan, through AQE final plans,
+    * query stages, reused exchanges and in-memory cached plans. */
+  private def planNodes(root: SparkPlan): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    val out = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    def visit(p: SparkPlan): Unit = if (seen.add(p)) {
+      out += p
+      (p match {
+        case a: AdaptiveSparkPlanExec   => Seq(a.executedPlan)
+        case q: QueryStageExec          => Seq(q.plan)
+        case r: ReusedExchangeExec      => Seq(r.child)
+        case m: InMemoryTableScanExec   => Seq(m.relation.cachedPlan)
+        case other                      => other.children
+      }).foreach(visit)
+    }
+    visit(root)
+    out.toSeq
+  }
+
+  /** True when `p` reaches the band-hash posexplode without crossing
+    * another shuffle. */
+  private def feedsFromBands(p: SparkPlan): Boolean = p match {
+    case g: GenerateExec =>
+      g.generator.find(_.isInstanceOf[graft.functions.MinhashBandHashes]).isDefined ||
+        g.children.exists(feedsFromBands)
+    case _: ShuffleExchangeLike | _: ShuffleQueryStageExec | _: ReusedExchangeExec => false
+    case a: AdaptiveSparkPlanExec => feedsFromBands(a.executedPlan)
+    case m: InMemoryTableScanExec => feedsFromBands(m.relation.cachedPlan)
+    case other => other.children.exists(feedsFromBands)
+  }
+
+  test("minhash shuffles its band buckets once, at the session's shuffle width") {
+    val width = spark.sessionState.conf.numShufflePartitions
+    val corpus = bucketCorpus.toDF("doc_id", "text")
+    for (saltCap <- Seq(0, 8)) {
+      Dedup.releaseCaches()
+      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", saltCap = saltCap)
+      assert(pairs.collect().length > 70 * 69 / 2)
+      val nodes = planNodes(pairs.queryExecution.executedPlan)
+      assert(nodes.exists(feedsFromBands), s"saltCap=$saltCap: no band Generate in the plan")
+      val exchanges = nodes.collect { case e: ShuffleExchangeLike if feedsFromBands(e.child) => e }
+      assert(exchanges.size == 1,
+        s"saltCap=$saltCap: ${exchanges.size} band-bucket exchanges:\n${exchanges.mkString("\n")}")
+      val bands = exchanges.head
+      assert(bands.numPartitions == width, s"saltCap=$saltCap: $bands")
+      val reads = nodes.collect {
+        case r: AQEShuffleReadExec if (r.child match {
+          case q: ShuffleQueryStageExec =>
+            (q.plan match { case r: ReusedExchangeExec => r.child; case e => e }) eq bands
+          case _ => false
+        }) => r.partitionSpecs.size
+      }
+      assert(reads.forall(_ >= width),
+        s"saltCap=$saltCap: band-bucket reads coalesced to $reads partitions, width $width")
+    }
+    Dedup.releaseCaches()
+  }
+
+  test("minhash pairs equal the brute-force exact Jaccard pairs at every salt cap") {
+    def shingles(t: String): Set[String] = {
+      val s = t.toLowerCase(java.util.Locale.ROOT)
+      if (s.length >= 5) s.sliding(5).toSet else Set(s)
+    }
+    val sh = bucketCorpus.map { case (id, t) => id -> shingles(t) }
+    val want = (for {
+      (a, sa) <- sh; (b, sb) <- sh if a < b
+      j = (sa & sb).size.toDouble / (sa | sb).size if j >= 0.7
+    } yield (a, b) -> j).toMap
+    // the corpus spans both sides of the threshold
+    assert(want.size > 70 * 69 / 2 && want.keys.count(_._2 < 3000L) >= 12, want.size)
+    assert(!want.contains((12L, 2012L)))
+    val corpus = bucketCorpus.toDF("doc_id", "text")
+    for (saltCap <- Seq(0, 8, 2048)) {
+      val got = Dedup.minhashPairs(corpus, "doc_id", "text", saltCap = saltCap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(got.keySet == want.keySet, s"saltCap=$saltCap: missing " +
+        s"${(want.keySet -- got.keySet).take(5)}, extra ${(got.keySet -- want.keySet).take(5)}")
+      assert(got.forall { case (k, j) => math.abs(j - want(k)) < 1e-12 }, s"saltCap=$saltCap")
+      Dedup.releaseCaches()
+    }
   }
 }

@@ -414,4 +414,15 @@ class GraphsSpec extends SparkTestBase {
         .mkString("; ")}")
     }
   }
+
+  test("buildAdj's routing guard fails loudly on a node in the wrong partition") {
+    val part = new Graphs.SqlHashPartitioner(4)
+    val node = "node-7"
+    val home = part.getPartition(node)
+    Graphs.checkRouted(part, node, home) // the partition it belongs to passes
+    val wrong = (home + 1) % 4
+    val e = intercept[IllegalStateException](Graphs.checkRouted(part, node, wrong))
+    assert(e.getMessage ==
+      s"buildAdj: node $node arrived in partition $wrong, SqlHashPartitioner routes it to $home")
+  }
 }
