@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.Graft
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Document deduplication at pipeline scale.
   *
@@ -624,15 +627,21 @@ object Dedup {
   }
 
   /** Connected components over a duplicate-pair edge list: assigns each id
-    * the minimum id reachable through pairs ("cluster"). Distributed path =
-    * min-label propagation + pointer jumping, O(log diameter) rounds; for
-    * integral ids it runs as a Pregel-style RDD loop whose edge table is
-    * hash-partitioned once and never re-shuffled ([[clustersRddLoop]]);
+    * the minimum id reachable through pairs ("cluster"), ids compared in
+    * Spark SQL's ordering for their type (strings in UTF-8 byte order, as
+    * SQL `min` orders them). Small edge lists run a driver union-find;
+    * larger ones min-label propagation + pointer jumping,
+    * O(log diameter) rounds, as a Pregel-style RDD loop whose edge table
+    * is hash-partitioned once and never re-shuffled ([[clustersRddLoop]]);
     * duplicate clusters are shallow in practice so this converges in a
-    * handful of rounds. `pairs` is executed at most once: an uncached input
+    * handful of rounds. Both paths key ids by their internal value, so
+    * any atomic id type with value equality works (integral, string,
+    * date, ...); binary and complex ids fail up front, and a null id fails
+    * on either path. `pairs` is executed at most once: an uncached input
     * is cached for the call and unpersisted before returning; a frame the
-    * caller persisted or checkpointed is read as is and left to the caller. */
-  /** @param reliableCheckpoint when true, iteration state checkpoints to the
+    * caller persisted or checkpointed is read as is and left to the caller.
+    *
+    * @param reliableCheckpoint when true, iteration state checkpoints to the
     *                            cluster-durable checkpoint dir (set
     *                            `sc.setCheckpointDir` first) instead of
     *                            executor-local storage — localCheckpoint is
@@ -655,28 +664,25 @@ object Dedup {
     if (reliableCheckpoint)
       require(sc.getCheckpointDir.isDefined,
         "reliableCheckpoint=true needs sc.setCheckpointDir(<cluster-durable path>)")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
+    val idType = pairs.schema("id_a").dataType
+    // both paths hash and compare ids by their internal value
+    require(TypeUtils.typeWithProperEquals(idType),
+      s"clusters: id type ${idType.simpleString} has no value equality")
 
-    // the driver path unions by Long id — only safe for integral id columns
-    // (a string id would cast to null and corrupt the union-find)
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integralIds = Seq("id_a", "id_b").forall(n =>
-      pairs.schema.find(_.name == n).exists(f =>
-        f.dataType == LongType || f.dataType == IntegerType ||
-          f.dataType == ShortType || f.dataType == ByteType))
     // ONE execution of the pair DAG serves the probe and, when the graph
-    // is too big for the driver, the distributed checkpoint. A minhash
+    // is too big for the driver, the distributed edge build. A minhash
     // result (already cached), a caller-persisted frame and a frame read
     // from checkpoints (a re-read is a block read, not a pipeline run) are
     // read as is. Any other input is cached for this call only and
     // unpersisted before returning — nothing returned references it — so
     // a caller's own cache or checkpoint is never released here.
-    val probe = smallGraphThreshold > 0 && integralIds
+    val probe = smallGraphThreshold > 0
     import org.apache.spark.storage.StorageLevel
     val ownCache = probe && pairs.storageLevel == StorageLevel.NONE &&
       checkpointRdds(pairs).isEmpty
     val input = if (ownCache) pairs.persist(StorageLevel.MEMORY_AND_DISK) else pairs
+    // id_b reads as id_a's type (a no-op cast when they already agree)
+    val ids = input.select(col("id_a"), col("id_b").cast(idType))
     def releaseOwnCache(): Unit = if (ownCache) input.unpersist(blocking = false)
     // which path ran (and how many rounds) shows as the job description
     val priorDescription = sc.getLocalProperty(JobDescription)
@@ -684,55 +690,18 @@ object Dedup {
       if (probe) {
         // limit-bounded probe: fetches at most threshold+1 rows, so deciding
         // the path never materializes a billion-edge list on the driver.
-        // The driver path consumes the edge list exactly once — right here
-        // — so only the distributed loops below, which re-read the pairs
-        // every round, checkpoint.
+        // The driver path consumes the edge list exactly once — right here.
         describeClusters(sc, "driver union-find")
         val appliedLimit = math.min(smallGraphThreshold + 1, (Int.MaxValue - 1).toLong).toInt
-        val sample = input.select(col("id_a").cast("long"), col("id_b").cast("long"))
-          .limit(appliedLimit).collect()
+        val sample = ids.limit(appliedLimit).collect()
         // driver path only when the probe provably fetched the COMPLETE edge
         // list (compare against the limit actually applied, not the threshold:
         // a threshold >= Int.MaxValue-1 must not let a truncated list through)
-        if (sample.length < appliedLimit) {
-          // driver union-find with path halving; O(E α(E)) on ≤ threshold edges
-          val parent = new java.util.HashMap[Long, Long]()
-          def find(x0: Long): Long = {
-            var x = x0
-            var p = parent.getOrDefault(x, x)
-            while (p != x) {
-              val gp = parent.getOrDefault(p, p)
-              parent.put(x, gp)
-              x = gp
-              p = parent.getOrDefault(x, x)
-            }
-            x
-          }
-          sample.foreach { r =>
-            val (a, b) = (r.getLong(0), r.getLong(1))
-            val (ra, rb) = (find(a), find(b))
-            // union by MIN root so the final label is the min reachable id,
-            // matching the distributed propagation's contract
-            if (ra != rb) {
-              if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-            }
-          }
-          val ids = sample.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-            .toArray.distinct
-          val spark = pairs.sparkSession
-          import spark.implicits._
-          return ids.map(id => (id, find(id))).toSeq.toDF("id", "cluster")
-        }
+        if (sample.length < appliedLimit)
+          return clustersOnDriver(pairs.sparkSession, sample, idType)
       }
-      // distributed paths: materialize the pair list once — the loops
-      // reference it every propagation round. Tracked: localCheckpoint
-      // blocks persist for the JVM's lifetime otherwise (releaseCaches is
-      // the only way to drop them).
       describeClusters(sc, "distributed, 0 rounds")
-      val mat = track(ckpt(input))
-      releaseOwnCache() // the checkpoint holds the edge list now
-      if (integralIds) clustersRddLoop(mat, maxIterations, reliableCheckpoint)
-      else clustersDfLoop(mat, maxIterations, ckpt)
+      clustersRddLoop(ids, maxIterations, reliableCheckpoint, () => releaseOwnCache())
     } finally {
       releaseOwnCache() // a no-op once released
       sc.setLocalProperty(JobDescription, priorDescription)
@@ -750,57 +719,120 @@ object Dedup {
   private def describeClusters(sc: org.apache.spark.SparkContext, what: String): Unit =
     sc.setJobDescription(s"dedup.clusters: $what")
 
+  /** Reads a row's `(id_a, id_b)` as internal values, the keys both
+    * [[clusters]] paths hash and order; a null id fails the call. */
+  private def idPair(idType: DataType): Row => (Any, Any) = {
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(idType)
+    r => {
+      require(!r.isNullAt(0) && !r.isNullAt(1), "clusters: id_a/id_b must not be null")
+      (toInternal(r.get(0)), toInternal(r.get(1)))
+    }
+  }
+
+  /** The `(id, cluster)` schema of [[clusters]]' result. */
+  private def clusterSchema(idType: DataType) = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    StructType(Seq(StructField("id", idType, nullable = false),
+      StructField("cluster", idType, nullable = false)))
+  }
+
+  /** Driver union-find with path halving over the complete, collected edge
+    * list; O(E α(E)) on ≤ threshold edges. Ids are keyed by their internal
+    * value and unioned by MIN root under Spark SQL's ordering, so the final
+    * label is the min reachable id, matching [[clustersRddLoop]]. */
+  private def clustersOnDriver(spark: org.apache.spark.sql.SparkSession,
+                               sample: Array[Row], idType: DataType): DataFrame = {
+    val read = idPair(idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x0: Any): Any = {
+      var x = x0
+      var p = parent.getOrDefault(x, x)
+      while (p != x) {
+        val gp = parent.getOrDefault(p, p)
+        parent.put(x, gp)
+        x = gp
+        p = parent.getOrDefault(x, x)
+      }
+      x
+    }
+    val ids = new java.util.LinkedHashSet[Any]() // first-seen order
+    sample.foreach { r =>
+      val (a, b) = read(r)
+      ids.add(a); ids.add(b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    import scala.jdk.CollectionConverters._
+    val rows = ids.asScala.toSeq.map(id => Row(toScala(id), toScala(find(id))))
+    spark.createDataFrame(rows.asJava, clusterSchema(idType))
+  }
+
   /** Distributed label propagation + pointer jumping as a Pregel-style RDD
-    * loop (integral-id path). Two properties the per-round DataFrame
-    * version cannot offer:
+    * loop, keyed by the ids' internal values and ordered by Spark SQL's
+    * ordering for their type. Two properties a per-round DataFrame loop
+    * cannot offer:
     *
     *  - the symmetric edge table is hash-partitioned ONCE and every
     *    per-round join against it is partitioner-aligned — zero edge
-    *    shuffles after round 0, only O(V) label rows move per round
-    *    (the DataFrame loop re-shuffled all O(E) edges every round);
+    *    shuffles after round 0, only O(V) label rows move per round;
     *  - the loop body is fixed closures — no per-round Catalyst
     *    optimization or codegen compilation (measured ~300 ms/round of
     *    pure planning latency at sf0.1).
     *
-    * Semantics are identical to [[clustersDfLoop]]: each node takes the
-    * min label among itself and its neighbors, then pointer-jumps through
-    * its new label's new label; converged when a full round changes
-    * nothing. The convergence count rides a LongAccumulator evaluated
-    * during the round's single materializing action (task retries can
-    * only inflate it, and only `== 0` is tested, so retries are safe). */
-  private def clustersRddLoop(mat: DataFrame, maxIterations: Int,
-                              reliableCheckpoint: Boolean): DataFrame = {
+    * Each node takes the min label among itself and its neighbors, then
+    * pointer-jumps through its new label's new label; converged when a
+    * full round changes nothing. The convergence count rides a
+    * LongAccumulator evaluated during the round's single materializing
+    * action (task retries can only inflate it, and only `== 0` is tested,
+    * so retries are safe). `releaseInput` runs once the edge table holds
+    * the pair list. */
+  private def clustersRddLoop(ids: DataFrame, maxIterations: Int,
+                              reliableCheckpoint: Boolean,
+                              releaseInput: () => Unit): DataFrame = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
-    val spark = mat.sparkSession
-    val idType = mat.schema("id_a").dataType
+    val spark = ids.sparkSession
+    val idType = ids.schema("id_a").dataType
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val read = idPair(idType)
 
     val width = math.max(1, spark.sessionState.conf.numShufflePartitions)
     val part = new HashPartitioner(width)
-    def ckptRdd(r: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+    def ckptRdd[T](r: RDD[T]): RDD[T] = {
       if (reliableCheckpoint) r.checkpoint() else r.localCheckpoint()
       r
     }
 
-    // the ONLY edge shuffle of the whole loop
-    val edges = mat.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .rdd.flatMap { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
+    // the ONLY edge shuffle of the whole loop; persisted before the
+    // checkpoint, so a reliable checkpoint's write reads the cache instead
+    // of re-running the upstream. Tracked: a call that fails mid-loop
+    // leaves it to releaseCaches.
+    val edges = track(ids.rdd
+      .flatMap { r =>
+        val (a, b) = read(r)
         Iterator((a, b), (b, a))
       }
       .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    // the "0 rounds" job: materializes the edge table, after which the
+    // rounds never touch the pair list again
+    val nEdges = ckptRdd(edges).count()
+    releaseInput()
 
     // keys are co-located by `part`, so a per-partition distinct is global
-    var labels: RDD[(Long, Long)] = edges
+    var labels: RDD[(Any, Any)] = edges
       .mapPartitions({ it =>
-        val seen = new java.util.HashSet[Long]()
+        val seen = new java.util.HashSet[Any]()
         it.collect { case (k, _) if seen.add(k) => (k, k) }
       }, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var converged = labels.isEmpty()
+    var converged = nEdges == 0L
     var i = 0
     while (!converged && i < maxIterations) {
       describeClusters(spark.sparkContext, s"distributed, ${i + 1} rounds")
@@ -808,10 +840,10 @@ object Dedup {
       // only the (dst, label) messages shuffle, V rows not E
       val nbrMin = edges.join(labels)
         .map { case (_, (dst, srcLabel)) => (dst, srcLabel) }
-        .reduceByKey(part, math.min(_: Long, _: Long))
+        .reduceByKey(part, ord.min(_, _))
       // min(self, neighbors), carrying the pre-round label for convergence
       val l1 = labels.join(nbrMin)
-        .mapValues { case (old, nbr) => (math.min(old, nbr), old) }
+        .mapValues { case (old, nbr) => (ord.min(old, nbr), old) }
       // pointer jump: follow the new label's new label (path compression)
       val byLabel = l1.map { case (node, (lab, old)) => (lab, (node, old)) }
       val justLabels = l1.mapValues(_._1)
@@ -831,68 +863,15 @@ object Dedup {
       converged = changedAcc.value == 0L
       i += 1
     }
-    edges.unpersist(blocking = false)
     // the final labels RDD backs the returned frame (its localCheckpoint
-    // blocks ARE the data) — released via Dedup.releaseCaches()
+    // blocks ARE the data) — released via Dedup.releaseCaches(). Without a
+    // round, the labels still read the edge table, which then stays too.
+    if (i > 0) edges.unpersist(blocking = false)
     track(labels)
-    import spark.implicits._
-    labels.toDF("id", "cluster")
-      .select(col("id").cast(idType), col("cluster").cast(idType))
-      .toDF("id", "cluster")
-  }
-
-  /** Fallback distributed loop for non-integral id columns (e.g. string
-    * ids): same propagation + pointer-jump semantics expressed over
-    * DataFrames, paying a per-round edge shuffle and plan compile. */
-  private def clustersDfLoop(mat: DataFrame, maxIterations: Int,
-                             ckpt: DataFrame => DataFrame): DataFrame = {
-    val edges = mat.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(mat.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-    var prevCkpt: DataFrame = null
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      describeClusters(mat.sparkSession.sparkContext, s"distributed, ${i + 1} rounds")
-      // each node adopts the min cluster label among itself and neighbors,
-      // carrying its pre-round label as `old` so convergence is decidable
-      // from this round's output alone (no extra join job below)…
-      val propagated = edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("cluster").as("nbr_cluster"))
-        .join(labels, "id")
-        .select(col("id"), least(col("cluster"), col("nbr_cluster")).as("cluster"),
-          col("cluster").as("old"))
-      // …then pointer-jumps through its label's label (path compression) —
-      // O(log diameter) rounds instead of O(diameter).
-      // localCheckpoint truncates lineage: without it every round's plan
-      // nests all previous rounds and optimizer time grows without bound.
-      val next = ckpt(propagated.toDF("id", "mid", "old")
-        .join(propagated.toDF("mid", "cluster", "old_r").select("mid", "cluster"), "mid")
-        .select(col("id"), col("cluster"),
-          (col("cluster") =!= col("old")).cast("long").as("chg")))
-      // convergence test is a joinless probe of the just-materialized
-      // checkpoint: non-converged rounds short-circuit at the first
-      // changed row (limit 1), only the final round scans everything —
-      // no second shuffle-join job either way
-      val changed = next.where(col("chg") === 1L).limit(1).count()
-      // `next` is materialized (eager checkpoint + the count above), so the
-      // previous round's checkpoint blocks are dead — drop them now instead
-      // of leaking one checkpointed frame per round for the JVM's lifetime
-      // (releaseFrame, not unpersist: unpersist is a no-op on checkpoints)
-      if (prevCkpt != null) releaseFrame(prevCkpt)
-      prevCkpt = next
-      labels = next.select("id", "cluster")
-      converged = changed == 0
-      i += 1
-    }
-    edges.unpersist()
-    // the final round's checkpoint backs the returned frame — released via
-    // Dedup.releaseCaches() once the caller has consumed it
-    if (prevCkpt != null) track(prevCkpt)
-    labels
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    spark.createDataFrame(labels.map { case (id, c) =>
+      Row(toScala(id), toScala(c))
+    }, clusterSchema(idType))
   }
 
   /** End-to-end near-duplicate removal: MinHash-LSH pairs → connected

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph analytics over edge DataFrames.
@@ -22,10 +23,9 @@ import org.apache.spark.storage.StorageLevel
 object Graphs {
 
   /** Routes a `(String, String)` key by its FIRST component's partition
-    * under `base` — how the iterative operators co-locate a node's
-    * edges ([[bfs]]/[[shortestPaths]]) or per-node counts
-    * ([[labelPropagation]]) with that node's state partition, making
-    * the per-round zipPartitions merges narrow by construction.
+    * under `base` — how [[labelPropagation]] co-locates per-node
+    * `(node, label)` counts with that node's state partition, making the
+    * per-round zipPartitions merge narrow by construction.
     * Value-equal instances compare equal, so partitioner-aware RDD ops
     * recognize two identically-routed datasets as co-partitioned. */
   private final class ByFirstOf(val base: org.apache.spark.Partitioner)
@@ -39,8 +39,6 @@ object Graphs {
     }
     override def hashCode: Int = 31 + base.hashCode
   }
-  private def byFirstOf(base: org.apache.spark.Partitioner): org.apache.spark.Partitioner =
-    new ByFirstOf(base)
 
   /** SQL-compatible node partitioner (round 15): routes a node STRING
     * to the partition Spark SQL's `repartition(n, col)` sends rows
@@ -59,8 +57,7 @@ object Graphs {
     override def getPartition(key: Any): Int = {
       val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
         .hash(org.apache.spark.unsafe.types.UTF8String
-            .fromString(key.asInstanceOf[String]),
-          org.apache.spark.sql.types.StringType, 42L).toInt
+            .fromString(key.asInstanceOf[String]), StringType, 42L).toInt
       val m = h % n
       if (m < 0) m + n else m
     }
@@ -229,21 +226,20 @@ object Graphs {
     * external engine can replay it (the DuckDB oracle unrolls the same
     * iterations). Returns `(node, rank)`.
     *
-    * Scale shape — the [[bfs]]/[[labelPropagation]] single-state loop
-    * skeleton (round 13): edges normalize ONCE (one groupBy on src,
-    * joined back — edge payload is `(src, dst, w/W)`), then parallel
-    * `(src, dst)` shares SUM and src-route in a single `reduceByKey`
-    * build shuffle. Each iteration is a narrow `zipPartitions`
-    * contribution scan (ranks partition i covers every src of adjacency
-    * partition i by construction — a per-partition hash map replaces
-    * the pair join) + a map-side-combined `reduceByKey` of
-    * contributions onto the node partitioner — the round's ONLY
-    * shuffle — + a second narrow `zipPartitions` merging contributions
-    * onto the node list (no-inbound nodes get the base rank). Ranks are
-    * |V| rows, edges |E| rows; nothing driver-side, no collect,
-    * iteration count is a small constant; rounds chain lazily (one job
-    * at the first downstream action) unless `checkpointEvery` cuts the
-    * chain. Null or non-positive weights and null endpoints are dropped.
+    * Scale shape: the adjacency src-routes through one SQL exchange
+    * ([[buildAdj]]; parallel `(src, dst)` weights SUM in the pack
+    * builder), and per-src out-weights `W` are partition-local sums over
+    * it. Each iteration is a narrow `zipPartitions` contribution scan
+    * (ranks partition i covers every src of adjacency partition i by
+    * construction — a per-partition hash map replaces the pair join) +
+    * a map-side-combined `reduceByKey` of contributions onto the node
+    * partitioner — the round's ONLY shuffle — + a second narrow
+    * `zipPartitions` merging contributions onto the node list
+    * (no-inbound nodes get the base rank). Ranks are |V| rows, edges |E|
+    * rows; nothing driver-side, no collect, iteration count is a small
+    * constant; rounds chain lazily (one job at the first downstream
+    * action) unless `checkpointEvery` cuts the chain. Null or
+    * non-positive weights and null endpoints are dropped.
     *
     * @param checkpointEvery if > 0, reliably checkpoint (and
     *   materialize) the rank state every that-many rounds, bounding
@@ -268,25 +264,20 @@ object Graphs {
         !isnan(col("w")) && col("w") > 0.0)
 
     // The power iteration runs as an RDD loop over ONE fixed hash
-    // partitioning (round 9; single-state zipPartitions form round 13 —
-    // the bfs/labelPropagation skeleton): the WHOLE build pays exactly
-    // ONE |E|-sized shuffle — the adjacency reduceByKey below, which
-    // sums parallel (src, dst) weights and src-routes in the same pass.
-    // The r12 form paid THREE (the out-weight groupBy's join-back
-    // re-shuffled |E|, then norm.rdd re-routed |E| again); per-src
-    // total out-weights now ride as a third co-partitioned |V|-sized
-    // RDD instead of being folded into per-edge shares. Each round is
-    // a narrow 3-way zipPartitions contribution scan (ranks + out-
-    // weights + edges; per-partition hash maps replace the pair join)
-    // + ONE map-side-combined reduceByKey of contributions (≤ |V| rows
-    // per partition — the round's only shuffle) + a narrow node-list
-    // merge. The equivalent DataFrame loop paid a per-iteration plan
-    // compile + two shuffling joins (7.2 → ~2.5 s at sf0.1 when this
-    // file switched). At 100 TB the fixed partitioner is exactly what
-    // keeps |E| from re-shuffling every round. Closures are fixed
-    // named functions — no per-round codegen. FP parity with the
-    // declarative oracle: the share divides FIRST (r · (w/W), the
-    // oracle's own expression shape), so ranks stay bit-identical.
+    // partitioning (round 9). Per-src total out-weights ride as a
+    // co-partitioned |V|-sized RDD instead of being folded into per-edge
+    // shares. Each round is a narrow 3-way zipPartitions contribution
+    // scan (ranks + out-weights + edges; per-partition hash maps replace
+    // the pair join) + ONE map-side-combined reduceByKey of
+    // contributions (≤ |V| rows per partition — the round's only
+    // shuffle) + a narrow node-list merge. The equivalent DataFrame loop
+    // paid a per-iteration plan compile + two shuffling joins (7.2 →
+    // ~2.5 s at sf0.1 when this file switched). At 100 TB the fixed
+    // partitioner is exactly what keeps |E| from re-shuffling every
+    // round. Closures are fixed named functions — no per-round codegen.
+    // FP parity with the declarative oracle: the share divides FIRST
+    // (r · (w/W), the oracle's own expression shape), so ranks stay
+    // bit-identical.
     val spark = edges.sparkSession
     val nParts = spark.sessionState.conf.numShufflePartitions
     val part = new SqlHashPartitioner(nParts)
@@ -397,11 +388,9 @@ object Graphs {
           round < iterations)
         ranksRdd = checkpointState(ranksRdd)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
+    val schema = StructType(Seq(
+      StructField("node", StringType, nullable = false),
+      StructField("rank", DoubleType, nullable = false)))
     val ranks = spark.createDataFrame(
       ranksRdd.map { case (node, r) => org.apache.spark.sql.Row(node, r) }, schema)
     // LAZY result, but persisted: the first action fills the cache and
@@ -511,122 +500,31 @@ object Graphs {
     * (crawl-frontier depth, contamination blast radius from a seed set,
     * link-distance features).
     *
-    * Scale shape — the [[pageRank]] loop skeleton, tightened (round 12)
-    * to ONE adjacency shuffle at build (dedup and src-routing share a
-    * single `reduceByKey`; the undirected doubling rides the one edge
-    * scan) and per round: a narrow `zipPartitions` frontier expansion
-    * (frontier partition i covers every src of adjacency partition i by
-    * construction — a per-partition hash set replaces the pair join), a
-    * map-side-combined `reduceByKey` dedup of the new reach set (≤ |V|
-    * rows — the round's only shuffle), and a narrow merge onto the
-    * single state map `(node, (dist, isNew))` — a node enters at its
-    * FIRST (= minimal) hop count and never again, so rounds shrink as
-    * the frontier saturates. ONE persisted RDD and ONE driver job per
-    * round (the new-node count doubles as materialization and the
-    * early-exit check); the frontier is a narrow filter view over the
-    * cached state, never a second copy. All state is (node, dist)
-    * pairs, nothing driver-sized. Lineage (and task-closure size)
-    * grows linearly with rounds — immaterial in the tens-of-rounds
-    * regime link graphs settle in; `checkpointEvery = k` cuts the
-    * chain with a reliable checkpoint every k hops (requires
-    * `sparkContext.setCheckpointDir`) for the |V|-1 worst case.
-    * Oracle-reproducible: DuckDB replays it as a `WITH RECURSIVE` walk
-    * capped at `maxHops` + `min(dist)`.
+    * BFS is [[shortestPaths]] with unit edge cost: it runs the same
+    * [[relax]] loop, stepping `d + 1` over an unweighted adjacency
+    * (parallel and undirected-doubled edges dedup in the pack builder),
+    * and casts `dist` to int at the end. Every frontier node of round
+    * `k` holds `k - 1`, so each message is `k` and a settled node never
+    * improves: a node enters at its FIRST (= minimal) hop count and
+    * never again, and rounds shrink as the frontier saturates.
+    * `checkpointEvery = k` cuts the lineage with a reliable checkpoint
+    * every k hops (requires `sparkContext.setCheckpointDir`) for the
+    * |V|-1 worst case. Oracle-reproducible: DuckDB replays it as a
+    * `WITH RECURSIVE` walk capped at `maxHops` + `min(dist)`.
     */
   def bfs(edges: DataFrame, srcCol: String, dstCol: String,
           sources: DataFrame, nodeCol: String, maxHops: Int,
           undirected: Boolean = false, checkpointEvery: Int = 0): DataFrame = {
     require(maxHops >= 0, s"maxHops must be non-negative, got $maxHops")
     requireCheckpointDir(edges, checkpointEvery, "bfs")
-    val spark = edges.sparkSession
     val fwd = edges
       .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val part = new SqlHashPartitioner(nParts)
-    // adjacency src-routed by ONE UnsafeRow SQL exchange and deduped in
-    // the pack builder (parallel edges add nothing to reachability); the
-    // undirected doubling is an explode inside the same plan — never a
-    // self-union, which would evaluate the (possibly expensive) upstream
-    // edge derivation twice. No RDD shuffle at build (round 15; the old
-    // ((String, String), ()) reduceByKey paid the Java serializer for
-    // every pair).
+    val nParts = edges.sparkSession.sessionState.conf.numShufflePartitions
+    // parallel edges add nothing to reachability: keep-first
     val adj = buildAdj(fwd, undirected, weighted = false, (a, _) => a, nParts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // ONE state map per round: (node, (dist, isNew)) — isNew marks the
-    // current frontier, so the frontier is a filter VIEW over the cached
-    // state instead of a second persisted copy
-    var state: org.apache.spark.rdd.RDD[(String, (Int, Boolean))] = sources
-      .select(col(nodeCol).cast("string"))
-      .where(col(nodeCol).isNotNull)
-      .rdd.map(r => (r.getString(0), 0))
-      .reduceByKey(part, (a, _) => a)
-      .mapValues(d => (d, true)) // preserves the partitioner
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var hop = 0
-    var done = maxHops == 0
-    while (!done) {
-      hop += 1
-      val d = hop // fix the closure's capture per round
-      // narrow frontier expansion: state partition i holds exactly the
-      // nodes whose out-edges live in adjacency partition i
-      val reached = state.zipPartitions(adj) { (sit, eit) =>
-          val f = new java.util.HashSet[String]()
-          sit.foreach { case (n, (_, isNew)) => if (isNew) f.add(n) }
-          eit.flatMap { p =>
-            // frontier membership per DICT ENTRY once, array reads per edge
-            val inF = new Array[Boolean](p.dict.length)
-            var j = 0
-            while (j < p.dict.length) { inF(j) = f.contains(p.dict(j)); j += 1 }
-            Iterator.range(0, p.size).flatMap { i =>
-              if (inF(p.src(i))) Iterator((p.dict(p.dst(i)), d))
-              else Iterator.empty
-            }
-          }
-        }
-        .reduceByKey(part, (a, _) => a) // map-side combine; keeps `part`
-      // narrow merge (both on `part`): settled nodes keep their first
-      // (= minimal) hop and leave the frontier; new nodes enter it.
-      // zipPartitions + one hash map of the (shrinking) reach set
-      // replaces the cogroup — no per-node Option/Iterable boxing, the
-      // pageRank/labelPropagation merge shape
-      val upd = state.zipPartitions(reached, preservesPartitioning = true) {
-          (sit, rit) =>
-            val r = new java.util.HashMap[String, Int]()
-            rit.foreach { case (n, nd) => r.put(n, nd) }
-            sit.map { case (n, (o, _)) =>
-              r.remove(n) // settled: its first hop was minimal
-              (n, (o, false))
-            } ++ {
-              // lhs exhausted first (++ rhs is by-name): what remains in
-              // r is exactly the NEW frontier
-              import scala.jdk.CollectionConverters._
-              r.entrySet().iterator().asScala
-                .map(e => (e.getKey, (e.getValue.intValue(), true)))
-            }
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // a periodic reliable checkpoint marks BEFORE the round's job, so
-      // the one action below also writes the cut (from the fresh cache)
-      if (checkpointEvery > 0 && hop % checkpointEvery == 0) upd.checkpoint()
-      // the round's ONE job: materializes upd AND answers the stop check
-      val fresh = upd.filter(_._2._2).count()
-      state.unpersist(blocking = false)
-      state = upd
-      done = fresh == 0L || hop == maxHops
-    }
-    adj.unpersist(blocking = false)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val out = spark.createDataFrame(
-      state.map { case (n, (d, _)) => org.apache.spark.sql.Row(n, d) }, schema)
-    Dedup.track(state)
-    Dedup.track(out.persist(StorageLevel.MEMORY_AND_DISK))
+    relax(adj, nParts, sources, nodeCol, maxHops, checkpointEvery,
+      (d, _, _) => d + 1, IntegerType)
   }
 
   /** Multi-source weighted shortest paths (Bellman-Ford relaxation):
@@ -639,20 +537,11 @@ object Graphs {
     * driver pre-scan would cost a full extra pass over |E|). Returns
     * `(node, dist)` — sources at 0.0, unreachable nodes absent.
     *
-    * Same fixed-partitioner loop as [[bfs]], with values instead of hop
-    * counts: each round relaxes every edge out of the CHANGED set only
-    * (frontier discipline — a node re-enters the frontier only when its
-    * distance improves, so rounds shrink as distances settle), one
-    * narrow `zipPartitions` relaxation (state partition i covers every
-    * src of adjacency partition i; the frontier is the `improved`-flag
-    * filter view over the cached state, never a second copy) + a
-    * min-combining `reduceByKey` — the round's only shuffle — + a
-    * narrow merge; ONE persisted RDD and ONE driver job per round (the
-    * improved count doubles as materialization and the early-exit
-    * check). The adjacency dedups-to-min and src-routes in ONE build
-    * shuffle. maxIter bounds worst-case chains (|V|-1 is the exact
-    * bound; real link graphs settle in tens of rounds — lineage and
-    * task-closure size grow linearly with rounds, so set
+    * Runs the [[relax]] loop, stepping `d + w`; parallel edges collapse
+    * to their MINIMUM weight (the only one a shortest path can use) in
+    * the pack builder. maxIter bounds worst-case chains (|V|-1 is the
+    * exact bound; real link graphs settle in tens of rounds — lineage
+    * and task-closure size grow linearly with rounds, so set
     * `checkpointEvery` — a reliable checkpoint every k rounds, needs
     * `sparkContext.setCheckpointDir` — for the worst case).
     *
@@ -671,30 +560,45 @@ object Graphs {
                     checkpointEvery: Int = 0): DataFrame = {
     require(maxIter >= 0, s"maxIter must be non-negative, got $maxIter")
     requireCheckpointDir(edges, checkpointEvery, "shortestPaths")
-    val spark = edges.sparkSession
     val fwd = edges
       .select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"),
         col(weightCol).cast("double").as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
-
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val part = new SqlHashPartitioner(nParts)
-    // parallel edges collapse to their MINIMUM weight (the only one a
-    // shortest path can use) in the pack builder; src-routing is ONE
-    // UnsafeRow SQL exchange, the undirected doubling an explode inside
-    // the same plan (a self-union would re-run the upstream edge
-    // derivation — common subplans don't dedupe), and the positivity
-    // check rides the pack scan — executor-side, where the data is. No
-    // RDD shuffle at build (round 15).
+    val nParts = edges.sparkSession.sessionState.conf.numShufflePartitions
     val adj = buildAdj(fwd, undirected, weighted = true,
         math.min(_: Double, _: Double), nParts,
         checkW = w => require(w > 0.0 && !w.isNaN,
           s"shortestPaths requires positive weights, got $w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    relax(adj, nParts, sources, nodeCol, maxIter, checkpointEvery,
+      (d, p, i) => d + p.w(i), DoubleType)
+  }
 
-    // ONE state map per round: (node, (dist, improved)) — the frontier
-    // is the improved-flag filter view over the cached state
+  /** The frontier loop behind [[bfs]] and [[shortestPaths]]: each round
+    * relaxes every edge out of the CHANGED set only — a node re-enters
+    * the frontier only when its distance improves, so rounds shrink as
+    * distances settle. `step(d, p, i)` is the distance edge `i` of
+    * packed partition `p` offers when its src sits at `d`.
+    *
+    * One state map per round, `(node, (dist, improved))`; the frontier
+    * is the improved-flag filter view over the cached state, never a
+    * second copy. A round is a narrow `zipPartitions` relaxation (state
+    * partition i covers every src of adjacency partition i — both
+    * routed by [[SqlHashPartitioner]] — so a per-partition hash map
+    * replaces the pair join), a min-combining `reduceByKey` — the
+    * round's only shuffle, ≤ |V| rows — and a narrow merge: ONE
+    * persisted RDD and ONE driver job per round (the improved count
+    * doubles as materialization and the early-exit check). Stops after
+    * `maxRounds` rounds or the first round that improves nothing.
+    * Returns `(node, dist)` with `dist` of `distType` (int or double),
+    * persisted and tracked. */
+  private def relax(adj0: org.apache.spark.rdd.RDD[PackedEdges], nParts: Int,
+                    sources: DataFrame, nodeCol: String, maxRounds: Int,
+                    checkpointEvery: Int, step: (Double, PackedEdges, Int) => Double,
+                    distType: DataType): DataFrame = {
+    val spark = sources.sparkSession
+    val part = new SqlHashPartitioner(nParts)
+    val adj = adj0.persist(StorageLevel.MEMORY_AND_DISK)
     var state: org.apache.spark.rdd.RDD[(String, (Double, Boolean))] = sources
       .select(col(nodeCol).cast("string"))
       .where(col(nodeCol).isNotNull)
@@ -702,12 +606,10 @@ object Graphs {
       .reduceByKey(part, (a, _) => a)
       .mapValues(d => (d, true)) // preserves the partitioner
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var hop = 0
-    var done = maxIter == 0
+    var round = 0
+    var done = maxRounds == 0
     while (!done) {
-      hop += 1
-      // narrow relaxation: state partition i covers every src of
-      // adjacency partition i (both routed by part(src))
+      round += 1
       val relaxed = state.zipPartitions(adj) { (sit, eit) =>
           // boxed values: a missing key must surface as null, not unbox
           val f = new java.util.HashMap[String, java.lang.Double]()
@@ -725,7 +627,7 @@ object Graphs {
             }
             Iterator.range(0, p.size).flatMap { i =>
               val s = p.src(i)
-              if (inF(s)) Iterator((p.dict(p.dst(i)), dvA(s) + p.w(i)))
+              if (inF(s)) Iterator((p.dict(p.dst(i)), step(dvA(s), p, i)))
               else Iterator.empty
             }
           }
@@ -754,21 +656,21 @@ object Graphs {
         .persist(StorageLevel.MEMORY_AND_DISK)
       // a periodic reliable checkpoint marks BEFORE the round's job, so
       // the one action below also writes the cut (from the fresh cache)
-      if (checkpointEvery > 0 && hop % checkpointEvery == 0) upd.checkpoint()
+      if (checkpointEvery > 0 && round % checkpointEvery == 0) upd.checkpoint()
       // the round's ONE job: materializes upd AND answers the stop check
       val improved = upd.filter(_._2._2).count()
       state.unpersist(blocking = false)
       state = upd
-      done = improved == 0L || hop == maxIter
+      done = improved == 0L || round == maxRounds
     }
     adj.unpersist(blocking = false)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    val out = spark.createDataFrame(
-      state.map { case (n, (d, _)) => org.apache.spark.sql.Row(n, d) }, schema)
+    val schema = StructType(Seq(
+      StructField("node", StringType, nullable = false),
+      StructField("dist", distType, nullable = false)))
+    val asInt = distType == IntegerType
+    val out = spark.createDataFrame(state.map { case (n, (d, _)) =>
+      org.apache.spark.sql.Row(n, if (asInt) d.toInt else d)
+    }, schema)
     Dedup.track(state)
     Dedup.track(out.persist(StorageLevel.MEMORY_AND_DISK))
   }
@@ -786,12 +688,11 @@ object Graphs {
     * grouped counts + row_number) all agree, unlike the
     * randomized-order LPA variants. Returns `(node, label)`.
     *
-    * Scale shape — the [[pageRank]]/[[bfs]] loop skeleton, tightened to
-    * ONE shuffle per round and TWO at build:
-    *   - build: the edge multiset dedups in a single `reduceByKey`
-    *     whose partitioner routes by the SRC component (dedup and
-    *     co-location in one pass — no follow-up `partitionBy`); the
-    *     node set derives from it with one more shuffle onto the node
+    * Scale shape — the [[pageRank]]/[[bfs]] loop skeleton, ONE shuffle
+    * per round:
+    *   - build: the adjacency src-routes and dedups through one SQL
+    *     exchange ([[buildAdj]]); the node set derives from its
+    *     per-partition dicts with one `reduceByKey` onto the node
     *     partitioner.
     *   - round: labels partition i holds exactly the nodes whose edges
     *     live in adjacency partition i, so the neighbor-label expansion
@@ -820,7 +721,7 @@ object Graphs {
     val part = new SqlHashPartitioner(nParts)
     // counts route by the NODE component, so all per-node state of
     // partition i co-locates with labels partition i
-    val byFirst = byFirstOf(part)
+    val byFirst = new ByFirstOf(part)
     // adjacency src-routed by ONE UnsafeRow SQL exchange, deduped in the
     // pack builder, undirected doubling as an explode inside the same
     // plan (a self-union would run the upstream edge derivation twice).
@@ -882,11 +783,9 @@ object Graphs {
     }
     adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("label",
-        org.apache.spark.sql.types.StringType, nullable = false)))
+    val schema = StructType(Seq(
+      StructField("node", StringType, nullable = false),
+      StructField("label", StringType, nullable = false)))
     val out = spark.createDataFrame(
       labels.map { case (n, l) => org.apache.spark.sql.Row(n, l) }, schema)
     Dedup.track(labels)

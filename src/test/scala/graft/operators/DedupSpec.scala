@@ -183,9 +183,83 @@ class DedupSpec extends SparkTestBase {
 
   test("string-id pair lists take the distributed path and still label correctly") {
     val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_a", "id_b")
-    val out = Dedup.clusters(pairs).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(out == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
+    // the default threshold runs the driver union-find on string ids too;
+    // 0 forces the distributed loop
+    for (threshold <- Seq(1L << 20, 0L)) {
+      val (rows, log) = JobLog.during(spark.sparkContext)(
+        Dedup.clusters(pairs, smallGraphThreshold = threshold).collect())
+      val out = rows.map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(out == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
+      assert(log.descriptions.exists(_.startsWith("dedup.clusters: distributed")) ==
+        (threshold == 0L), log.descriptions)
+    }
+    Dedup.releaseCaches(); Dedup.releaseResults()
+  }
+
+  test("string ids label by Spark SQL's min on both clusters paths (UTF-8 byte order)") {
+    // U+E000 sorts BELOW the supplementary-plane emoji in UTF-8 bytes
+    // (EE.. < F0..) but ABOVE it in Java's UTF-16 code units (E000 >
+    // D83D), and U+FF5A likewise; a String.compareTo ordering labels the
+    // first component "\uD83D\uDE00b" instead
+    val comps = Seq(
+      Seq("\uD83D\uDE00b", "\uE000x", "\uFF5Aa"),
+      Seq("a", "\uD83D\uDE00b2", "é"),
+      Seq("ñ", "\uD83D\uDE01"))
+    val pairs = comps.flatMap(c => c.zip(c.tail)).toDF("id_a", "id_b")
+    val want = comps.flatMap { c =>
+      val m = c.toDF("id").agg(min("id")).head().getString(0)
+      c.map(_ -> m)
+    }.toMap
+    assert(want("\uFF5Aa") == "\uE000x" && want("é") == "a")
+    for (threshold <- Seq(1L << 20, 0L)) {
+      val got = Dedup.clusters(pairs, smallGraphThreshold = threshold).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == want, s"threshold=$threshold")
+    }
+    Dedup.releaseCaches(); Dedup.releaseResults()
+  }
+
+  test("a null id fails loudly on both clusters paths, for Long and String ids") {
+    val longs = Seq((Option(1L), Option(2L)), (Option(2L), None)).toDF("id_a", "id_b")
+    val strings = Seq((Option("a"), Option("b")), (None, Option("b"))).toDF("id_a", "id_b")
+    for (pairs <- Seq(longs, strings); threshold <- Seq(1L << 20, 0L)) {
+      val e = intercept[Exception](
+        Dedup.clusters(pairs, smallGraphThreshold = threshold).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(messages.exists(_.contains("clusters: id_a/id_b must not be null")),
+        s"threshold=$threshold ${pairs.schema("id_a").dataType}: $e")
+    }
+    Dedup.releaseCaches(); Dedup.releaseResults()
+  }
+
+  test("clusters rejects id types without value equality up front") {
+    val binary = Seq((Array[Byte](1), Array[Byte](2))).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException](Dedup.clusters(binary))
+    assert(e.getMessage.contains("clusters: id type binary"), e.getMessage)
+  }
+
+  test("a distributed clusters call keeps only the RDDs behind its result") {
+    val sc = spark.sparkContext
+    // distributed only; probe, then the distributed loop
+    for (threshold <- Seq(0L, 1L)) {
+      Dedup.releaseCaches(); Dedup.releaseResults()
+      val baseline = sc.getPersistentRDDs.keySet
+      val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+      val result = Dedup.clusters(pairs, smallGraphThreshold = threshold)
+      assert(result.collect().length == 5)
+      val kept = sc.getPersistentRDDs.keySet -- baseline
+      // every RDD the result's plan reads, through its (checkpoint-cut) lineage
+      val leaves = result.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }
+      def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[Int] =
+        r.id +: r.dependencies.flatMap(d => lineage(d.rdd))
+      val backing = leaves.flatMap(lineage).toSet
+      assert(kept.nonEmpty && kept.subsetOf(backing),
+        s"threshold=$threshold: ${(kept -- backing).size} persisted RDDs outlive their use")
+    }
+    Dedup.releaseCaches(); Dedup.releaseResults()
   }
 
   test("lshConfig reproduces the validated 8×8 layout at gate scale and grows with n") {

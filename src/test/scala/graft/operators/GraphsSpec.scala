@@ -294,6 +294,24 @@ class GraphsSpec extends SparkTestBase {
     Dedup.releaseCaches()
   }
 
+  test("bfs is unit-weight shortestPaths: same reach, int distances") {
+    val rnd = new scala.util.Random(5)
+    val edges = (1 to 1500).map(_ =>
+      (s"n${rnd.nextInt(200)}", s"n${rnd.nextInt(200)}")).distinct
+    val unit = edges.map { case (s, t) => (s, t, 1.0) }
+    val sources = Seq("n0", "n9")
+    for (hops <- Seq(0, 2, 9); undirected <- Seq(false, true)) {
+      val sp = runSssp(unit, sources, hops, undirected).view.mapValues(_.toInt).toMap
+      assert(runBfs(edges, sources, hops, undirected) === sp,
+        s"hops=$hops undirected=$undirected")
+    }
+    val out = Graphs.bfs(edges.toDF("s", "t"), "s", "t", sources.toDF("node"), "node", 2)
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    assert(out.schema.map(f => (f.name, f.dataType, f.nullable)) ===
+      Seq(("node", StringType, false), ("dist", IntegerType, false)))
+    Dedup.releaseCaches()
+  }
+
   test("checkpointEvery: >20-round loops checkpoint periodically with " +
       "identical results; a missing checkpoint dir fails loudly") {
     val sc = spark.sparkContext
