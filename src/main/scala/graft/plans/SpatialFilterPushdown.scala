@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions._
-import graft.sources.{GraftSpatialScan, GraftSpatialTable}
+import graft.sources.{DocScan, DocTable}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -42,7 +42,7 @@ import scala.util.Try
   * depending on registration: with `spark.sql.extensions` it runs before
   * V2 scan planning and rewrites [[DataSourceV2Relation]] options; with
   * `Graft.register` (experimental.extraOptimizations, after scan
-  * planning) it replaces the already-built [[GraftSpatialScan]].
+  * planning) it replaces the already-built [[DocScan]].
   */
 case class SpatialFilterPushdown() extends Rule[LogicalPlan] {
 
@@ -52,7 +52,7 @@ case class SpatialFilterPushdown() extends Rule[LogicalPlan] {
     if (conf.getConfString(EnabledKey, "true") != "true") return plan
     plan.transformUp {
       // pre-scan-planning shape (spark.sql.extensions path)
-      case f @ Filter(cond, r: DataSourceV2Relation) if r.table.isInstanceOf[GraftSpatialTable] =>
+      case f @ Filter(cond, r: DataSourceV2Relation) if r.table.isInstanceOf[DocTable] =>
         geometryAttr(r.output).flatMap { g =>
           newSpec(cond, g, Option(r.options.get("bbox"))).map { spec =>
             val opts = new CaseInsensitiveStringMap(
@@ -62,11 +62,11 @@ case class SpatialFilterPushdown() extends Rule[LogicalPlan] {
         }.getOrElse(f)
 
       // post-scan-planning shape (Graft.register / extraOptimizations path)
-      case f @ Filter(cond, sr: DataSourceV2ScanRelation) if sr.scan.isInstanceOf[GraftSpatialScan] =>
-        val scan = sr.scan.asInstanceOf[GraftSpatialScan]
+      case f @ Filter(cond, sr: DataSourceV2ScanRelation) if sr.scan.isInstanceOf[DocScan] =>
+        val scan = sr.scan.asInstanceOf[DocScan]
         geometryAttr(sr.output).flatMap { g =>
-          newSpec(cond, g, scan.bboxSpec).map { spec =>
-            f.copy(child = sr.copy(scan = scan.withBbox(spec)))
+          newSpec(cond, g, scan.bbox).map { spec =>
+            f.copy(child = sr.copy(scan = scan.copy(bbox = Some(spec))))
           }
         }.getOrElse(f)
     }

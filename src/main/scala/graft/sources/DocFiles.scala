@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.connector.catalog.Table
-import org.apache.spark.sql.connector.read.Scan
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Shared path handling for the graft-xml / graft-geojson DSv2 sources. */
@@ -199,6 +198,22 @@ private[sources] object DocFiles {
       }
   }
 
+  /** Flattens a DataFrame column of document strings, `decode` giving the
+    * records of each: one row per record, with string columns (inferred
+    * from the records' keys by one more job, unless `columns` is given)
+    * and then the WKB `geometry`. */
+  def fromDocuments(df: DataFrame, col: String, columns: Option[Seq[String]])(
+      decode: String => IterableOnce[Record]): DataFrame = {
+    val idx = df.schema.fieldIndex(col)
+    val flattened = df.mapPartitions(_.flatMap(row => decode(row.getString(idx))))(
+      Encoders.tuple(Encoders.kryo[Map[String, String]], Encoders.kryo[Option[Array[Byte]]]))
+    // explicit columns skip the inference pass (the 100 TB path)
+    val cols = columns.getOrElse(
+      flattened.flatMap(_._1.keys)(Encoders.STRING).distinct().collect().sorted.toSeq)
+    flattened.map { case (m, g) => Row.fromSeq(cols.map(m.get(_).orNull) :+ g.orNull) }(
+      Encoders.row(DocScan.schemaFor(cols)))
+  }
+
   /** Spark encodes `.load(p1, p2, …)` as a JSON array under "paths". */
   def pathsOf(options: CaseInsensitiveStringMap): Seq[String] = {
     val multi = Option(options.get("paths")).map { js =>
@@ -207,44 +222,6 @@ private[sources] object DocFiles {
     }
     multi.getOrElse(Option(options.get("path")).toSeq)
   }
-}
-
-/** Marker: a DSv2 table whose scan supports envelope (bbox) pruning of
-  * records at parse time. Lets [[graft.plans.SpatialFilterPushdown]]
-  * recognize graft document sources before the scan is built. */
-trait GraftSpatialTable extends Table
-
-/** A built scan that can tighten its bbox prune after the fact — the
-  * post-pushdown hook for [[graft.plans.SpatialFilterPushdown]] (the
-  * `Graft.register` path runs optimizer rules after V2 scan planning,
-  * so the rule rewrites the already-built scan). */
-trait GraftSpatialScan extends Scan {
-  /** Current bbox spec ("x0,y0,x1,y1" or "empty"), if any. */
-  def bboxSpec: Option[String]
-  /** Same scan with the bbox prune replaced by `spec`. */
-  def withBbox(spec: String): Scan
-}
-
-/** Real input-size statistics for the optimizer. Without these a DSv2
-  * relation weighs in at `spark.sql.defaultSizeInBytes` (Long.MaxValue),
-  * so a join between a small document collection and a large fact table
-  * can never plan a broadcast-hash join statically — AQE only converts
-  * it AFTER the small side has paid a full shuffle write. Raw document
-  * bytes are the estimate: XML/JSON markup overhead makes that an upper
-  * bound on the flattened row data, so a broadcast decision based on it
-  * is safe. HTTP collections answer "unknown" (empty), keeping the
-  * conservative default — claiming a size we never measured could
-  * broadcast an unbounded network collection. */
-trait GraftDocStatistics
-  extends org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  def files: Seq[String]
-  // computed once per scan: one driver-side getFileStatus per document
-  private lazy val bytes = DocFiles.bytesOf(files)
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = bytes
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-    }
 }
 
 /** How one document's bytes decode to flattened records. The value is half
@@ -257,10 +234,13 @@ private[sources] sealed trait DocFormat {
 /** An XML document: the `recordTag` descendants, or the root's children,
   * flattened by [[Xml.flattenRecord]]. */
 private[sources] final case class XmlDoc(recordTag: Option[String]) extends DocFormat {
-  override def decode(file: String, bytes: Array[Byte]): IndexedSeq[DocFiles.Record] = {
+  override def decode(file: String, bytes: Array[Byte]): IndexedSeq[DocFiles.Record] =
     // XXE-hardened loader: document text is data
-    val doc = graft.geo.SecureXml.document.load(new java.io.ByteArrayInputStream(bytes))
-    val kml = graft.sources.xml.XmlDataSource.isKml(doc)
+    records(graft.geo.SecureXml.document.load(new java.io.ByteArrayInputStream(bytes)))
+
+  /** The flattened records of a parsed document. */
+  def records(doc: scala.xml.Elem): IndexedSeq[DocFiles.Record] = {
+    val kml = Xml.isKml(doc)
     Xml.records(doc, recordTag).iterator.map(Xml.flattenRecord(_, kml)).toIndexedSeq
   }
 }

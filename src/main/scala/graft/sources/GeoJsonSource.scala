@@ -87,27 +87,8 @@ object GeoJsonSource {
 
   /** Flattens a DataFrame column holding GeoJSON document strings. */
   def fromDocuments(df: DataFrame, jsonCol: String,
-                    columns: Option[Seq[String]] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val idx = df.schema.fieldIndex(jsonCol)
-    val flattened = df.mapPartitions { rows =>
-      rows.flatMap(r => flattenFeature(r.getString(idx)))
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.kryo[Map[String, String]],
-      org.apache.spark.sql.Encoders.kryo[Option[Array[Byte]]]))
-
-    val cols: Seq[String] = columns.getOrElse {
-      flattened.flatMap(_._1.keys).distinct().collect().sorted.toSeq
-    }
-    val schema = StructType(
-      cols.map(StructField(_, StringType, nullable = true)) :+
-        StructField("geometry", BinaryType, nullable = true))
-    val encoder = org.apache.spark.sql.Encoders.row(schema)
-    flattened.map { case (m, g) =>
-      Row.fromSeq(cols.map(m.get(_).orNull) :+ g.orNull)
-    }(encoder)
-  }
+                    columns: Option[Seq[String]] = None): DataFrame =
+    DocFiles.fromDocuments(df, jsonCol, columns)(flattenFeature)
 
   /** Distributed GeoJSON export — the 100 TB-shaped inverse of
     * [[toFeatureCollection]] (which collects to the driver): one NDJSON

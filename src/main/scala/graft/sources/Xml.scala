@@ -1,8 +1,7 @@
 package graft.sources
 
 import graft.geo.{GeomSerde, GmlKml}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable.LinkedHashMap
 import scala.xml.{Elem, Node}
@@ -86,32 +85,21 @@ object Xml {
   def fromDocuments(df: DataFrame, xmlCol: String,
                     recordTag: Option[String] = None,
                     columns: Option[Seq[String]] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val idx = df.schema.fieldIndex(xmlCol)
-
-    val flattened = df.mapPartitions { rows =>
-      rows.flatMap { row =>
-        val doc = graft.geo.SecureXml.document.loadString(row.getString(idx))
-        val kml = doc.label.equalsIgnoreCase("kml") ||
-          doc.namespace != null && doc.namespace.contains("kml")
-        records(doc, recordTag).map(r => flattenRecord(r, kml))
-      }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.kryo[Map[String, String]],
-      org.apache.spark.sql.Encoders.kryo[Option[Array[Byte]]]))
-
-    // explicit columns skip the inference pass (the 100 TB path)
-    val cols: Seq[String] = columns.getOrElse {
-      flattened.flatMap(_._1.keys).distinct().collect().sorted.toSeq
-    }
-
-    val schema = StructType(
-      cols.map(StructField(_, StringType, nullable = true)) :+
-        StructField("geometry", BinaryType, nullable = true))
-    val encoder = org.apache.spark.sql.Encoders.row(schema)
-    flattened.map { case (m, g) =>
-      Row.fromSeq(cols.map(m.get(_).orNull) :+ g.orNull)
-    }(encoder)
+    val format = XmlDoc(recordTag)
+    DocFiles.fromDocuments(df, xmlCol, columns)(text =>
+      format.records(graft.geo.SecureXml.document.loadString(text)))
   }
+
+  /** Whether a document is KML (its root is `kml` or in a KML namespace),
+    * which decides how its geometry elements parse. */
+  def isKml(doc: Elem): Boolean =
+    doc.label.equalsIgnoreCase("kml") ||
+      (doc.namespace != null && doc.namespace.contains("kml"))
+
+  /** KML heuristic for a bare record element (no document root in sight):
+    * its own namespace, or — for a server-side projected record, which is
+    * a namespace-less `result` wrapper — any child's. */
+  private[sources] def kmlish(e: Elem): Boolean =
+    (e.namespace != null && e.namespace.contains("kml")) ||
+      e.child.exists(c => c.namespace != null && c.namespace.contains("kml"))
 }

@@ -117,9 +117,8 @@ class RuntimeFilterSpec extends SparkTestBase {
   }
 
   test("aggregated scans refuse runtime filters") {
-    val scan = graft.sources.xml.XmlScan(
-      graft.sources.xml.XmlDataSource.schemaFor(Seq("name", "kind")),
-      Map.empty, Seq("f.xml"), Array.empty,
+    val scan = DocScan(new graft.sources.xml.XmlDataSource().wire(DocOptions.of()),
+      DocScan.schemaFor(Seq("name", "kind")), Seq("f.xml"), Array.empty,
       agg = Some((Seq("kind"), Seq(AggPushdown.CountStarSpec))))
     assert(scan.filterAttributes().isEmpty)
     val plain = scan.copy(agg = None)
@@ -130,9 +129,8 @@ class RuntimeFilterSpec extends SparkTestBase {
     // Expressions.column would PARSE "addr.city" into a two-part path
     // that fails to resolve against the flat column — the refs must stay
     // single-part whatever characters the flattened name carries
-    val scan = geojson.GeoJsonScan(
-      geojson.GeoJsonDataSource.schemaFor(Seq("addr.city", "we`ird")),
-      Map.empty, Seq("f.json"), Array.empty)
+    val scan = DocScan(new geojson.GeoJsonDataSource().wire(DocOptions.of()),
+      DocScan.schemaFor(Seq("addr.city", "we`ird")), Seq("f.json"), Array.empty)
     val refs = scan.filterAttributes()
     assert(refs.map(_.fieldNames().toSeq).toSet ==
       Set(Seq("addr.city"), Seq("we`ird")))

@@ -307,4 +307,37 @@ class XmlJoinPushdownSpec extends SparkTestBase {
         Seq(("k1", "n1")))
     }
   }
+
+  test("recordTag is read in any case of the key, on the local and the server-join path") {
+    val keys = Seq("recordTag", "recordtag", "RECORDTAG")
+    // local: the root's children would be meta and grp, not the features
+    val doc = java.nio.file.Files.createTempFile("graft-recordtag", ".xml")
+    doc.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(doc, "<root><meta><name>m</name></meta><grp>" +
+      "<feature><name>a</name></feature><feature><name>b</name></feature></grp></root>")
+    keys.foreach { k =>
+      val rows = spark.read.format("graft-xml").option(k, "feature").load(doc.toString)
+        .collect().map(_.toString).toSeq
+      assert(rows == Seq("[a,null]", "[b,null]"), s"$k: $rows")
+    }
+    // server join: the same rows from the same join query
+    val runs = keys.map { k =>
+      var run: (Seq[String], Seq[String]) = null
+      withServer { (base, posted) =>
+        def side(db: String, cols: String) = spark.read.format("graft-xml")
+          .option(k, "feature").option("serverPushdown", "true").option("columns", cols)
+          .load(s"$base/rest/$db")
+        val a = side("dba", "name,kind")
+        val b = side("dbb", "ref,pop")
+        val j = a.join(b, a("name") === b("ref")).select("name", "pop")
+        assert(j.queryExecution.executedPlan.toString.contains("server-join 1x1 docs"), k)
+        val rows = j.collect().map(_.toString).toSeq
+        run = (rows, posted.asScala.filter(_.contains("dbb")).toSeq)
+      }
+      run
+    }
+    assert(runs.head._1 == Seq("[n1,10]"), runs.head)
+    assert(runs.head._2.nonEmpty && runs.head._2.forall(_.contains("//*:feature")), runs.head)
+    assert(runs.forall(_ == runs.head), runs.mkString("\n"))
+  }
 }
