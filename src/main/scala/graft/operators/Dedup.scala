@@ -684,40 +684,47 @@ object Dedup {
     // id_b reads as id_a's type (a no-op cast when they already agree)
     val ids = input.select(col("id_a"), col("id_b").cast(idType))
     def releaseOwnCache(): Unit = if (ownCache) input.unpersist(blocking = false)
-    // which path ran (and how many rounds) shows as the job description
-    val priorDescription = sc.getLocalProperty(JobDescription)
-    try {
-      if (probe) {
-        // limit-bounded probe: fetches at most threshold+1 rows, so deciding
-        // the path never materializes a billion-edge list on the driver.
-        // The driver path consumes the edge list exactly once — right here.
-        describeClusters(sc, "driver union-find")
+    // which path ran (and how many rounds) shows as the job description:
+    // `dedup.clusters: driver union-find` (the probe, which collects the
+    // whole edge list when it is small) or `dedup.clusters: distributed,
+    // <R> rounds` (R counts the rounds started so far, so the last job
+    // carries the total)
+    try describing(sc, "dedup.clusters") { describe =>
+      // limit-bounded probe: fetches at most threshold+1 rows, so deciding
+      // the path never materializes a billion-edge list on the driver.
+      // The driver path consumes the edge list exactly once — right here.
+      // It runs only when the probe provably fetched the COMPLETE edge
+      // list (compare against the limit actually applied, not the
+      // threshold: a threshold >= Int.MaxValue-1 must not let a truncated
+      // list through).
+      val complete = if (!probe) None else {
+        describe("driver union-find")
         val appliedLimit = math.min(smallGraphThreshold + 1, (Int.MaxValue - 1).toLong).toInt
-        val sample = ids.limit(appliedLimit).collect()
-        // driver path only when the probe provably fetched the COMPLETE edge
-        // list (compare against the limit actually applied, not the threshold:
-        // a threshold >= Int.MaxValue-1 must not let a truncated list through)
-        if (sample.length < appliedLimit)
-          return clustersOnDriver(pairs.sparkSession, sample, idType)
+        Some(ids.limit(appliedLimit).collect()).filter(_.length < appliedLimit)
       }
-      describeClusters(sc, "distributed, 0 rounds")
-      clustersRddLoop(ids, maxIterations, reliableCheckpoint, () => releaseOwnCache())
-    } finally {
-      releaseOwnCache() // a no-op once released
-      sc.setLocalProperty(JobDescription, priorDescription)
-    }
+      complete match {
+        case Some(sample) => clustersOnDriver(pairs.sparkSession, sample, idType)
+        case None =>
+          describe("distributed, 0 rounds")
+          clustersRddLoop(ids, maxIterations, reliableCheckpoint, () => releaseOwnCache(), describe)
+      }
+    } finally releaseOwnCache() // a no-op once released
   }
 
   /** `SparkContext.SPARK_JOB_DESCRIPTION` (private to Spark). */
   private val JobDescription = "spark.job.description"
 
-  /** Labels the jobs [[clusters]] runs from here on with the path it took:
-    * `dedup.clusters: driver union-find` (the probe, which collects the
-    * whole edge list when it is small) or `dedup.clusters: distributed,
-    * <R> rounds` (R counts the rounds started so far, so the last job
-    * carries the total). */
-  private def describeClusters(sc: org.apache.spark.SparkContext, what: String): Unit =
-    sc.setJobDescription(s"dedup.clusters: $what")
+  /** Runs `body` with a `describe(what)` that labels every job submitted
+    * from then on `<op>: <what>` (the job description the UI and every
+    * listener show), and restores the caller's description when `body`
+    * ends, however it ends. How [[clusters]] and the [[Graphs]] loops
+    * say which path or phase ran each job. */
+  private[operators] def describing[T](sc: org.apache.spark.SparkContext, op: String)(
+      body: (String => Unit) => T): T = {
+    val prior = sc.getLocalProperty(JobDescription)
+    try body(what => sc.setJobDescription(s"$op: $what"))
+    finally sc.setLocalProperty(JobDescription, prior)
+  }
 
   /** Reads a row's `(id_a, id_b)` as internal values, the keys both
     * [[clusters]] paths hash and order; a null id fails the call. */
@@ -789,10 +796,11 @@ object Dedup {
     * LongAccumulator evaluated during the round's single materializing
     * action (task retries can only inflate it, and only `== 0` is tested,
     * so retries are safe). `releaseInput` runs once the edge table holds
-    * the pair list. */
+    * the pair list; `describe` labels each round's jobs. */
   private def clustersRddLoop(ids: DataFrame, maxIterations: Int,
                               reliableCheckpoint: Boolean,
-                              releaseInput: () => Unit): DataFrame = {
+                              releaseInput: () => Unit,
+                              describe: String => Unit): DataFrame = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
@@ -835,7 +843,7 @@ object Dedup {
     var converged = nEdges == 0L
     var i = 0
     while (!converged && i < maxIterations) {
-      describeClusters(spark.sparkContext, s"distributed, ${i + 1} rounds")
+      describe(s"distributed, ${i + 1} rounds")
       // neighbor min: edges join labels is partitioner-aligned (narrow);
       // only the (dst, label) messages shuffle, V rows not E
       val nbrMin = edges.join(labels)

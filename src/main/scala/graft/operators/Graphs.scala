@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.reflect.ClassTag
 
 /** Distributed graph analytics over edge DataFrames.
   *
@@ -19,6 +23,13 @@ import org.apache.spark.storage.StorageLevel
   * while the fixed partitioner shuffles the edge table once and keeps
   * every per-round join/merge narrow (measured 7.2 → ~2.5 s on the
   * pageRank gate when this file made that switch).
+  *
+  * All four are vertex programs (Pregel: init, message, combine,
+  * update, halt) on ONE loop: a packed adjacency ([[buildAdj]]), its
+  * node set ([[nodeSet]]), the message step ([[messages]]), the round
+  * driver ([[iterate]]) and the result frame ([[resultFrame]]). Each
+  * operator supplies only its initial state, its message and combiner,
+  * its update and its halt check.
   */
 object Graphs {
 
@@ -228,15 +239,16 @@ object Graphs {
     *
     * Scale shape: the adjacency src-routes through one SQL exchange
     * ([[buildAdj]]; parallel `(src, dst)` weights SUM in the pack
-    * builder), and per-src out-weights `W` are partition-local sums over
-    * it. Each iteration is a narrow `zipPartitions` contribution scan
-    * (ranks partition i covers every src of adjacency partition i by
-    * construction — a per-partition hash map replaces the pair join) +
-    * a map-side-combined `reduceByKey` of contributions onto the node
-    * partitioner — the round's ONLY shuffle — + a second narrow
-    * `zipPartitions` merging contributions onto the node list
-    * (no-inbound nodes get the base rank). Ranks are |V| rows, edges |E|
-    * rows; nothing driver-side, no collect, iteration count is a small
+    * builder), and the cached adjacency holds each edge's share
+    * `w(u,v)/W(u)` in place of its weight ([[outShares]]). Each
+    * iteration is one round of the shared vertex-program loop
+    * ([[iterate]]): the message step ([[messages]]) sends
+    * `rank(src) · share` along every edge — a narrow zip of ranks and
+    * adjacency, then a map-side-combined `reduceByKey` onto the node
+    * partitioner, the round's ONLY shuffle — and a second narrow
+    * `zipPartitions` merges the sums onto the node list (no-inbound
+    * nodes get the base rank). Ranks are |V| rows, edges |E| rows;
+    * nothing driver-side, no collect, iteration count is a small
     * constant; rounds chain lazily (one job at the first downstream
     * action) unless `checkpointEvery` cuts the chain. Null or
     * non-positive weights and null endpoints are dropped.
@@ -264,20 +276,11 @@ object Graphs {
         !isnan(col("w")) && col("w") > 0.0)
 
     // The power iteration runs as an RDD loop over ONE fixed hash
-    // partitioning (round 9). Per-src total out-weights ride as a
-    // co-partitioned |V|-sized RDD instead of being folded into per-edge
-    // shares. Each round is a narrow 3-way zipPartitions contribution
-    // scan (ranks + out-weights + edges; per-partition hash maps replace
-    // the pair join) + ONE map-side-combined reduceByKey of
-    // contributions (≤ |V| rows per partition — the round's only
-    // shuffle) + a narrow node-list merge. The equivalent DataFrame loop
-    // paid a per-iteration plan compile + two shuffling joins (7.2 →
-    // ~2.5 s at sf0.1 when this file switched). At 100 TB the fixed
-    // partitioner is exactly what keeps |E| from re-shuffling every
-    // round. Closures are fixed named functions — no per-round codegen.
-    // FP parity with the declarative oracle: the share divides FIRST
-    // (r · (w/W), the oracle's own expression shape), so ranks stay
-    // bit-identical.
+    // partitioning (round 9): the equivalent DataFrame loop paid a
+    // per-iteration plan compile + two shuffling joins (7.2 → ~2.5 s at
+    // sf0.1 when this file switched). At 100 TB the fixed partitioner is
+    // exactly what keeps |E| from re-shuffling every round. Closures are
+    // fixed named functions — no per-round codegen.
     val spark = edges.sparkSession
     val nParts = spark.sessionState.conf.numShufflePartitions
     val part = new SqlHashPartitioner(nParts)
@@ -287,122 +290,161 @@ object Graphs {
     // old ((String, String), Double) reduceByKey moved the same bytes
     // through the Java serializer and was the heaviest step of the gate.
     // The cache holds the DICT-PACKED partition form (primitive arrays +
-    // one String per unique node — see PackedEdges); per-round FP sums
-    // replay bit-identically across actions because the pack order is
-    // fixed once built (and the result frame below persists anyway).
-    val adj = buildAdj(e, undirected = false, weighted = true, _ + _, nParts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // per-src total out-weight: every edge of a src lives in ONE
-    // adjacency partition by construction, so the sums are purely LOCAL
-    // (partition-aligned with the ranks by the same construction) — no
-    // shuffle; same summation order as the packed edge scan
-    val outW = adj
-      .mapPartitions(_.flatMap { p =>
-        val sums = new Array[Double](p.dict.length)
-        val has = new Array[Boolean](p.dict.length)
-        var i = 0
-        while (i < p.size) { sums(p.src(i)) += p.w(i); has(p.src(i)) = true; i += 1 }
-        Iterator.range(0, p.dict.length).filter(has)
-          .map(j => (p.dict(j), sums(j)))
-      })
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // node set FROM the cached adjacency (it keeps every valid edge, so
-    // src ∪ dst here equals the input's) — the upstream edge-building
-    // DAG runs exactly ONCE; each partition's dict IS its unique node
-    // set, so the distinct-shuffle ships O(unique) rows, not 2|E|
-    val nodesRdd = adj
-      .mapPartitions(_.flatMap(_.dict.iterator.map(nd => (nd, ()))))
-      .reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodesRdd.count() // one job; N is needed as a literal below
+    // one String per unique node — see PackedEdges) with the out-weights
+    // folded in as shares; per-round FP sums replay bit-identically
+    // across actions because the pack order is fixed once built (and the
+    // result frame below persists anyway).
+    val adj = Dedup.track(
+      phase(edges, "pageRank", "adjacency")(
+        buildAdj(e, undirected = false, weighted = true, _ + _, nParts))
+      .map(outShares).persist(StorageLevel.MEMORY_AND_DISK))
+    // node set FROM the cached adjacency — the upstream edge-building
+    // DAG runs exactly ONCE
+    val nodes = Dedup.track(nodeSet(adj, part).persist(StorageLevel.MEMORY_AND_DISK))
+    // one job; N is needed as a literal below
+    val n = phase(edges, "pageRank", "nodes")(nodes.count())
     if (n == 0L) {
       adj.unpersist(blocking = false)
-      outW.unpersist(blocking = false)
-      nodesRdd.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
       return e.select(col("src").as("node"), lit(0.0).as("rank")).limit(0)
     }
 
     val base = (1.0 - damping) / n
-    var ranksRdd: org.apache.spark.rdd.RDD[(String, Double)] =
-      nodesRdd.mapValues(_ => 1.0 / n) // mapValues preserves the partitioner
-    var round = 0
-    for (_ <- 1 to iterations) {
-      round += 1
-      // narrow contribution scan: ranks (and out-weights) partition i
-      // hold exactly the nodes whose out-edges live in adjacency
-      // partition i
-      val contrib = ranksRdd.zipPartitions(outW, adj) { (rit, wit, eit) =>
-          // boxed: a rank-less src (impossible by construction, but the
-          // contract is "absent → no contribution", not an unbox NPE)
-          val rk = new java.util.HashMap[String, java.lang.Double]()
-          rit.foreach { case (nd, r) => rk.put(nd, r) }
-          val ow = new java.util.HashMap[String, java.lang.Double]()
-          wit.foreach { case (s, w) => ow.put(s, w) }
-          eit.flatMap { p =>
-            // resolve rank/out-weight per DICT ENTRY once; the edge loop
-            // then reads primitive arrays — no hash probe per edge
-            val nd = p.dict.length
-            val rkA = new Array[Double](nd)
-            val owA = new Array[Double](nd)
-            val has = new Array[Boolean](nd)
-            val hasW = new Array[Boolean](nd)
-            var j = 0
-            while (j < nd) {
-              val r = rk.get(p.dict(j))
-              if (r ne null) { has(j) = true; rkA(j) = r.doubleValue }
-              val w0 = ow.get(p.dict(j))
-              if (w0 ne null) { hasW(j) = true; owA(j) = w0.doubleValue }
-              j += 1
-            }
-            Iterator.range(0, p.size).flatMap { i =>
-              val s = p.src(i)
-              if (has(s)) {
-                // a ranked SRC missing its out-weight means the
-                // outW/adjacency partitioner alignment broke — fail
-                // LOUDLY (the pre-pack form NPE'd here); a silent 0.0
-                // would emit Infinity shares into every rank sum. A
-                // sink node (rank, no out-edges) never reaches this
-                // branch — it appears in dict only as a dst.
-                if (!hasW(s)) throw new IllegalStateException(
-                  s"pageRank: node '${p.dict(s)}' has a rank but no " +
-                    "out-weight in its co-partition — partitioner " +
-                    "alignment violated")
-                // share divides FIRST — the oracle's expression shape
-                Iterator((p.dict(p.dst(i)), rkA(s) * (p.w(i) / owA(s))))
-              } else Iterator.empty
-            }
-          }
+    val ranks = iterate("pageRank", nodes.mapValues(_ => 1.0 / n), iterations,
+        checkpointEvery)(roundJob = None) { rk =>
+      val in = messages(rk, adj, part)(
+        (r: Double, p, i) => (p.dict(p.dst(i)), r * p.w(i)))(_ + _)
+      // narrow merge onto the node list: no-inbound nodes get base rank.
+      // It zips the cached nodes, not the previous ranks, so the lazy
+      // chain computes each round's ranks exactly once.
+      nodes.zipPartitions(in, preservesPartitioning = true) { (nit, cit) =>
+        val sum = new java.util.HashMap[String, java.lang.Double]()
+        cit.foreach { case (nd, c) => sum.put(nd, c) }
+        nit.map { case (nd, _) =>
+          val c = sum.get(nd)
+          (nd, base + damping * (if (c ne null) c.doubleValue else 0.0))
         }
-        .reduceByKey(part, _ + _) // the round's ONLY shuffle; map-side combined
-      // narrow merge onto the node list: no-inbound nodes get base rank
-      ranksRdd = nodesRdd.zipPartitions(contrib, preservesPartitioning = true) {
-        (nit, cit) =>
-          val in = new java.util.HashMap[String, java.lang.Double]()
-          cit.foreach { case (nd, c) => in.put(nd, c) }
-          nit.map { case (nd, _) =>
-            val c = in.get(nd)
-            (nd, base + damping * (if (c ne null) c.doubleValue else 0.0))
-          }
       }
-      if (checkpointEvery > 0 && round % checkpointEvery == 0 &&
-          round < iterations)
-        ranksRdd = checkpointState(ranksRdd)
     }
-    val schema = StructType(Seq(
-      StructField("node", StringType, nullable = false),
-      StructField("rank", DoubleType, nullable = false)))
-    val ranks = spark.createDataFrame(
-      ranksRdd.map { case (node, r) => org.apache.spark.sql.Row(node, r) }, schema)
     // LAZY result, but persisted: the first action fills the cache and
     // every later action reuses it, so multi-action callers neither
     // re-run the iteration DAG nor observe ulp-different ranks from a
-    // re-executed float sum. The only eager work above is nodesRdd.count()
-    // (N is a literal). All caches join the shared registry —
-    // Bench/long sessions drain it between uses via Dedup.releaseCaches()
-    Dedup.track(adj)
-    Dedup.track(outW)
-    Dedup.track(nodesRdd)
-    Dedup.track(ranks.persist(StorageLevel.MEMORY_AND_DISK))
+    // re-executed float sum. The only eager work above is nodes.count()
+    // (N is a literal).
+    resultFrame(spark, ranks, "rank", DoubleType)(identity)
+  }
+
+  /** Folds each src's total out-weight `W` into its edges: weight `w(i)`
+    * becomes the share `w(i) / W(src(i))`. Every edge of a src sits in
+    * ONE adjacency partition by construction, so `W` is a purely LOCAL
+    * sum — no shuffle, and no separate out-weight state to keep aligned
+    * with the ranks. `W` sums left to right in pack order and the share
+    * divides FIRST (the oracle's own expression shape, r · (w/W)), so
+    * ranks stay bit-identical. */
+  private def outShares(p: PackedEdges): PackedEdges = {
+    val total = new Array[Double](p.dict.length)
+    var i = 0
+    while (i < p.size) { total(p.src(i)) += p.w(i); i += 1 }
+    new PackedEdges(p.dict, p.src, p.dst,
+      Array.tabulate(p.size)(j => p.w(j) / total(p.src(j))))
+  }
+
+  /** The node set of a packed adjacency, keyed onto `part`: it keeps
+    * every valid edge, so src ∪ dst here equals the input's. Each
+    * partition's dict IS its unique node set, so the distinct shuffle
+    * ships O(unique) rows, not 2|E|. */
+  private def nodeSet(adj: RDD[PackedEdges], part: Partitioner): RDD[(String, Unit)] =
+    adj.mapPartitions(_.flatMap(_.dict.iterator.map(nd => (nd, ()))))
+      .reduceByKey(part, (a, _) => a)
+
+  /** The message step of every vertex program. State partition i zips
+    * with adjacency partition i: both are routed by the node partitioner
+    * ([[SqlHashPartitioner]]), so the zip is narrow and a per-partition
+    * hash map replaces the pair join. Each src's state resolves once per
+    * DICT ENTRY into an array, so the edge loop reads the array instead
+    * of probing the map per edge. Every out-edge `i` of a src holding
+    * state `s` sends `send(s, p, i)`; a src without state sends nothing.
+    * The messages combine map-side in the round's ONE shuffle, a
+    * `reduceByKey` onto `route`. */
+  private def messages[S, K: ClassTag, M: ClassTag](
+      state: RDD[(String, S)], adj: RDD[PackedEdges], route: Partitioner)(
+      send: (S, PackedEdges, Int) => (K, M))(combine: (M, M) => M): RDD[(K, M)] =
+    state.zipPartitions(adj) { (sit, eit) =>
+        val byNode = new java.util.HashMap[String, S]()
+        sit.foreach { case (nd, s) => byNode.put(nd, s) }
+        eit.flatMap { p =>
+          // null: the src holds no state
+          val at = Array.tabulate[Any](p.dict.length)(j => byNode.get(p.dict(j)))
+          Iterator.range(0, p.size).filter(i => at(p.src(i)) != null)
+            .map(i => send(at(p.src(i)).asInstanceOf[S], p, i))
+        }
+      }
+      .reduceByKey(route, combine)
+
+  /** The round driver of every vertex program: round k's state is
+    * `step(state)`, the program's [[messages]] step plus its update.
+    *
+    * With a `roundJob`, each round persists its new state, runs that job
+    * on it — the job materializes the state and answers the halt check
+    * (true stops the loop) — and then releases the previous state: ONE
+    * job per round. Without one, the rounds chain lazily into the
+    * caller's first action; no round state is persisted, since that
+    * action computes each one once. `checkpointEvery = k` cuts the
+    * lineage with a reliable checkpoint every k rounds, but only before
+    * a round that follows (`round < maxRounds`): a cut persists the
+    * state, marks it BEFORE the round's job, so that job also writes the
+    * cut (from the fresh cache), and materializes it. Every persist
+    * joins [[Dedup.track]] when it is made, so a loop that fails mid-call
+    * leaves nothing [[Dedup.releaseCaches]] cannot reach. The round's
+    * jobs are described `graphs.<op>: round <k>`, and the caller's
+    * description is back when the driver returns. Stops after
+    * `maxRounds` rounds. */
+  private def iterate[S](op: String, init: RDD[(String, S)], maxRounds: Int,
+                         checkpointEvery: Int)(
+      roundJob: Option[RDD[(String, S)] => Boolean])(
+      step: RDD[(String, S)] => RDD[(String, S)]): RDD[(String, S)] =
+    Dedup.describing(init.sparkContext, s"graphs.$op") { describe =>
+      var state = init
+      var round = 0
+      var halted = false
+      while (!halted && round < maxRounds) {
+        round += 1
+        val next = step(state)
+        val cut = checkpointEvery > 0 && round % checkpointEvery == 0 && round < maxRounds
+        if (roundJob.isDefined || cut) {
+          Dedup.track(next.persist(StorageLevel.MEMORY_AND_DISK))
+          if (cut) next.checkpoint()
+          describe(s"round $round")
+          halted = roundJob.fold { next.count(); false }(_(next))
+          state.unpersist(blocking = false) // a no-op on an unpersisted state
+        }
+        state = next
+      }
+      state
+    }
+
+  /** Runs `job` with the jobs it submits described `graphs.<op>:
+    * <what>` — the phases outside the rounds: the adjacency build (AQE
+    * runs its SQL exchange when [[buildAdj]] takes the plan's RDD) and
+    * pageRank's node count. */
+  private def phase[T](edges: DataFrame, op: String, what: String)(job: => T): T =
+    Dedup.describing(edges.sparkSession.sparkContext, s"graphs.$op") { describe =>
+      describe(what)
+      job
+    }
+
+  /** The `(node, <valueCol>)` frame of a loop's final state, LAZY but
+    * persisted: the first action fills the cache and later actions reuse
+    * it. Joins the shared registry — Bench/long sessions drain it between
+    * uses via Dedup.releaseCaches(). */
+  private def resultFrame[S](spark: SparkSession, state: RDD[(String, S)],
+                             valueCol: String, valueType: DataType)(
+      value: S => Any): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("node", StringType, nullable = false),
+      StructField(valueCol, valueType, nullable = false)))
+    val out = spark.createDataFrame(state.map { case (nd, s) => Row(nd, value(s)) }, schema)
+    Dedup.track(out.persist(StorageLevel.MEMORY_AND_DISK))
   }
 
   /** Validates the `checkpointEvery` contract shared by the iterative
@@ -416,20 +458,6 @@ object Graphs {
       s"$op(checkpointEvery=$every) requires sparkContext.setCheckpointDir " +
         "(reliable checkpoints bound lineage by writing state to the " +
         "checkpoint filesystem)")
-  }
-
-  /** Reliably checkpoints a loop-state RDD: persist (so the checkpoint
-    * write reads the cache, not a recompute), mark, materialize — the
-    * one action runs the rounds since the last cut AND writes the
-    * checkpoint files, after which the RDD's lineage is the checkpoint
-    * read. The cache joins the shared registry for later draining. */
-  private def checkpointState[T](rdd: org.apache.spark.rdd.RDD[T])
-    : org.apache.spark.rdd.RDD[T] = {
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.checkpoint()
-    rdd.count()
-    Dedup.track(rdd)
-    rdd
   }
 
   /** Exact triangle count by degree-ordered wedge enumeration — the
@@ -522,8 +550,9 @@ object Graphs {
       .where(col("src").isNotNull && col("dst").isNotNull)
     val nParts = edges.sparkSession.sessionState.conf.numShufflePartitions
     // parallel edges add nothing to reachability: keep-first
-    val adj = buildAdj(fwd, undirected, weighted = false, (a, _) => a, nParts)
-    relax(adj, nParts, sources, nodeCol, maxHops, checkpointEvery,
+    val adj = phase(edges, "bfs", "adjacency")(
+      buildAdj(fwd, undirected, weighted = false, (a, _) => a, nParts))
+    relax("bfs", adj, nParts, sources, nodeCol, maxHops, checkpointEvery,
       (d, _, _) => d + 1, IntegerType)
   }
 
@@ -566,113 +595,73 @@ object Graphs {
         col(weightCol).cast("double").as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
     val nParts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val adj = buildAdj(fwd, undirected, weighted = true,
+    val adj = phase(edges, "shortestPaths", "adjacency")(
+      buildAdj(fwd, undirected, weighted = true,
         math.min(_: Double, _: Double), nParts,
         checkW = w => require(w > 0.0 && !w.isNaN,
-          s"shortestPaths requires positive weights, got $w"))
-    relax(adj, nParts, sources, nodeCol, maxIter, checkpointEvery,
+          s"shortestPaths requires positive weights, got $w")))
+    relax("shortestPaths", adj, nParts, sources, nodeCol, maxIter, checkpointEvery,
       (d, p, i) => d + p.w(i), DoubleType)
   }
 
-  /** The frontier loop behind [[bfs]] and [[shortestPaths]]: each round
-    * relaxes every edge out of the CHANGED set only — a node re-enters
-    * the frontier only when its distance improves, so rounds shrink as
-    * distances settle. `step(d, p, i)` is the distance edge `i` of
-    * packed partition `p` offers when its src sits at `d`.
+  /** The frontier program behind [[bfs]] and [[shortestPaths]] (`op`
+    * names it in the job descriptions): each round relaxes every edge out
+    * of the CHANGED set only — a node re-enters the frontier only when
+    * its distance improves, so rounds shrink as distances settle.
+    * `step(d, p, i)` is the distance edge `i` of packed partition `p`
+    * offers when its src sits at `d`.
     *
     * One state map per round, `(node, (dist, improved))`; the frontier
     * is the improved-flag filter view over the cached state, never a
-    * second copy. A round is a narrow `zipPartitions` relaxation (state
-    * partition i covers every src of adjacency partition i — both
-    * routed by [[SqlHashPartitioner]] — so a per-partition hash map
-    * replaces the pair join), a min-combining `reduceByKey` — the
-    * round's only shuffle, ≤ |V| rows — and a narrow merge: ONE
-    * persisted RDD and ONE driver job per round (the improved count
-    * doubles as materialization and the early-exit check). Stops after
-    * `maxRounds` rounds or the first round that improves nothing.
-    * Returns `(node, dist)` with `dist` of `distType` (int or double),
-    * persisted and tracked. */
-  private def relax(adj0: org.apache.spark.rdd.RDD[PackedEdges], nParts: Int,
+    * second copy. A round of [[iterate]] is the [[messages]] step from
+    * the frontier, min-combined — the round's only shuffle, ≤ |V| rows —
+    * and a narrow merge: ONE persisted RDD and ONE driver job per round
+    * (the improved count doubles as materialization and the early-exit
+    * check). Stops after `maxRounds` rounds or the first round that
+    * improves nothing. Returns `(node, dist)` with `dist` of `distType`
+    * (int or double), persisted and tracked. */
+  private def relax(op: String, adj0: RDD[PackedEdges], nParts: Int,
                     sources: DataFrame, nodeCol: String, maxRounds: Int,
                     checkpointEvery: Int, step: (Double, PackedEdges, Int) => Double,
                     distType: DataType): DataFrame = {
-    val spark = sources.sparkSession
     val part = new SqlHashPartitioner(nParts)
-    val adj = adj0.persist(StorageLevel.MEMORY_AND_DISK)
-    var state: org.apache.spark.rdd.RDD[(String, (Double, Boolean))] = sources
+    val adj = Dedup.track(adj0.persist(StorageLevel.MEMORY_AND_DISK))
+    val init: RDD[(String, (Double, Boolean))] = Dedup.track(sources
       .select(col(nodeCol).cast("string"))
       .where(col(nodeCol).isNotNull)
       .rdd.map(r => (r.getString(0), 0.0))
       .reduceByKey(part, (a, _) => a)
       .mapValues(d => (d, true)) // preserves the partitioner
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var round = 0
-    var done = maxRounds == 0
-    while (!done) {
-      round += 1
-      val relaxed = state.zipPartitions(adj) { (sit, eit) =>
-          // boxed values: a missing key must surface as null, not unbox
-          val f = new java.util.HashMap[String, java.lang.Double]()
-          sit.foreach { case (n, (dv, isNew)) => if (isNew) f.put(n, dv) }
-          eit.flatMap { p =>
-            // frontier distance per DICT ENTRY once, array reads per edge
-            val nd = p.dict.length
-            val dvA = new Array[Double](nd)
-            val inF = new Array[Boolean](nd)
-            var j = 0
-            while (j < nd) {
-              val dv = f.get(p.dict(j))
-              if (dv ne null) { inF(j) = true; dvA(j) = dv.doubleValue }
-              j += 1
-            }
-            Iterator.range(0, p.size).flatMap { i =>
-              val s = p.src(i)
-              if (inF(s)) Iterator((p.dict(p.dst(i)), step(dvA(s), p, i)))
-              else Iterator.empty
-            }
-          }
-        }
-        .reduceByKey(part, math.min(_: Double, _: Double)) // map-side combined
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    val dist = iterate(op, init, maxRounds, checkpointEvery)(
+        roundJob = Some(_.filter(_._2._2).count() == 0L)) { state =>
+      val relaxed = messages(state.filter(_._2._2), adj, part)(
+        (s: (Double, Boolean), p, i) => (p.dict(p.dst(i)), step(s._1, p, i)))(
+        (a, b) => math.min(a, b))
       // narrow merge: candidates against settled distances, improved
       // flag carried for the next frontier and the stop check.
       // zipPartitions + one hash map of the candidates replaces the
       // cogroup (no Option/Iterable boxing per node)
-      val upd = state.zipPartitions(relaxed, preservesPartitioning = true) {
-          (sit, rit) =>
-            val r = new java.util.HashMap[String, java.lang.Double]()
-            rit.foreach { case (n, c) => r.put(n, c) }
-            sit.map { case (n, (o, _)) =>
-              val c = r.remove(n)
-              if ((c ne null) && c.doubleValue < o) (n, (c.doubleValue, true))
-              else (n, (o, false))
-            } ++ {
-              // lhs exhausted first (++ rhs is by-name): what remains in
-              // r reached previously-unseen nodes
-              import scala.jdk.CollectionConverters._
-              r.entrySet().iterator().asScala
-                .map(e => (e.getKey, (e.getValue.doubleValue(), true)))
-            }
+      state.zipPartitions(relaxed, preservesPartitioning = true) { (sit, rit) =>
+        val r = new java.util.HashMap[String, java.lang.Double]()
+        rit.foreach { case (n, c) => r.put(n, c) }
+        sit.map { case (n, (o, _)) =>
+          val c = r.remove(n)
+          if ((c ne null) && c.doubleValue < o) (n, (c.doubleValue, true))
+          else (n, (o, false))
+        } ++ {
+          // lhs exhausted first (++ rhs is by-name): what remains in
+          // r reached previously-unseen nodes
+          import scala.jdk.CollectionConverters._
+          r.entrySet().iterator().asScala
+            .map(e => (e.getKey, (e.getValue.doubleValue(), true)))
         }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // a periodic reliable checkpoint marks BEFORE the round's job, so
-      // the one action below also writes the cut (from the fresh cache)
-      if (checkpointEvery > 0 && round % checkpointEvery == 0) upd.checkpoint()
-      // the round's ONE job: materializes upd AND answers the stop check
-      val improved = upd.filter(_._2._2).count()
-      state.unpersist(blocking = false)
-      state = upd
-      done = improved == 0L || round == maxRounds
+      }
     }
     adj.unpersist(blocking = false)
-    val schema = StructType(Seq(
-      StructField("node", StringType, nullable = false),
-      StructField("dist", distType, nullable = false)))
     val asInt = distType == IntegerType
-    val out = spark.createDataFrame(state.map { case (n, (d, _)) =>
-      org.apache.spark.sql.Row(n, if (asInt) d.toInt else d)
-    }, schema)
-    Dedup.track(state)
-    Dedup.track(out.persist(StorageLevel.MEMORY_AND_DISK))
+    resultFrame(sources.sparkSession, dist, "dist", distType)(s =>
+      if (asInt) s._1.toInt else s._1)
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -688,20 +677,19 @@ object Graphs {
     * grouped counts + row_number) all agree, unlike the
     * randomized-order LPA variants. Returns `(node, label)`.
     *
-    * Scale shape — the [[pageRank]]/[[bfs]] loop skeleton, ONE shuffle
-    * per round:
+    * Scale shape — a vertex program on the same loop as [[pageRank]]
+    * and [[bfs]] ([[iterate]]), ONE shuffle per round:
     *   - build: the adjacency src-routes and dedups through one SQL
     *     exchange ([[buildAdj]]); the node set derives from its
     *     per-partition dicts with one `reduceByKey` onto the node
-    *     partitioner.
-    *   - round: labels partition i holds exactly the nodes whose edges
-    *     live in adjacency partition i, so the neighbor-label expansion
-    *     is a narrow `zipPartitions` hash join; the `((node, label), 1)`
-    *     counts then `reduceByKey` map-side-combined (primitive longs,
-    *     no serialized containers) onto a NODE-routed partitioner —
-    *     the round's only shuffle — and the per-node argmax (max under
-    *     the total order count-desc/label-asc) plus the merge with the
-    *     previous labels are a second narrow `zipPartitions`.
+    *     partitioner ([[nodeSet]]).
+    *   - round: the [[messages]] step sends `((node, label), 1)` along
+    *     each edge; the counts `reduceByKey` map-side-combined
+    *     (primitive longs, no serialized containers) onto a NODE-routed
+    *     partitioner ([[ByFirstOf]]) — the round's only shuffle — and
+    *     the per-node argmax (max under the total order
+    *     count-desc/label-asc) plus the merge with the previous labels
+    *     are a second narrow `zipPartitions`.
     * Labels are |V| rows; per-partition state (the label hash map, the
     * argmax map) is |V|/P entries; each round's superseded label RDD
     * unpersists as soon as its successor materializes; nothing
@@ -726,69 +714,41 @@ object Graphs {
     // pack builder, undirected doubling as an explode inside the same
     // plan (a self-union would run the upstream edge derivation twice).
     // No RDD shuffle at build (round 15).
-    val adj = buildAdj(fwd, undirected, weighted = false, (a, _) => a, nParts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // each partition's dict IS its unique node set — the distinct
-    // shuffle ships O(unique) rows, not 2|E|
-    val nodes = adj.mapPartitions(_.flatMap(_.dict.iterator.map(nd => (nd, ()))))
-      .reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var labels: org.apache.spark.rdd.RDD[(String, String)] =
-      nodes.mapPartitions(
-        it => it.map { case (n, _) => (n, n) }, preservesPartitioning = true)
-    for (r <- 1 to rounds) {
-      // narrow hash join: labels partition i covers every src of adj
-      // partition i (both routed by part(first)), so the neighbor-label
-      // expansion needs no shuffle
-      val expanded = labels.zipPartitions(adj) { (lit, eit) =>
-        val lab = new java.util.HashMap[String, String]()
-        lit.foreach { case (n, l) => lab.put(n, l) }
-        eit.flatMap { p =>
-          // label per DICT ENTRY once, array reads per edge
-          val labA = new Array[String](p.dict.length)
-          var j = 0
-          while (j < p.dict.length) { labA(j) = lab.get(p.dict(j)); j += 1 }
-          Iterator.range(0, p.size)
-            .map(i => ((p.dict(p.dst(i)), labA(p.src(i))), 1L))
-        }
-      }
+    val adj = Dedup.track(
+      phase(edges, "labelPropagation", "adjacency")(
+        buildAdj(fwd, undirected, weighted = false, (a, _) => a, nParts))
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    val nodes = Dedup.track(nodeSet(adj, part).persist(StorageLevel.MEMORY_AND_DISK))
+    val init = nodes.mapPartitions(
+      it => it.map { case (n, _) => (n, n) }, preservesPartitioning = true)
+    // the round's job only materializes the labels, so that the previous
+    // ones can go: a fixed round count never halts early
+    val labels = iterate("labelPropagation", init, rounds, checkpointEvery)(
+        roundJob = Some { next => next.count(); false }) { labels =>
       // the round's ONE shuffle: (node, label) counts combine map-side
       // as primitive longs and land node-routed
-      val counts = expanded.reduceByKey(byFirst, _ + _)
+      val counts = messages(labels, adj, byFirst)(
+        (lab: String, p, i) => ((p.dict(p.dst(i)), lab), 1L))(_ + _)
       // narrow by construction: partition i of `counts` holds exactly
       // the nodes `part` sends to partition i of `labels`
-      val next = labels.zipPartitions(counts, preservesPartitioning = true) {
-        (lit, cit) =>
-          val best = new java.util.HashMap[String, (String, Long)]()
-          cit.foreach { case ((n, lab), c) =>
-            val cur = best.get(n)
-            // tiebreak in UTF-8 byte order, the order DuckDB's replay and
-            // Spark SQL's own string comparison use (see utf8Less)
-            if (cur == null || c > cur._2 ||
-                (c == cur._2 && utf8Less(lab, cur._1)))
-              best.put(n, (lab, c))
-          }
-          lit.map { case (n, own) =>
-            val b = best.get(n)
-            (n, if (b == null) own else b._1)
-          }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      // a periodic reliable checkpoint marks BEFORE the round's job, so
-      // the one action below also writes the cut (from the fresh cache)
-      if (checkpointEvery > 0 && r % checkpointEvery == 0) next.checkpoint()
-      next.count() // materialize before the parent retires
-      labels.unpersist(blocking = false) // eager: round 0 is a no-op
-      labels = next
+      labels.zipPartitions(counts, preservesPartitioning = true) { (lit, cit) =>
+        val best = new java.util.HashMap[String, (String, Long)]()
+        cit.foreach { case ((n, lab), c) =>
+          val cur = best.get(n)
+          // tiebreak in UTF-8 byte order, the order DuckDB's replay and
+          // Spark SQL's own string comparison use (see utf8Less)
+          if (cur == null || c > cur._2 ||
+              (c == cur._2 && utf8Less(lab, cur._1)))
+            best.put(n, (lab, c))
+        }
+        lit.map { case (n, own) =>
+          val b = best.get(n)
+          (n, if (b == null) own else b._1)
+        }
+      }
     }
     adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
-    val schema = StructType(Seq(
-      StructField("node", StringType, nullable = false),
-      StructField("label", StringType, nullable = false)))
-    val out = spark.createDataFrame(
-      labels.map { case (n, l) => org.apache.spark.sql.Row(n, l) }, schema)
-    Dedup.track(labels)
-    Dedup.track(out.persist(StorageLevel.MEMORY_AND_DISK))
+    resultFrame(spark, labels, "label", StringType)(identity)
   }
 }

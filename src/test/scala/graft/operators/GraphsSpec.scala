@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{JobLog, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 class GraphsSpec extends SparkTestBase {
@@ -401,6 +401,67 @@ class GraphsSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(bf === Map("a" -> 0, "b" -> 1, "c" -> 2))
     Dedup.releaseCaches()
+  }
+
+  // ------------------------------------------------------ loop shape
+
+  /** The loops' fixed shape on small graphs: the jobs each call submits
+    * (with their descriptions, in order) and the shuffle bytes they
+    * write. A refactor of the loops that adds a materialization, a
+    * shuffle or a wider message fails here. */
+  test("each graph loop runs its pinned jobs and shuffle bytes") {
+    val sc = spark.sparkContext
+    val graph = Seq(("a", "b", 1.0), ("a", "c", 3.0), ("b", "c", 1.0),
+      ("c", "a", 1.0), ("d", "c", 2.0), ("c", "e", 1.0), ("e", "a", 2.0))
+    val chain = (0 until 5).map(i => (s"c$i", s"c${i + 1}", 1.0 + i % 2))
+    val sources = Seq("c0").toDF("node")
+    val caller = "the caller's own job"
+    def shape(f: => Array[org.apache.spark.sql.Row]): (Seq[String], Long) = {
+      val (rows, log) = JobLog.during(sc)(f)
+      assert(rows.nonEmpty)
+      // the loop hands the caller's description back
+      assert(sc.getLocalProperty("spark.job.description") == caller)
+      (log.descriptions, log.shuffleWriteBytes)
+    }
+    sc.setJobDescription(caller)
+    try {
+      val pr = shape(Graphs.pageRank(graph.toDF("s", "t", "w"), "s", "t", Some("w"),
+        iterations = 3).collect())
+      val lpa = shape(Graphs.labelPropagation(graph.map(e => (e._1, e._2)).toDF("s", "t"),
+        "s", "t", rounds = 2).collect())
+      val bf = shape(Graphs.bfs(chain.map(e => (e._1, e._2)).toDF("s", "t"), "s", "t",
+        sources, "node", maxHops = 10).collect())
+      val sp = shape(Graphs.shortestPaths(chain.toDF("s", "t", "w"), "s", "t", "w",
+        sources, "node", maxIter = 10).collect())
+      // each starts with the adjacency's SQL exchange (AQE runs it when the
+      // build takes the plan's RDD) and ends with the caller's action;
+      // pageRank counts its nodes, and that action runs its lazy rounds;
+      // labelPropagation runs one job per round; bfs and shortestPaths
+      // one per round, 5 that reach a new node and a 6th that reaches none
+      def rounds(op: String, n: Int) = (1 to n).map(k => s"graphs.$op: round $k")
+      def adjacency(op: String) = Seq(s"graphs.$op: adjacency")
+      assert(pr._1 == adjacency("pageRank") ++ Seq("graphs.pageRank: nodes", caller), pr)
+      assert(lpa._1 == adjacency("labelPropagation") ++ rounds("labelPropagation", 2) :+ caller,
+        lpa)
+      assert(bf._1 == adjacency("bfs") ++ rounds("bfs", 6) :+ caller, bf)
+      assert(sp._1 == adjacency("shortestPaths") ++ rounds("shortestPaths", 6) :+ caller, sp)
+      assert((pr._2, lpa._2, bf._2, sp._2) == ((1400L, 2295L, 710L, 735L)))
+    } finally sc.setJobDescription(null)
+    Dedup.releaseCaches()
+  }
+
+  test("a loop that fails mid-call leaves no cache releaseCaches cannot reach") {
+    val sc = spark.sparkContext
+    Dedup.releaseCaches(blocking = true)
+    val baseline = sc.getPersistentRDDs.keySet
+    // the weight check runs executor-side, in round 1's job
+    val bad = Seq(("a", "b", 1.0), ("b", "c", -1.0)).toDF("s", "t", "w")
+    val e = intercept[org.apache.spark.SparkException] {
+      Graphs.shortestPaths(bad, "s", "t", "w", Seq("a").toDF("node"), "node", maxIter = 3)
+    }
+    assert(e.getMessage.contains("shortestPaths requires positive weights"), e.getMessage)
+    Dedup.releaseCaches(blocking = true)
+    assert(sc.getPersistentRDDs.keySet == baseline)
   }
 
   test("SqlHashPartitioner routes every string where repartition(n, col) sends it") {
