@@ -248,6 +248,7 @@ object Graft {
     u("st_ymax", StYMax),
     t("grid_cell_id", GridCellId, Seq(DoubleType, DoubleType, DoubleType)),
     t("grid_cells", GridCells, Seq(G, DoubleType, DoubleType)),
+    q("grid_ref_cell", GridRefCell, Seq(G, G, DoubleType, DoubleType)),
     t("morton_key", MortonKey, Seq(DoubleType, DoubleType, DoubleType)),
     // measures
     u("st_area", StArea),

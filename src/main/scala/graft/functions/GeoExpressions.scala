@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -14,6 +15,15 @@ import java.lang.invoke.{MethodHandle, MethodHandles}
   *  - codegen emits a direct static call → the expression stays inside
   *    WholeStageCodegen (no UDF/serialization boundary);
   *  - interpreted eval goes through a cached MethodHandle.
+  *
+  * Constant arguments reach generated code as references, not as text.
+  * Spark's `Literal` codegen splices a primitive value (`0.347D`) into
+  * the Java source, and the compiled-class cache is keyed by that source,
+  * so every request with a new radius, cell size or precision would
+  * compile new classes (tens of ms each on the serving path). The shared
+  * [[GeoKernel.genCode]] passes each such literal through
+  * `ctx.addReferenceObj` instead: one class serves every value of a query
+  * shape. Plans and interpreted eval are unchanged.
   *
   * All are null-intolerant (SQL semantics: null in → null out).
   */
@@ -45,6 +55,45 @@ private[functions] object GeoKernel {
       require(found.length == 1, s"$sp: expected exactly one overload, found ${found.length}")
       lookup.unreflect(found.head).bindTo(module)
     })
+
+  /** Null-safe codegen for a kernel call over all of `e`'s children, of
+    * any arity: `body` gets each argument's Java value and assigns
+    * `ev.value` (and may set `ev.isNull` when `e` is nullable). It nests
+    * like Spark's per-arity `nullSafeCodeGen`, except that a non-null
+    * literal of a primitive type is read from the class's references, so
+    * the generated source does not depend on its value. */
+  def genCode(ctx: CodegenContext, ev: ExprCode, e: Expression,
+              body: Seq[String] => String): ExprCode = {
+    val args = e.children.map(argCode(ctx, _))
+    val result = body(args.map(_.value.toString))
+    val javaType = CodeGenerator.javaType(e.dataType)
+    val default = CodeGenerator.defaultValue(e.dataType)
+    if (e.nullable) {
+      val nullSafe = args.zip(e.children).foldRight(s"${ev.isNull} = false;\n$result") {
+        case ((a, c), inner) => a.code.toString + ctx.nullSafeExec(c.nullable, a.isNull.toString)(inner)
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = $default;
+        $nullSafe""")
+    } else {
+      ev.copy(code = code"""
+        ${args.map(_.code.toString).mkString("\n")}
+        $javaType ${ev.value} = $default;
+        $result""", isNull = FalseLiteral)
+    }
+  }
+
+  /** `genCode` of the static call `graft.functions.<method>(args…)`. */
+  def callCode(ctx: CodegenContext, ev: ExprCode, e: Expression, method: String): ExprCode =
+    genCode(ctx, ev, e, args => s"${ev.value} = graft.functions.$method(${args.mkString(", ")});")
+
+  private def argCode(ctx: CodegenContext, child: Expression): ExprCode = child match {
+    case Literal(v, dt) if v != null && CodeGenerator.isPrimitiveType(dt) =>
+      val ref = ctx.addReferenceObj("geoArg", v, CodeGenerator.boxedType(dt))
+      ExprCode.forNonNullValue(JavaCode.expression(s"$ref.${CodeGenerator.javaType(dt)}Value()", dt))
+    case _ => child.genCode(ctx)
+  }
 }
 
 abstract class GeoUnary(method: String, inType: DataType, outType: DataType)
@@ -55,7 +104,7 @@ abstract class GeoUnary(method: String, inType: DataType, outType: DataType)
   @transient private lazy val h = GeoKernel.handle(method)
   override def nullSafeEval(input: Any): Any = h.invokeWithArguments(input)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.$method($c)")
+    GeoKernel.callCode(ctx, ev, this, method)
 }
 
 abstract class GeoBinary(method: String, inTypes: Seq[DataType], outType: DataType)
@@ -66,7 +115,7 @@ abstract class GeoBinary(method: String, inTypes: Seq[DataType], outType: DataTy
   @transient private lazy val h = GeoKernel.handle(method)
   override def nullSafeEval(a: Any, b: Any): Any = h.invokeWithArguments(a, b)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.$method($a, $b)")
+    GeoKernel.callCode(ctx, ev, this, method)
 }
 
 abstract class GeoTernary(method: String, inTypes: Seq[DataType], outType: DataType)
@@ -77,7 +126,7 @@ abstract class GeoTernary(method: String, inTypes: Seq[DataType], outType: DataT
   @transient private lazy val h = GeoKernel.handle(method)
   override def nullSafeEval(a: Any, b: Any, c: Any): Any = h.invokeWithArguments(a, b, c)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.$method($a, $b, $c)")
+    GeoKernel.callCode(ctx, ev, this, method)
 }
 
 abstract class GeoQuaternary(method: String, inTypes: Seq[DataType], outType: DataType)
@@ -89,7 +138,7 @@ abstract class GeoQuaternary(method: String, inTypes: Seq[DataType], outType: Da
   override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
     h.invokeWithArguments(a, b, c, d)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) => s"graft.functions.$method($a, $b, $c, $d)")
+    GeoKernel.callCode(ctx, ev, this, method)
 }
 
 // ---------------------------------------------------------------- constructors
@@ -211,8 +260,8 @@ case class StAzimuth(left: Expression, right: Expression)
   // the expression is nullable even over non-null inputs
   override def nullable: Boolean = true
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""java.lang.Double ${ev.value}_az = graft.functions.GeoOps.stAzimuth($a, $b);
+    GeoKernel.genCode(ctx, ev, this, args =>
+      s"""java.lang.Double ${ev.value}_az = graft.functions.GeoOps.stAzimuth(${args.mkString(", ")});
          |if (${ev.value}_az == null) { ${ev.isNull} = true; }
          |else { ${ev.value} = ${ev.value}_az.doubleValue(); }
          |""".stripMargin)
@@ -336,6 +385,14 @@ case class MortonKey(first: Expression, second: Expression, third: Expression)
     extends GeoTernary("GeoOps.mortonKey", Seq(DoubleType, DoubleType, DoubleType), LongType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
     copy(a, b, c)
+}
+/** The reference cell of a grid-join candidate pair: the cell holding the
+  * top-left corner of (a's envelope expanded by `expand`) ∩ b's envelope.
+  * See [[GeoOps.gridRefCell]]. */
+case class GridRefCell(first: Expression, second: Expression, third: Expression, fourth: Expression)
+    extends GeoQuaternary("GeoOps.gridRefCell", Seq(BinaryType, BinaryType, DoubleType, DoubleType), LongType) {
+  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression, d: Expression) =
+    copy(a, b, c, d)
 }
 case class GridCells(first: Expression, second: Expression, third: Expression)
     extends GeoTernary("GeoOps.gridCells", Seq(BinaryType, DoubleType, DoubleType), ArrayType(LongType, containsNull = false)) {

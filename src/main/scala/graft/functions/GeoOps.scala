@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.geo.{GeoJson, GeomSerde, GmlKml}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Geometry, GeometryFactory, Point}
 import org.locationtech.jts.simplify.TopologyPreservingSimplifier
@@ -8,7 +9,7 @@ import org.locationtech.jts.simplify.TopologyPreservingSimplifier
 /** Static kernels for every ST_* function, operating directly on Catalyst
   * internal types (WKB `Array[Byte]`, `UTF8String`, primitives) so the same
   * method body serves both interpreted `nullSafeEval` and generated code
-  * (`defineCodeGen` emits a static call) — keeping geometry expressions
+  * (`GeoKernel.callCode` emits a static call) — keeping geometry expressions
   * inside WholeStageCodegen.
   *
   * Function surface mirrors the reference's PostGIS-side + pushdown
@@ -294,6 +295,22 @@ object GeoOps {
     val cx = Math.floor(x / cell).toInt
     val cy = Math.floor(y / cell).toInt
     (cx.toLong << 32) | (cy.toLong & 0xffffffffL)
+  }
+
+  /** Reference cell of a grid-join candidate pair `(a, b)`: the cell
+    * holding the top-left corner of (a's envelope expanded by `expand`) ∩
+    * b's envelope. A pair that meets in several common cells is kept only
+    * in this one. Equal to `gridCellId(greatest(xmin(a) - expand, xmin(b)),
+    * greatest(ymin(a) - expand, ymin(b)), cell)`, with Spark's `greatest`
+    * ordering (first argument wins a tie such as -0.0 vs 0.0; NaN is
+    * largest), but each WKB is decoded once. */
+  def gridRefCell(a: Array[Byte], b: Array[Byte], expand: Double, cell: Double): Long = {
+    val ea = read(a).getEnvelopeInternal
+    val eb = read(b).getEnvelopeInternal
+    @inline def greatest(x: Double, y: Double): Double =
+      if (SQLOrderingUtil.compareDoubles(y, x) > 0) y else x
+    gridCellId(greatest(ea.getMinX - expand, eb.getMinX),
+      greatest(ea.getMinY - expand, eb.getMinY), cell)
   }
 
   /** Cells covering the geometry's envelope expanded by `expand`

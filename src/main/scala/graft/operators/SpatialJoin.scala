@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
   * Duplicate candidate pairs (geometries spanning several common cells) are
   * eliminated with the standard reference-point rule: a pair is emitted only
   * from the one cell containing the top-left corner of the envelope
-  * intersection, so no post-join `dropDuplicates` shuffle is needed.
+  * intersection, so no post-join `dropDuplicates` shuffle is needed. One
+  * kernel, `grid_ref_cell(l, r, radius, cell)`, computes that cell from
+  * one decode of each side; radius and cell are its arguments, so every
+  * radius (each `knnJoin` round, each `distanceJoin`/`dbscan` call) runs
+  * the same generated code.
   *
   * Scale notes (100 TB): both sides shuffle-partition by cell id → skew is
   * bounded by cell size (tune `cellSize` ≈ radius or median envelope);
@@ -49,8 +53,9 @@ object SpatialJoin {
     join(left, leftGeom, right, rightGeom, 0.0, cellSize,
       (lg, rg) => call_function("st_within", lg, rg))
 
-  /** Rows drawn from each side for the auto grid: LocalLimit short-circuits
-    * the scan, so the sample job's cost is corpus-size-independent. */
+  /** Rows drawn from each side for the auto grid: `take` scans partitions
+    * only until it has them, so the sample job's cost is
+    * corpus-size-independent. */
   private val SampleRows = 20000
 
   /** Grid size from a bounded envelope-stats sample:
@@ -65,21 +70,29 @@ object SpatialJoin {
     * over-wide cells that result only concentrate candidates, which AQE's
     * skew-join split absorbs. Falls back to 1/256 of the sampled span for
     * degenerate inputs (all points, radius 0), and to 1.0 when even the
-    * span is a single point. */
+    * span is a single point.
+    *
+    * The sample is a `take` of each side's envelopes, aggregated as a
+    * local relation. A `limit` inside the aggregated plan would put a
+    * LIMIT into generated code, and Spark names each LIMIT's row counter
+    * uniquely per plan, so every call would compile new classes. */
   def autoCellSize(left: DataFrame, leftGeom: String,
                    right: DataFrame, rightGeom: String,
                    radius: Double): Double = {
-    Graft.register(left.sparkSession)
-    val sample = left.select(col(leftGeom).as("g")).limit(SampleRows)
-      .unionAll(right.select(col(rightGeom).as("g")).limit(SampleRows))
+    val spark = left.sparkSession
+    Graft.register(spark)
+    def envelopes(df: DataFrame, g: String) = df.select(
+        call_function("st_xmin", col(g)).as("x0"),
+        call_function("st_xmax", col(g)).as("x1"),
+        call_function("st_ymin", col(g)).as("y0"),
+        call_function("st_ymax", col(g)).as("y1"))
+    val leftEnv = envelopes(left, leftGeom)
+    val sample = spark.createDataFrame(
+      java.util.Arrays.asList(leftEnv.take(SampleRows) ++ envelopes(right, rightGeom).take(SampleRows): _*),
+      leftEnv.schema)
     val row = sample.select(
-        greatest(
-          call_function("st_xmax", col("g")) - call_function("st_xmin", col("g")),
-          call_function("st_ymax", col("g")) - call_function("st_ymin", col("g"))).as("ext"),
-        call_function("st_xmin", col("g")).as("x0"),
-        call_function("st_xmax", col("g")).as("x1"),
-        call_function("st_ymin", col("g")).as("y0"),
-        call_function("st_ymax", col("g")).as("y1"))
+        greatest(col("x1") - col("x0"), col("y1") - col("y0")).as("ext"),
+        col("x0"), col("x1"), col("y0"), col("y1"))
       .agg(percentile_approx(col("ext"), lit(0.5), lit(1000)).as("med"),
         percentile_approx(col("ext"), lit(0.99), lit(1000)).as("p99"),
         (max("x1") - min("x0")).as("spanx"), (max("y1") - min("y0")).as("spany"))
@@ -247,13 +260,9 @@ object SpatialJoin {
       explode(call_function("grid_cells", col(rightGeom), lit(0.0), cell)))
 
     // reference point: top-left corner of (left env expanded by radius) ∩ right env
-    val refX = greatest(call_function("st_xmin", col(leftGeom)) - lit(radius),
-                        call_function("st_xmin", col(rightGeom)))
-    val refY = greatest(call_function("st_ymin", col(leftGeom)) - lit(radius),
-                        call_function("st_ymin", col(rightGeom)))
-
     l.join(r, "__cell")
-      .where(call_function("grid_cell_id", refX, refY, cell) === col("__cell"))
+      .where(call_function("grid_ref_cell", col(leftGeom), col(rightGeom), lit(radius), cell) ===
+        col("__cell"))
       .where(refine(col(leftGeom), col(rightGeom)))
       .drop("__cell")
   }

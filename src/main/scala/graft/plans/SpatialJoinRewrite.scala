@@ -17,8 +17,13 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *   left  → Generate(explode(gridCells(lg, radius, cell)))  as __cl
   *   right → Generate(explode(gridCells(rg, 0, cell)))       as __cr
   *   Join on __cl = __cr (hash-partitioned equi-join)
-  *   Filter: reference-point dedup ∧ exact predicate ∧ residual conjuncts
+  *   Filter: grid_ref_cell(lg, rg, radius, cell) = __cl (reference-point
+  *           dedup) ∧ exact predicate ∧ residual conjuncts
   *   Project back to the original join output.
+  *
+  * The radius and cell size are arguments of graft kernels only, never
+  * of Spark arithmetic, so the generated code of the rewritten join is
+  * the same for every radius (see [[graft.functions.GeoKernel]]).
   *
   * So `SELECT … FROM a JOIN b ON ST_DWithin(ag, bg, 5)` scales on a
   * cluster with zero query changes. Cell size: the DWithin radius, or
@@ -117,10 +122,10 @@ case class SpatialJoinRewrite() extends Rule[LogicalPlan] {
     val joined = Join(genL, genR, Inner, Some(EqualTo(cellL, cellR)), hint)
 
     // reference-point dedup: the pair is kept only in the cell containing
-    // the top-left corner of (left env expanded by radius) ∩ right env
-    val refX = Greatest(Seq(Subtract(StXMin(m.lg), Literal(m.radius)), StXMin(m.rg)))
-    val refY = Greatest(Seq(Subtract(StYMin(m.lg), Literal(m.radius)), StYMin(m.rg)))
-    val dedup = EqualTo(GridCellId(refX, refY, cellLit), cellL)
+    // the top-left corner of (left env expanded by radius) ∩ right env —
+    // one kernel that decodes each side once, with the radius and cell as
+    // arguments (so they reach generated code as references, not text)
+    val dedup = EqualTo(GridRefCell(m.lg, m.rg, Literal(m.radius), cellLit), cellL)
 
     val filtered = Filter((Seq(dedup, m.refine) ++ residual).reduce(And), joined)
     Project(original.output, filtered)

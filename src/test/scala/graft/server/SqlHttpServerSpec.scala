@@ -26,6 +26,25 @@ class SqlHttpServerSpec extends SparkTestBase {
     assert(r.statusCode() == 200 && r.body().contains("\"ok\""))
   }
 
+  test("sequential /health round trips do not wait on delayed ACKs (TCP_NODELAY)") {
+    // headers and body leave as two segments; under Nagle's algorithm the
+    // second waits for the client's delayed ACK (~40 ms). A keep-alive
+    // HttpURLConnection client, like the benchmark's, sees it on every call
+    def roundTripMs(): Double = {
+      val t0 = System.nanoTime()
+      val c = URI.create(base + "/health").toURL.openConnection()
+        .asInstanceOf[java.net.HttpURLConnection]
+      val in = c.getInputStream
+      try in.readAllBytes() finally in.close()
+      assert(c.getResponseCode == 200)
+      (System.nanoTime() - t0) / 1e6
+    }
+    (1 to 5).foreach(_ => roundTripMs())
+    val ms = (1 to 50).map(_ => roundTripMs()).sorted
+    val median = (ms(24) + ms(25)) / 2
+    assert(median < 40.0, s"median /health round trip $median ms; all: ${ms.mkString(", ")}")
+  }
+
   test("POST /query runs spatial SQL and returns rows") {
     val r = post("/query",
       "SELECT ST_X(ST_Point(3.0, 4.0)) AS x, ST_Distance(ST_Point(0.0, 0.0), ST_Point(3.0, 4.0)) AS d")
