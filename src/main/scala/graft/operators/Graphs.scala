@@ -1,13 +1,11 @@
 package graft.operators
 
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
-
-import scala.reflect.ClassTag
 
 /** Distributed graph analytics over edge DataFrames.
   *
@@ -30,26 +28,16 @@ import scala.reflect.ClassTag
   * driver ([[iterate]]) and the result frame ([[resultFrame]]). Each
   * operator supplies only its initial state, its message and combiner,
   * its update and its halt check.
+  *
+  * State and messages move as one block per partition, not one object
+  * per node or message (Pregel's combiners, GraphX's array-backed vertex
+  * partitions): a node partition's state is one [[Block]] — its node
+  * keys and a primitive state array — and each map task combines its
+  * messages in a primitive table and ships one [[Msgs]] block per target
+  * partition through a plain [[exchange]], with no per-record aggregator
+  * or size tracking.
   */
 object Graphs {
-
-  /** Routes a `(String, String)` key by its FIRST component's partition
-    * under `base` — how [[labelPropagation]] co-locates per-node
-    * `(node, label)` counts with that node's state partition, making the
-    * per-round zipPartitions merge narrow by construction.
-    * Value-equal instances compare equal, so partitioner-aware RDD ops
-    * recognize two identically-routed datasets as co-partitioned. */
-  private final class ByFirstOf(val base: org.apache.spark.Partitioner)
-    extends org.apache.spark.Partitioner {
-    override def numPartitions: Int = base.numPartitions
-    override def getPartition(key: Any): Int =
-      base.getPartition(key.asInstanceOf[(String, String)]._1)
-    override def equals(o: Any): Boolean = o match {
-      case b: ByFirstOf => b.base == base
-      case _ => false
-    }
-    override def hashCode: Int = 31 + base.hashCode
-  }
 
   /** SQL-compatible node partitioner (round 15): routes a node STRING
     * to the partition Spark SQL's `repartition(n, col)` sends rows
@@ -57,7 +45,7 @@ object Graphs {
     * `pmod(murmur3(utf8 bytes, seed 42), n)`, the exact
     * `HashPartitioning.partitionIdExpression`. This is what lets the
     * adjacency arrive PRE-ROUTED from one UnsafeRow SQL exchange
-    * ([[buildAdj]]) while the |V|-sized state RDDs reduce onto the SAME
+    * ([[buildAdj]]) while the |V|-sized state blocks land on the SAME
     * layout: the old build shuffle — ((String, String), w) tuples
     * through the Java serializer, measured as the single heaviest step
     * of every graph gate — is gone entirely, and the per-round
@@ -110,7 +98,7 @@ object Graphs {
     val part = new SqlHashPartitioner(n)
     doubled.repartition(n, col("src")).queryExecution.toRdd
       .mapPartitionsWithIndex { (i, it) =>
-        val b = new PackBuilder(weighted, mergeDup = merge, newSrc = checkRouted(part, _, i))
+        val b = new PackBuilder(weighted, merge, part, i)
         it.foreach { r =>
           val w = if (weighted) r.getDouble(2) else 0.0
           if (checkW ne null) checkW(w)
@@ -138,70 +126,144 @@ object Graphs {
     * EXACTLY the order the packing iterator produced, so every
     * per-round scan replays the same edge order and floating-point
     * contribution sums stay bit-identical to the unpacked pair form
-    * (oracle-parity contract). Compared to caching
-    * `((String, String), Double)` rows — two FRESH String objects plus
-    * two Tuple2s and a boxed Double per edge — the packed form stores
-    * each node string ONCE per partition and the rest as primitive
-    * int/double arrays: object count drops from ~5·|E| to O(unique
-    * nodes), and string bytes by roughly the average degree. On a
-    * web-scale graph that is the difference between a GC-stable state
-    * cache and heap churn every round. Per-round lookups also resolve
-    * per DICT ENTRY once (an array read per edge) instead of a hash
-    * probe per edge. */
+    * (oracle-parity contract). Each node string is stored ONCE per
+    * partition and the rest as primitive int/double arrays: object count
+    * is O(unique nodes), not ~5·|E| as for cached
+    * `((String, String), Double)` rows. `home(j)` is the node partition
+    * of `dict(j)`, hashed once per build so that the message step routes
+    * by an array read. */
   private[operators] final class PackedEdges(
       val dict: Array[String], val src: Array[Int], val dst: Array[Int],
-      val w: Array[Double]) extends Serializable {
+      val w: Array[Double], val home: Array[Int]) extends Serializable {
     def size: Int = src.length
   }
 
-  /** `mergeDup`: duplicate `(src, dst)` pairs collapse into their first
-    * occurrence's slot, weights merged by the function — the pack is
-    * where the edge multiset dedups now that the input arrives as a raw
-    * (possibly doubled) row stream instead of a reduceByKey output. */
-  private final class PackBuilder(weighted: Boolean,
-                                  mergeDup: (Double, Double) => Double,
-                                  newSrc: String => Unit) {
-    private val index = new java.util.HashMap[String, Integer]()
-    private val dict = scala.collection.mutable.ArrayBuffer.empty[String]
-    // dict ids already handed to `newSrc`
+  /** Packs adjacency partition `i` under `part`. `mergeDup`: duplicate
+    * `(src, dst)` pairs collapse into their first occurrence's slot,
+    * weights merged by the function — the pack is where the edge multiset
+    * dedups, since the input arrives as a raw (possibly doubled) row
+    * stream. Dict and edge index are primitive open-addressing tables
+    * ([[StringIds]], [[LongSlots]]): no boxed key per edge. */
+  private[operators] final class PackBuilder(weighted: Boolean,
+                                             mergeDup: (Double, Double) => Double,
+                                             part: SqlHashPartitioner, i: Int) {
+    private val dict = new StringIds
+    // dict ids already checked by checkRouted
     private val srcSeen = new java.util.BitSet()
     // (srcId << 32 | dstId) -> edge slot, for the duplicate merge
-    private val seen = new java.util.HashMap[java.lang.Long, Integer]()
-    private var srcA = new Array[Int](64)
-    private var dstA = new Array[Int](64)
+    private val edges = new LongSlots
     // unweighted packs never touch the weight array — no transient
     // 8 bytes/edge of growth for data result() would throw away
     private var wA = if (weighted) new Array[Double](64) else Array.emptyDoubleArray
-    private var n = 0
-    private def id(s: String): Int = {
-      val i = index.get(s)
-      if (i ne null) i.intValue()
-      else { val j = dict.length; index.put(s, j); dict += s; j }
-    }
     def add(s: String, d: String, weight: Double): Unit = {
-      val si = id(s); val di = id(d)
-      if (!srcSeen.get(si)) { srcSeen.set(si); newSrc(s) }
-      val k = java.lang.Long.valueOf((si.toLong << 32) | (di & 0xffffffffL))
-      val at = seen.get(k)
-      if (at ne null) {
-        if (weighted) wA(at.intValue()) = mergeDup(wA(at.intValue()), weight)
-        return
+      val si = dict.add(s); val di = dict.add(d)
+      if (!srcSeen.get(si)) { srcSeen.set(si); checkRouted(part, s, i) }
+      val n = edges.size
+      val at = edges.slot(si.toLong << 32 | (di & 0xffffffffL))
+      if (weighted) {
+        if (at < n) wA(at) = mergeDup(wA(at), weight)
+        else {
+          if (at == wA.length) wA = java.util.Arrays.copyOf(wA, at * 2)
+          wA(at) = weight
+        }
       }
-      if (n == srcA.length) {
-        srcA = java.util.Arrays.copyOf(srcA, n * 2)
-        dstA = java.util.Arrays.copyOf(dstA, n * 2)
-        if (weighted) wA = java.util.Arrays.copyOf(wA, n * 2)
-      }
-      seen.put(k, n)
-      srcA(n) = si; dstA(n) = di
-      if (weighted) wA(n) = weight
-      n += 1
     }
     def result(): Iterator[PackedEdges] =
-      if (n == 0) Iterator.empty
-      else Iterator(new PackedEdges(dict.toArray,
-        java.util.Arrays.copyOf(srcA, n), java.util.Arrays.copyOf(dstA, n),
-        if (weighted) java.util.Arrays.copyOf(wA, n) else Array.emptyDoubleArray))
+      if (edges.size == 0) Iterator.empty
+      else {
+        val n = edges.size
+        val keys = dict.toArray
+        Iterator(new PackedEdges(keys,
+          Array.tabulate(n)(e => (edges.key(e) >>> 32).toInt),
+          Array.tabulate(n)(e => edges.key(e).toInt),
+          if (weighted) java.util.Arrays.copyOf(wA, n) else Array.emptyDoubleArray,
+          keys.map(part.getPartition)))
+      }
+  }
+
+  /** Spreads a hash over a power-of-two table (Fibonacci hashing). */
+  private def spread(h: Long): Int = {
+    val x = h * 0x9E3779B97F4A7C15L
+    (x ^ (x >>> 29)).toInt
+  }
+
+  /** Insertion-ordered ids for distinct strings over one primitive
+    * open-addressing table: id `k` is the `k`-th distinct string added,
+    * `key(k)`. A node partition's key set (its ids index the state
+    * arrays), the pack builder's dict and the combiners' label tags. Not
+    * changed once a block holds it. */
+  private[operators] final class StringIds extends Serializable {
+    private var keys = new Array[String](8)
+    private var table = new Array[Int](16) // id + 1 at the key's probe slot; 0 = free
+    private var n = 0
+    def size: Int = n
+    def key(k: Int): String = keys(k)
+    def toArray: Array[String] = java.util.Arrays.copyOf(keys, n)
+    /** The id of `s`, or -1 when absent. */
+    def id(s: String): Int = table(find(s)) - 1
+    /** The id of `s`, added as id `size` when absent. */
+    def add(s: String): Int = {
+      val at = find(s)
+      if (table(at) != 0) table(at) - 1
+      else {
+        if (n == keys.length) keys = java.util.Arrays.copyOf(keys, n * 2)
+        keys(n) = s; table(at) = n + 1; n += 1
+        if (2 * n > table.length) {
+          table = new Array[Int](table.length * 2)
+          var k = 0
+          while (k < n) { table(find(keys(k))) = k + 1; k += 1 }
+        }
+        n - 1
+      }
+    }
+    /** These ids, then `more`'s not yet among them. */
+    def ++(more: StringIds): StringIds = {
+      val out = new StringIds
+      var k = 0
+      while (k < n) { out.add(keys(k)); k += 1 }
+      k = 0
+      while (k < more.size) { out.add(more.key(k)); k += 1 }
+      out
+    }
+    private def find(s: String): Int = {
+      val mask = table.length - 1
+      var at = spread(s.hashCode) & mask
+      while (table(at) != 0 && keys(table(at) - 1) != s) at = (at + 1) & mask
+      at
+    }
+  }
+
+  /** Insertion-ordered slots for distinct longs over one primitive
+    * open-addressing table: slot `s` holds the `s`-th distinct key,
+    * `key(s)`. The pack builder's `(src, dst)` edge index and the
+    * combiners' `(node, tag)` index. */
+  private[operators] final class LongSlots {
+    private var keys = new Array[Long](8)
+    private var table = new Array[Int](16) // slot + 1 at the key's probe slot; 0 = free
+    private var n = 0
+    def size: Int = n
+    def key(s: Int): Long = keys(s)
+    /** The slot of `k`, added as slot `size` when absent. */
+    def slot(k: Long): Int = {
+      val at = find(k)
+      if (table(at) != 0) table(at) - 1
+      else {
+        if (n == keys.length) keys = java.util.Arrays.copyOf(keys, n * 2)
+        keys(n) = k; table(at) = n + 1; n += 1
+        if (2 * n > table.length) {
+          table = new Array[Int](table.length * 2)
+          var s = 0
+          while (s < n) { table(find(keys(s))) = s + 1; s += 1 }
+        }
+        n - 1
+      }
+    }
+    private def find(k: Long): Int = {
+      val mask = table.length - 1
+      var at = spread(k) & mask
+      while (table(at) != 0 && keys(table(at) - 1) != k) at = (at + 1) & mask
+      at
+    }
   }
 
   /** UTF-8 byte order (= code-point order) for label comparisons: Java's
@@ -243,15 +305,16 @@ object Graphs {
     * `w(u,v)/W(u)` in place of its weight ([[outShares]]). Each
     * iteration is one round of the shared vertex-program loop
     * ([[iterate]]): the message step ([[messages]]) sends
-    * `rank(src) · share` along every edge — a narrow zip of ranks and
-    * adjacency, then a map-side-combined `reduceByKey` onto the node
-    * partitioner, the round's ONLY shuffle — and a second narrow
-    * `zipPartitions` merges the sums onto the node list (no-inbound
-    * nodes get the base rank). Ranks are |V| rows, edges |E| rows;
-    * nothing driver-side, no collect, iteration count is a small
-    * constant; rounds chain lazily (one job at the first downstream
-    * action) unless `checkpointEvery` cuts the chain. Null or
-    * non-positive weights and null endpoints are dropped.
+    * `rank(src) · share` along every edge, sums them per target node in
+    * the map task, and ships one primitive block per target partition —
+    * the round's ONLY shuffle, ≤ P² records — and a narrow
+    * `zipPartitions` folds the blocks into the next rank array of each
+    * node block (no-inbound nodes get the base rank). Ranks are one
+    * `Array[Double]` per node partition, edges |E| packed rows; nothing
+    * driver-side, no collect, iteration count is a small constant;
+    * rounds chain lazily (one job at the first downstream action) unless
+    * `checkpointEvery` cuts the chain. Null or non-positive weights and
+    * null endpoints are dropped.
     *
     * @param checkpointEvery if > 0, reliably checkpoint (and
     *   materialize) the rank state every that-many rounds, bounding
@@ -283,26 +346,20 @@ object Graphs {
     // fixed named functions — no per-round codegen.
     val spark = edges.sparkSession
     val nParts = spark.sessionState.conf.numShufflePartitions
-    val part = new SqlHashPartitioner(nParts)
-    // NO RDD build shuffle (round 15): the edge frame src-routes through
-    // ONE UnsafeRow SQL exchange and packs per partition (parallel
-    // (src, dst) weights SUM in the pack builder — see buildAdj); the
-    // old ((String, String), Double) reduceByKey moved the same bytes
-    // through the Java serializer and was the heaviest step of the gate.
     // The cache holds the DICT-PACKED partition form (primitive arrays +
     // one String per unique node — see PackedEdges) with the out-weights
     // folded in as shares; per-round FP sums replay bit-identically
     // across actions because the pack order is fixed once built (and the
-    // result frame below persists anyway).
+    // final ranks persist anyway).
     val adj = Dedup.track(
       phase(edges, "pageRank", "adjacency")(
         buildAdj(e, undirected = false, weighted = true, _ + _, nParts))
       .map(outShares).persist(StorageLevel.MEMORY_AND_DISK))
     // node set FROM the cached adjacency — the upstream edge-building
     // DAG runs exactly ONCE
-    val nodes = Dedup.track(nodeSet(adj, part).persist(StorageLevel.MEMORY_AND_DISK))
+    val nodes = Dedup.track(nodeSet(adj, nParts).persist(StorageLevel.MEMORY_AND_DISK))
     // one job; N is needed as a literal below
-    val n = phase(edges, "pageRank", "nodes")(nodes.count())
+    val n = phase(edges, "pageRank", "nodes")(nodes.map(_.size.toLong).fold(0L)(_ + _))
     if (n == 0L) {
       adj.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
@@ -310,28 +367,27 @@ object Graphs {
     }
 
     val base = (1.0 - damping) / n
-    val ranks = iterate("pageRank", nodes.mapValues(_ => 1.0 / n), iterations,
-        checkpointEvery)(roundJob = None) { rk =>
-      val in = messages(rk, adj, part)(
-        (r: Double, p, i) => (p.dict(p.dst(i)), r * p.w(i)))(_ + _)
-      // narrow merge onto the node list: no-inbound nodes get base rank.
+    val init = nodes.map(ids => new Block(ids, Array.fill(ids.size)(1.0 / n), null))
+    val ranks = iterate("pageRank", init, iterations, checkpointEvery)(roundJob = None) { rk =>
+      val in = messages(rk, adj, nParts, _ + _)(tag = null)((r, k, p, i) => r(k) * p.w(i))
+      // narrow merge onto the node set: no-inbound nodes get base rank.
       // It zips the cached nodes, not the previous ranks, so the lazy
       // chain computes each round's ranks exactly once.
-      nodes.zipPartitions(in, preservesPartitioning = true) { (nit, cit) =>
-        val sum = new java.util.HashMap[String, java.lang.Double]()
-        cit.foreach { case (nd, c) => sum.put(nd, c) }
-        nit.map { case (nd, _) =>
-          val c = sum.get(nd)
-          (nd, base + damping * (if (c ne null) c.doubleValue else 0.0))
-        }
+      nodes.zipPartitions(in) { (nit, mit) =>
+        val ids = nit.next()
+        val (c, _) = inbox(ids, mit.next(), _ + _)
+        val sum = new Array[Double](ids.size)
+        var s = 0
+        while (s < c.size) { sum(c.node(s)) = c.value(s); s += 1 }
+        Iterator(new Block(ids, Array.tabulate(ids.size)(k => base + damping * sum(k)), null))
       }
     }
-    // LAZY result, but persisted: the first action fills the cache and
-    // every later action reuses it, so multi-action callers neither
+    // LAZY result over persisted ranks: the first action fills the cache
+    // and every later action reuses it, so multi-action callers neither
     // re-run the iteration DAG nor observe ulp-different ranks from a
-    // re-executed float sum. The only eager work above is nodes.count()
+    // re-executed float sum. The only eager work above is the node count
     // (N is a literal).
-    resultFrame(spark, ranks, "rank", DoubleType)(identity)
+    resultFrame(spark, ranks, "rank", DoubleType)((r, k) => r(k))
   }
 
   /** Folds each src's total out-weight `W` into its edges: weight `w(i)`
@@ -346,40 +402,167 @@ object Graphs {
     var i = 0
     while (i < p.size) { total(p.src(i)) += p.w(i); i += 1 }
     new PackedEdges(p.dict, p.src, p.dst,
-      Array.tabulate(p.size)(j => p.w(j) / total(p.src(j))))
+      Array.tabulate(p.size)(j => p.w(j) / total(p.src(j))), p.home)
   }
 
-  /** The node set of a packed adjacency, keyed onto `part`: it keeps
-    * every valid edge, so src ∪ dst here equals the input's. Each
-    * partition's dict IS its unique node set, so the distinct shuffle
-    * ships O(unique) rows, not 2|E|. */
-  private def nodeSet(adj: RDD[PackedEdges], part: Partitioner): RDD[(String, Unit)] =
-    adj.mapPartitions(_.flatMap(_.dict.iterator.map(nd => (nd, ()))))
-      .reduceByKey(part, (a, _) => a)
+  /** One node partition's vertex state — the one object its cache holds:
+    * the keys the node partitioner routes there (`ids`) and one
+    * primitive value per key (`values` holds id `k`'s at index `k`).
+    * `frontier`, when set, holds the ids that send this round; null
+    * means every id sends. */
+  private[operators] final class Block[A](val ids: StringIds, val values: A,
+                                          val frontier: java.util.BitSet) extends Serializable
+
+  /** Map task `from`'s messages for one node partition, combined: node
+    * `keys(k)` receives `values(k)`, tagged `tags(k)` (labelPropagation's
+    * label; null for untagged messages and for key sets). */
+  private[operators] final class Msgs(val from: Int, val keys: Array[String],
+                                      val tags: Array[String], val values: Array[Double])
+    extends Serializable
+
+  /** The message edge `i` of packed partition `p` carries when its src
+    * holds state id `k` of `values`. */
+  private trait Send[A] extends Serializable {
+    def apply(values: A, k: Int, p: PackedEdges, i: Int): Double
+  }
+
+  /** Messages combined per `(node, tag)` as they arrive: the combiner of
+    * both sides of the block shuffle. A pair's first message is its
+    * value and each later one folds in with `combine`, left to right, so
+    * a sum keeps the order the messages arrived in. Slot `s` is the
+    * `s`-th distinct pair. */
+  private final class Combiner(combine: (Double, Double) => Double) {
+    private val pairs = new LongSlots
+    val tags = new StringIds
+    private var vals = new Array[Double](8)
+    def size: Int = pairs.size
+    def node(s: Int): Int = (pairs.key(s) >>> 32).toInt
+    def tag(s: Int): String = tags.key(pairs.key(s).toInt)
+    def value(s: Int): Double = vals(s)
+    def add(node: Int, tag: Int, v: Double): Unit = {
+      val n = pairs.size
+      val s = pairs.slot(node.toLong << 32 | (tag & 0xffffffffL))
+      if (s < n) vals(s) = combine(vals(s), v)
+      else {
+        if (s == vals.length) vals = java.util.Arrays.copyOf(vals, s * 2)
+        vals(s) = v
+      }
+    }
+  }
+
+  /** Splits one map task's `size` messages into one [[Msgs]] per node
+    * partition that receives any, keyed by that partition: message `s`
+    * goes to node `key(s)` in partition `home(s)`. A null `tag` or
+    * `value` leaves that array out. */
+  private def split(from: Int, n: Int, size: Int)(home: Int => Int, key: Int => String,
+                                                  tag: Int => String, value: Int => Double)
+      : Iterator[(Int, Msgs)] = {
+    val count = new Array[Int](n)
+    var s = 0
+    while (s < size) { count(home(s)) += 1; s += 1 }
+    val keys = count.map(new Array[String](_))
+    val tags = if (tag == null) null else count.map(new Array[String](_))
+    val values = if (value == null) null else count.map(new Array[Double](_))
+    java.util.Arrays.fill(count, 0)
+    s = 0
+    while (s < size) {
+      val t = home(s); val k = count(t)
+      keys(t)(k) = key(s)
+      if (tags != null) tags(t)(k) = tag(s)
+      if (values != null) values(t)(k) = value(s)
+      count(t) = k + 1
+      s += 1
+    }
+    Iterator.range(0, n).filter(count(_) > 0).map(t => (t, new Msgs(from, keys(t),
+      if (tags == null) null else tags(t), if (values == null) null else values(t))))
+  }
+
+  /** The block shuffle under every vertex-program step: each map task
+    * sends at most one [[Msgs]] per node partition, so a round moves ≤ P²
+    * records. No aggregator and no map-side combine (the blocks arrive
+    * combined), so at ≤ 200 partitions Spark takes its bypass writer and
+    * a plain reader; nothing sizes or sorts per message. Node partition
+    * `t` gets its blocks in map-task order, whatever order they were
+    * fetched in. */
+  private def exchange(blocks: RDD[(Int, Msgs)], n: Int): RDD[Array[Msgs]] =
+    new ShuffledRDD[Int, Msgs, Msgs](blocks, new HashPartitioner(n))
+      .mapPartitions(it => Iterator(it.map(_._2).toArray.sortBy(_.from)))
+
+  /** Routes strings to the node partition [[SqlHashPartitioner]] sends
+    * each to, where each is kept once: one [[StringIds]] per partition.
+    * A map task hands in its strings with their partitions. The node set
+    * of an adjacency (its dicts: each partition's dict IS its unique
+    * node set, so the shuffle ships O(unique) keys, not 2|E|) and
+    * [[relax]]'s source set. */
+  private def keySet(keys: RDD[(Array[String], Array[Int])], n: Int): RDD[StringIds] =
+    exchange(keys.mapPartitionsWithIndex { (j, it) =>
+      it.flatMap { case (ks, home) => split(j, n, ks.length)(home(_), ks(_), null, null) }
+    }, n).map { blocks =>
+      val ids = new StringIds
+      blocks.foreach(_.keys.foreach(ids.add))
+      ids
+    }
+
+  /** The node set of a packed adjacency: it keeps every valid edge, so
+    * src ∪ dst here equals the input's. */
+  private def nodeSet(adj: RDD[PackedEdges], n: Int): RDD[StringIds] =
+    keySet(adj.map(p => (p.dict, p.home)), n)
 
   /** The message step of every vertex program. State partition i zips
     * with adjacency partition i: both are routed by the node partitioner
-    * ([[SqlHashPartitioner]]), so the zip is narrow and a per-partition
-    * hash map replaces the pair join. Each src's state resolves once per
-    * DICT ENTRY into an array, so the edge loop reads the array instead
-    * of probing the map per edge. Every out-edge `i` of a src holding
-    * state `s` sends `send(s, p, i)`; a src without state sends nothing.
-    * The messages combine map-side in the round's ONE shuffle, a
-    * `reduceByKey` onto `route`. */
-  private def messages[S, K: ClassTag, M: ClassTag](
-      state: RDD[(String, S)], adj: RDD[PackedEdges], route: Partitioner)(
-      send: (S, PackedEdges, Int) => (K, M))(combine: (M, M) => M): RDD[(K, M)] =
-    state.zipPartitions(adj) { (sit, eit) =>
-        val byNode = new java.util.HashMap[String, S]()
-        sit.foreach { case (nd, s) => byNode.put(nd, s) }
-        eit.flatMap { p =>
-          // null: the src holds no state
-          val at = Array.tabulate[Any](p.dict.length)(j => byNode.get(p.dict(j)))
-          Iterator.range(0, p.size).filter(i => at(p.src(i)) != null)
-            .map(i => send(at(p.src(i)).asInstanceOf[S], p, i))
+    * ([[SqlHashPartitioner]]), so the zip is narrow. Each src resolves
+    * its state id once per DICT ENTRY into an array, so the edge loop
+    * reads the array instead of probing per edge. Every out-edge `i` of
+    * a sending src with state id `k` sends `send(values, k, p, i)`,
+    * tagged `tag(values, k)` when `tag` is set; a src without state, or
+    * outside the frontier, sends nothing. The map task combines the
+    * messages per (target, tag) in a primitive [[Combiner]] and ships
+    * one block per target partition through [[exchange]], the round's
+    * ONE shuffle. */
+  private def messages[A](state: RDD[Block[A]], adj: RDD[PackedEdges], n: Int,
+                          combine: (Double, Double) => Double)(
+      tag: (A, Int) => String)(send: Send[A]): RDD[Array[Msgs]] =
+    exchange(state.zipPartitions(adj) { (sit, eit) =>
+      val b = sit.next()
+      eit.flatMap { p =>
+        val c = new Combiner(combine)
+        // the state id of each dict entry that sends, else -1
+        val at = Array.tabulate(p.dict.length) { j =>
+          val k = b.ids.id(p.dict(j))
+          if (k >= 0 && (b.frontier == null || b.frontier.get(k))) k else -1
         }
+        val tagOf = if (tag == null) null else at.map(k => if (k < 0) -1 else c.tags.add(tag(b.values, k)))
+        var i = 0
+        while (i < p.size) {
+          val k = at(p.src(i))
+          if (k >= 0) c.add(p.dst(i), if (tagOf == null) 0 else tagOf(p.src(i)), send(b.values, k, p, i))
+          i += 1
+        }
+        split(TaskContext.getPartitionId(), n, c.size)(
+          s => p.home(c.node(s)), s => p.dict(c.node(s)), if (tag == null) null else c.tag, c.value)
       }
-      .reduceByKey(route, combine)
+    }, n)
+
+  /** One node partition's message blocks combined in map-task order, so
+    * a sum's order never depends on fetch order — keyed by `ids`: node `k`
+    * of the result is `ids.key(k)`, and a key outside `ids` ([[relax]]'s
+    * newly reached nodes) is node `ids.size + f`, `f` its id in the
+    * returned fresh set. */
+  private def inbox(ids: StringIds, blocks: Array[Msgs],
+                    combine: (Double, Double) => Double): (Combiner, StringIds) = {
+    val c = new Combiner(combine)
+    val fresh = new StringIds
+    blocks.foreach { b =>
+      var k = 0
+      while (k < b.keys.length) {
+        val j = ids.id(b.keys(k))
+        c.add(if (j >= 0) j else ids.size + fresh.add(b.keys(k)),
+          if (b.tags == null) 0 else c.tags.add(b.tags(k)), b.values(k))
+        k += 1
+      }
+    }
+    (c, fresh)
+  }
 
   /** The round driver of every vertex program: round k's state is
     * `step(state)`, the program's [[messages]] step plus its update.
@@ -399,10 +582,8 @@ object Graphs {
     * jobs are described `graphs.<op>: round <k>`, and the caller's
     * description is back when the driver returns. Stops after
     * `maxRounds` rounds. */
-  private def iterate[S](op: String, init: RDD[(String, S)], maxRounds: Int,
-                         checkpointEvery: Int)(
-      roundJob: Option[RDD[(String, S)] => Boolean])(
-      step: RDD[(String, S)] => RDD[(String, S)]): RDD[(String, S)] =
+  private def iterate[B](op: String, init: RDD[B], maxRounds: Int, checkpointEvery: Int)(
+      roundJob: Option[RDD[B] => Boolean])(step: RDD[B] => RDD[B]): RDD[B] =
     Dedup.describing(init.sparkContext, s"graphs.$op") { describe =>
       var state = init
       var round = 0
@@ -433,18 +614,22 @@ object Graphs {
       job
     }
 
-  /** The `(node, <valueCol>)` frame of a loop's final state, LAZY but
-    * persisted: the first action fills the cache and later actions reuse
-    * it. Joins the shared registry — Bench/long sessions drain it between
-    * uses via Dedup.releaseCaches(). */
-  private def resultFrame[S](spark: SparkSession, state: RDD[(String, S)],
+  /** The `(node, <valueCol>)` frame of a loop's final state blocks, LAZY
+    * but backed by ONE cache: the state's own, made here unless a round
+    * already persisted it. The first action fills it and later actions
+    * map the cached blocks to rows again; no second copy of the rows is
+    * cached beside it. Joins the shared registry — Bench/long sessions
+    * drain it between uses via Dedup.releaseCaches(). */
+  private def resultFrame[A](spark: SparkSession, state: RDD[Block[A]],
                              valueCol: String, valueType: DataType)(
-      value: S => Any): DataFrame = {
+      value: (A, Int) => Any): DataFrame = {
+    if (state.getStorageLevel == StorageLevel.NONE)
+      Dedup.track(state.persist(StorageLevel.MEMORY_AND_DISK))
     val schema = StructType(Seq(
       StructField("node", StringType, nullable = false),
       StructField(valueCol, valueType, nullable = false)))
-    val out = spark.createDataFrame(state.map { case (nd, s) => Row(nd, value(s)) }, schema)
-    Dedup.track(out.persist(StorageLevel.MEMORY_AND_DISK))
+    spark.createDataFrame(state.flatMap(b =>
+      Iterator.tabulate(b.ids.size)(k => Row(b.ids.key(k), value(b.values, k)))), schema)
   }
 
   /** Validates the `checkpointEvery` contract shared by the iterative
@@ -553,7 +738,7 @@ object Graphs {
     val adj = phase(edges, "bfs", "adjacency")(
       buildAdj(fwd, undirected, weighted = false, (a, _) => a, nParts))
     relax("bfs", adj, nParts, sources, nodeCol, maxHops, checkpointEvery,
-      (d, _, _) => d + 1, IntegerType)
+      (d, k, _, _) => d(k) + 1, IntegerType)
   }
 
   /** Multi-source weighted shortest paths (Bellman-Ford relaxation):
@@ -601,67 +786,69 @@ object Graphs {
         checkW = w => require(w > 0.0 && !w.isNaN,
           s"shortestPaths requires positive weights, got $w")))
     relax("shortestPaths", adj, nParts, sources, nodeCol, maxIter, checkpointEvery,
-      (d, p, i) => d + p.w(i), DoubleType)
+      (d, k, p, i) => d(k) + p.w(i), DoubleType)
   }
 
   /** The frontier program behind [[bfs]] and [[shortestPaths]] (`op`
     * names it in the job descriptions): each round relaxes every edge out
     * of the CHANGED set only — a node re-enters the frontier only when
     * its distance improves, so rounds shrink as distances settle.
-    * `step(d, p, i)` is the distance edge `i` of packed partition `p`
-    * offers when its src sits at `d`.
+    * `step(dist, k, p, i)` is the distance edge `i` of packed partition
+    * `p` offers when its src sits at `dist(k)`.
     *
-    * One state map per round, `(node, (dist, improved))`; the frontier
-    * is the improved-flag filter view over the cached state, never a
-    * second copy. A round of [[iterate]] is the [[messages]] step from
-    * the frontier, min-combined — the round's only shuffle, ≤ |V| rows —
-    * and a narrow merge: ONE persisted RDD and ONE driver job per round
-    * (the improved count doubles as materialization and the early-exit
-    * check). Stops after `maxRounds` rounds or the first round that
+    * One state block per node partition and round: the reached nodes,
+    * their distances (doubles, exact for bfs' hop counts) and the
+    * frontier, the ids the round improved. A round of [[iterate]] is the
+    * [[messages]] step from the frontier, min-combined — the round's only
+    * shuffle, ≤ P² blocks — and a narrow merge that appends newly
+    * reached nodes: ONE persisted RDD and ONE driver job per round (the
+    * empty-frontier check doubles as materialization and the early
+    * exit). Stops after `maxRounds` rounds or the first round that
     * improves nothing. Returns `(node, dist)` with `dist` of `distType`
-    * (int or double), persisted and tracked. */
+    * (int or double), backed by the final round's cache. */
   private def relax(op: String, adj0: RDD[PackedEdges], nParts: Int,
                     sources: DataFrame, nodeCol: String, maxRounds: Int,
-                    checkpointEvery: Int, step: (Double, PackedEdges, Int) => Double,
+                    checkpointEvery: Int, step: Send[Array[Double]],
                     distType: DataType): DataFrame = {
     val part = new SqlHashPartitioner(nParts)
     val adj = Dedup.track(adj0.persist(StorageLevel.MEMORY_AND_DISK))
-    val init: RDD[(String, (Double, Boolean))] = Dedup.track(sources
-      .select(col(nodeCol).cast("string"))
+    val seeds = sources.select(col(nodeCol).cast("string"))
       .where(col(nodeCol).isNotNull)
-      .rdd.map(r => (r.getString(0), 0.0))
-      .reduceByKey(part, (a, _) => a)
-      .mapValues(d => (d, true)) // preserves the partitioner
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .rdd.mapPartitions { it =>
+        val ids = new StringIds
+        it.foreach(r => ids.add(r.getString(0)))
+        val ks = ids.toArray
+        Iterator((ks, ks.map(part.getPartition)))
+      }
+    val init = Dedup.track(keySet(seeds, nParts).map { ids =>
+      val all = new java.util.BitSet
+      all.set(0, ids.size)
+      new Block(ids, new Array[Double](ids.size), all)
+    }.persist(StorageLevel.MEMORY_AND_DISK))
     val dist = iterate(op, init, maxRounds, checkpointEvery)(
-        roundJob = Some(_.filter(_._2._2).count() == 0L)) { state =>
-      val relaxed = messages(state.filter(_._2._2), adj, part)(
-        (s: (Double, Boolean), p, i) => (p.dict(p.dst(i)), step(s._1, p, i)))(
-        (a, b) => math.min(a, b))
-      // narrow merge: candidates against settled distances, improved
-      // flag carried for the next frontier and the stop check.
-      // zipPartitions + one hash map of the candidates replaces the
-      // cogroup (no Option/Iterable boxing per node)
-      state.zipPartitions(relaxed, preservesPartitioning = true) { (sit, rit) =>
-        val r = new java.util.HashMap[String, java.lang.Double]()
-        rit.foreach { case (n, c) => r.put(n, c) }
-        sit.map { case (n, (o, _)) =>
-          val c = r.remove(n)
-          if ((c ne null) && c.doubleValue < o) (n, (c.doubleValue, true))
-          else (n, (o, false))
-        } ++ {
-          // lhs exhausted first (++ rhs is by-name): what remains in
-          // r reached previously-unseen nodes
-          import scala.jdk.CollectionConverters._
-          r.entrySet().iterator().asScala
-            .map(e => (e.getKey, (e.getValue.doubleValue(), true)))
+        roundJob = Some(_.map(_.frontier.isEmpty).fold(true)(_ && _))) { state =>
+      val relaxed = messages(state, adj, nParts, math.min(_: Double, _: Double))(tag = null)(step)
+      // narrow merge: candidates against settled distances; the ids a
+      // candidate improves (or first reaches) are the next frontier
+      state.zipPartitions(relaxed) { (sit, mit) =>
+        val b = sit.next()
+        val (c, fresh) = inbox(b.ids, mit.next(), math.min(_: Double, _: Double))
+        val ids = if (fresh.size == 0) b.ids else b.ids ++ fresh
+        val d = java.util.Arrays.copyOf(b.values, ids.size)
+        val improved = new java.util.BitSet
+        var s = 0
+        while (s < c.size) {
+          val k = c.node(s)
+          if (k >= b.ids.size || c.value(s) < d(k)) { d(k) = c.value(s); improved.set(k) }
+          s += 1
         }
+        Iterator(new Block(ids, d, improved))
       }
     }
     adj.unpersist(blocking = false)
     val asInt = distType == IntegerType
-    resultFrame(sources.sparkSession, dist, "dist", distType)(s =>
-      if (asInt) s._1.toInt else s._1)
+    resultFrame(sources.sparkSession, dist, "dist", distType)((d, k) =>
+      if (asInt) d(k).toInt else d(k))
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -681,18 +868,18 @@ object Graphs {
     * and [[bfs]] ([[iterate]]), ONE shuffle per round:
     *   - build: the adjacency src-routes and dedups through one SQL
     *     exchange ([[buildAdj]]); the node set derives from its
-    *     per-partition dicts with one `reduceByKey` onto the node
-    *     partitioner ([[nodeSet]]).
-    *   - round: the [[messages]] step sends `((node, label), 1)` along
-    *     each edge; the counts `reduceByKey` map-side-combined
-    *     (primitive longs, no serialized containers) onto a NODE-routed
-    *     partitioner ([[ByFirstOf]]) — the round's only shuffle — and
-    *     the per-node argmax (max under the total order
-    *     count-desc/label-asc) plus the merge with the previous labels
-    *     are a second narrow `zipPartitions`.
-    * Labels are |V| rows; per-partition state (the label hash map, the
-    * argmax map) is |V|/P entries; each round's superseded label RDD
-    * unpersists as soon as its successor materializes; nothing
+    *     per-partition dicts in one block shuffle ([[nodeSet]]).
+    *   - round: the [[messages]] step sends one count along each edge,
+    *     tagged with the src's label; the map task sums them per
+    *     (target, label) and ships one block per target partition — the
+    *     round's only shuffle, ≤ P² records — and a narrow
+    *     `zipPartitions` sums each node partition's blocks and takes the
+    *     per-node argmax (max under the total order
+    *     count-desc/label-asc) into the next label array.
+    * Labels are one array per node partition; the per-partition
+    * combiners hold |V|/P nodes' (label, count) pairs; each round's
+    * superseded label blocks unpersist as soon as their successors
+    * materialize, and the last round's cache backs the result; nothing
     * driver-side.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
@@ -706,10 +893,6 @@ object Graphs {
       .where(col("src").isNotNull && col("dst").isNotNull)
 
     val nParts = spark.sessionState.conf.numShufflePartitions
-    val part = new SqlHashPartitioner(nParts)
-    // counts route by the NODE component, so all per-node state of
-    // partition i co-locates with labels partition i
-    val byFirst = new ByFirstOf(part)
     // adjacency src-routed by ONE UnsafeRow SQL exchange, deduped in the
     // pack builder, undirected doubling as an explode inside the same
     // plan (a self-union would run the upstream edge derivation twice).
@@ -718,37 +901,34 @@ object Graphs {
       phase(edges, "labelPropagation", "adjacency")(
         buildAdj(fwd, undirected, weighted = false, (a, _) => a, nParts))
       .persist(StorageLevel.MEMORY_AND_DISK))
-    val nodes = Dedup.track(nodeSet(adj, part).persist(StorageLevel.MEMORY_AND_DISK))
-    val init = nodes.mapPartitions(
-      it => it.map { case (n, _) => (n, n) }, preservesPartitioning = true)
+    val nodes = Dedup.track(nodeSet(adj, nParts).persist(StorageLevel.MEMORY_AND_DISK))
+    val init = nodes.map(ids => new Block(ids, ids.toArray, null))
     // the round's job only materializes the labels, so that the previous
     // ones can go: a fixed round count never halts early
     val labels = iterate("labelPropagation", init, rounds, checkpointEvery)(
         roundJob = Some { next => next.count(); false }) { labels =>
-      // the round's ONE shuffle: (node, label) counts combine map-side
-      // as primitive longs and land node-routed
-      val counts = messages(labels, adj, byFirst)(
-        (lab: String, p, i) => ((p.dict(p.dst(i)), lab), 1L))(_ + _)
-      // narrow by construction: partition i of `counts` holds exactly
-      // the nodes `part` sends to partition i of `labels`
-      labels.zipPartitions(counts, preservesPartitioning = true) { (lit, cit) =>
-        val best = new java.util.HashMap[String, (String, Long)]()
-        cit.foreach { case ((n, lab), c) =>
-          val cur = best.get(n)
-          // tiebreak in UTF-8 byte order, the order DuckDB's replay and
-          // Spark SQL's own string comparison use (see utf8Less)
-          if (cur == null || c > cur._2 ||
-              (c == cur._2 && utf8Less(lab, cur._1)))
-            best.put(n, (lab, c))
+      val counts = messages(labels, adj, nParts, _ + _)(_(_))((_, _, _, _) => 1.0)
+      labels.zipPartitions(counts) { (lit, mit) =>
+        val b = lit.next()
+        val (c, _) = inbox(b.ids, mit.next(), _ + _)
+        // each node's best (label, count) slot; the tiebreak is UTF-8
+        // byte order, the order DuckDB's replay and Spark SQL's own
+        // string comparison use (see utf8Less)
+        val best = Array.fill(b.ids.size)(-1)
+        var s = 0
+        while (s < c.size) {
+          val k = c.node(s); val o = best(k)
+          if (o < 0 || c.value(s) > c.value(o) ||
+              (c.value(s) == c.value(o) && utf8Less(c.tag(s), c.tag(o))))
+            best(k) = s
+          s += 1
         }
-        lit.map { case (n, own) =>
-          val b = best.get(n)
-          (n, if (b == null) own else b._1)
-        }
+        Iterator(new Block(b.ids,
+          Array.tabulate(b.ids.size)(k => if (best(k) < 0) b.values(k) else c.tag(best(k))), null))
       }
     }
     adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
-    resultFrame(spark, labels, "label", StringType)(identity)
+    resultFrame(spark, labels, "label", StringType)(_(_))
   }
 }

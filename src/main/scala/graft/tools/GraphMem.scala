@@ -17,8 +17,13 @@ object GraphMem {
       .getOrCreate()
     try {
       val dir = args(0)
-      graft.SparkEntry.queries("q_pagerank")(spark, dir).count()
-      graft.SparkEntry.queries("q_label_prop")(spark, dir).count()
+      // the frames stay reachable until the listing below: a graph result
+      // dropped by its caller frees its caches on the next GC
+      val frames = Seq("q_pagerank", "q_label_prop").map { q =>
+        val df = graft.SparkEntry.queries(q)(spark, dir)
+        df.count()
+        df
+      }
       val infos = spark.sparkContext.getRDDStorageInfo
         .filter(i => i.memSize + i.diskSize > 0)
         .sortBy(-_.memSize)
@@ -27,6 +32,7 @@ object GraphMem {
           f"parts=${i.numCachedPartitions}%3d  ${i.name}")
       }
       println(s"TOTAL mem=${infos.map(_.memSize).sum}")
+      java.lang.ref.Reference.reachabilityFence(frames)
     } finally spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.operators.{Dedup, SpatialJoin}
+import graft.operators.{Dedup, Graphs, SpatialJoin}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -147,6 +147,52 @@ class CodegenShapeSpec extends SparkTestBase {
           .zipWithIndex.map { case ((_, r), i) => (l, r, i + 1) }
       }.toSet
       (got, want)
+    }
+  }
+
+  /** A random digraph on 60 nodes per input set, as `(src, dst)` BIGINT
+    * parquet — the schema of the corpus link graph — written before any
+    * measured run. */
+  private lazy val edgeSets: Map[String, Seq[(Long, Long)]] = Map("a" -> 5L, "b" -> 17L).map {
+    case (set, seed) =>
+      val rnd = new Random(seed)
+      set -> Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+        .distinct.filter(e => e._1 != e._2)
+  }
+
+  private lazy val edgeFiles: Map[String, String] = edgeSets.map { case (set, es) =>
+    val path = s"$dir/$set-edges"
+    spark.createDataFrame(es).toDF("src", "dst").write.parquet(path)
+    set -> path
+  }
+
+  test("Graphs.pageRank and labelPropagation: no compile on a second edge frame") {
+    edgeFiles
+    def nine(d: Double): Double = math.rint(d * 1e9) / 1e9
+    pinned { set =>
+      val e = spark.read.parquet(edgeFiles(set))
+      val ranks = Graphs.pageRank(e, "src", "dst", iterations = 3).collect()
+        .map(r => r.getString(0) -> nine(r.getDouble(1))).toMap
+      val labels = Graphs.labelPropagation(e, "src", "dst", rounds = 2).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      Dedup.releaseCaches()
+      // the recurrences of Graphs' scaladoc, in plain Scala
+      val es = edgeSets(set).map { case (s, d) => (s.toString, d.toString) }
+      val nodes = es.flatMap(x => Seq(x._1, x._2)).distinct
+      val n = nodes.size
+      val out = es.groupBy(_._1).view.mapValues(_.size).toMap
+      var r = nodes.map(_ -> 1.0 / n).toMap
+      for (_ <- 1 to 3) {
+        val in = es.groupBy(_._2).view.mapValues(_.map(x => r(x._1) / out(x._1)).sum).toMap
+        r = nodes.map(v => v -> (0.15 / n + 0.85 * in.getOrElse(v, 0.0))).toMap
+      }
+      val nb = (es ++ es.map(_.swap)).distinct.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+      var lab = nodes.map(v => v -> v).toMap
+      for (_ <- 1 to 2) lab = nodes.map { v =>
+        v -> nb.get(v).fold(lab(v))(_.map(lab).groupBy(identity).toSeq
+          .map { case (l, ls) => (-ls.size, l) }.min._2)
+      }.toMap
+      ((ranks, labels), (r.view.mapValues(nine).toMap, lab))
     }
   }
 }

@@ -1,7 +1,13 @@
 package graft.operators
 
 import graft.{JobLog, SparkTestBase}
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 class GraphsSpec extends SparkTestBase {
   import spark.implicits._
@@ -445,9 +451,97 @@ class GraphsSpec extends SparkTestBase {
         lpa)
       assert(bf._1 == adjacency("bfs") ++ rounds("bfs", 6) :+ caller, bf)
       assert(sp._1 == adjacency("shortestPaths") ++ rounds("shortestPaths", 6) :+ caller, sp)
-      assert((pr._2, lpa._2, bf._2, sp._2) == ((1400L, 2295L, 710L, 735L)))
+      assert((pr._2, lpa._2, bf._2, sp._2) == ((4018L, 3419L, 2017L, 2042L)))
     } finally sc.setJobDescription(null)
     Dedup.releaseCaches()
+  }
+
+  /** Every RDD a frame's plan reads, through its lineage. */
+  private def lineage(df: DataFrame): Seq[RDD[_]] = {
+    val seen = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    def walk(r: RDD[_]): Unit = if (!seen.contains(r.id)) {
+      seen(r.id) = r
+      r.dependencies.foreach(d => walk(d.rdd))
+    }
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: LogicalRDD => walk(lr.rdd)
+      case _ =>
+    }
+    seen.values.toSeq
+  }
+
+  /** Each graph operator on a random graph of 300 nodes, with the number
+    * of block shuffles it runs: the node or seed set, then one per round. */
+  private lazy val loops: Seq[(String, () => DataFrame, Int)] = {
+    val rnd = new scala.util.Random(19)
+    val edges = (1 to 2000).map(_ =>
+      (s"n${rnd.nextInt(300)}", s"n${rnd.nextInt(300)}", 1.0 + rnd.nextInt(4)))
+    val weighted = edges.toDF("s", "t", "w")
+    val plain = edges.map(e => (e._1, e._2)).toDF("s", "t")
+    val sources = Seq("n0", "n1").toDF("node")
+    Seq(
+      ("pageRank", () => Graphs.pageRank(weighted, "s", "t", Some("w"), iterations = 3), 1 + 3),
+      ("labelPropagation", () => Graphs.labelPropagation(plain, "s", "t", rounds = 2), 1 + 2),
+      ("bfs", () => Graphs.bfs(plain, "s", "t", sources, "node", maxHops = 3), 1 + 3),
+      ("shortestPaths", () => Graphs.shortestPaths(weighted, "s", "t", "w", sources, "node",
+        maxIter = 3), 1 + 3))
+  }
+
+  test("each graph loop keeps only the RDDs behind its result") {
+    val sc = spark.sparkContext
+    for ((op, run, _) <- loops) {
+      Dedup.releaseCaches(blocking = true)
+      val baseline = sc.getPersistentRDDs.keySet
+      val result = run()
+      assert(result.collect().nonEmpty, op)
+      val kept = sc.getPersistentRDDs.keySet -- baseline
+      val backing = lineage(result).map(_.id).toSet
+      assert(kept.nonEmpty && kept.subsetOf(backing),
+        s"$op: ${(kept -- backing).map(sc.getPersistentRDDs(_)).mkString(", ")} outlive their use")
+    }
+    Dedup.releaseCaches(blocking = true)
+  }
+
+  test("the graph loops shuffle blocks: no aggregator, no map-side combine, ≤ P² records") {
+    val sc = spark.sparkContext
+    val p = spark.sessionState.conf.numShufflePartitions
+    for ((op, run, shuffles) <- loops) {
+      val (result, log) = JobLog.during(sc) { val r = run(); r.collect(); r }
+      val deps = lineage(result).flatMap(_.dependencies).collect {
+        case d: ShuffleDependency[_, _, _] => d
+      }
+      assert(deps.nonEmpty && deps.forall(d => d.aggregator.isEmpty && !d.mapSideCombine),
+        s"$op: ${deps.filter(_.aggregator.isDefined).map(_.rdd).mkString(", ")} combine per record")
+      // the adjacency's SQL exchanges move rows; every later shuffle is a
+      // block shuffle, one block per (map task, node partition) at most
+      val blocks = log.stageShuffleRecords.filterNot(_._1.endsWith(": adjacency"))
+      assert(blocks.size == shuffles && blocks.forall(_._2 <= p * p), s"$op: $blocks")
+      Dedup.releaseCaches()
+    }
+  }
+
+  test("the pack builder merges duplicate (src, dst) edges like a plain-Scala model") {
+    // one partition, so every node routes home
+    val part = new Graphs.SqlHashPartitioner(1)
+    val rnd = new scala.util.Random(41)
+    val merges = Seq[(String, (Double, Double) => Double)](
+      "keep-first" -> ((a, _) => a), "min" -> (math.min(_, _)), "sum" -> (_ + _))
+    for (trial <- 0 until 40; (name, merge) <- merges) {
+      val nodes = 1 + rnd.nextInt(25)
+      val edges = Seq.fill(rnd.nextInt(300))(
+        (s"v${rnd.nextInt(nodes)}", s"v${rnd.nextInt(nodes)}", (1 + rnd.nextInt(9)) / 3.0))
+      val b = new Graphs.PackBuilder(weighted = true, merge, part, 0)
+      edges.foreach { case (s, d, w) => b.add(s, d, w) }
+      val packs = b.result().toSeq
+      val got = packs.flatMap(p =>
+        (0 until p.size).map(i => (p.dict(p.src(i)), p.dict(p.dst(i)), p.w(i))))
+      // the model: each (src, dst) in its first occurrence's slot, its
+      // weights folded left in input order
+      val model = mutable.LinkedHashMap.empty[(String, String), Double]
+      edges.foreach { case (s, d, w) => model((s, d)) = model.get((s, d)).fold(w)(merge(_, w)) }
+      assert(got == model.toSeq.map { case ((s, d), w) => (s, d, w) }, s"trial $trial, $name")
+      assert(packs.forall(p => p.dict.distinct.length == p.dict.length && p.home.forall(_ == 0)))
+    }
   }
 
   test("a loop that fails mid-call leaves no cache releaseCaches cannot reach") {
