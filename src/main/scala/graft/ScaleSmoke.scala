@@ -157,8 +157,8 @@ object ScaleSmoke {
 
     // Distributed connected components at graph scale: 5M edges as 5k
     // chains of length 1000 — deep chains are pointer jumping's worst case
-    // (~log2(1000) ≈ 10 rounds). The RDD loop shuffles the edge table once;
-    // each round moves only label rows.
+    // (~log2(1000) ≈ 10 rounds). The vertex-program loop builds the
+    // adjacency once; each round moves only label blocks.
     time("clustering 5M-edge graph (5k chains x 1000)") {
       val pairs = spark.range(5000000L)
         .where(pmod(col("id"), lit(1000)) =!= 999) // break chains every 1000

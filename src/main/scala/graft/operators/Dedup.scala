@@ -86,7 +86,7 @@ object Dedup {
 
   /** Unpersists every cache left behind by dedup calls in this JVM. Call
     * AFTER consuming the returned frames: a result backed by a
-    * localCheckpoint (distributed clustering) cannot be re-executed once
+    * localCheckpoint (`SpatialJoin.epsPairs`) cannot be re-executed once
     * its blocks are released. The registry is JVM-GLOBAL — with concurrent
     * dedup consumers in one JVM, a release by one drops the others'
     * unconsumed checkpoint blocks too; serialize release points (e.g.
@@ -630,27 +630,31 @@ object Dedup {
     * the minimum id reachable through pairs ("cluster"), ids compared in
     * Spark SQL's ordering for their type (strings in UTF-8 byte order, as
     * SQL `min` orders them). Small edge lists run a driver union-find;
-    * larger ones min-label propagation + pointer jumping,
-    * O(log diameter) rounds, as a Pregel-style RDD loop whose edge table
-    * is hash-partitioned once and never re-shuffled ([[clustersRddLoop]]);
-    * duplicate clusters are shallow in practice so this converges in a
-    * handful of rounds. Both paths key ids by their internal value, so
-    * any atomic id type with value equality works (integral, string,
-    * date, ...); binary and complex ids fail up front, and a null id fails
-    * on either path. `pairs` is executed at most once: an uncached input
-    * is cached for the call and unpersisted before returning; a frame the
-    * caller persisted or checkpointed is read as is and left to the caller.
+    * larger ones min-label propagation + pointer jumping, O(log diameter)
+    * rounds, as a vertex program on the graph operators' loop
+    * ([[Graphs.components]]: the undirected pair adjacency is built once,
+    * and each round moves ≤ P² label blocks per shuffle). Duplicate
+    * clusters are shallow in practice, so this converges in a handful of
+    * rounds; if `maxIterations` rounds pass without convergence the call
+    * raises an IllegalStateException rather than return unconverged
+    * labels. Any atomic id type with value equality works (integral,
+    * string, date, timestamp, decimal, ...); binary and complex ids fail
+    * up front, and a null id fails on either path. `pairs` is executed at
+    * most once: an uncached input is cached for the call and unpersisted
+    * before returning; a frame the caller persisted or checkpointed is
+    * read as is and left to the caller.
     *
-    * @param reliableCheckpoint when true, iteration state checkpoints to the
-    *                            cluster-durable checkpoint dir (set
-    *                            `sc.setCheckpointDir` first) instead of
-    *                            executor-local storage — localCheckpoint is
-    *                            faster but an executor loss aborts the job,
-    *                            so flip this on for long multi-hour runs on
-    *                            a real cluster.
+    * @param reliableCheckpoint when true, the distributed path writes its
+    *                            label state to the cluster-durable
+    *                            checkpoint dir every round (set
+    *                            `sc.setCheckpointDir` first), bounding the
+    *                            lineage a lost executor replays — for long
+    *                            multi-hour runs on a real cluster. When
+    *                            false, each round's state is cached and the
+    *                            lineage is kept.
     * @param smallGraphThreshold pair counts at or below this run a driver
     *                            union-find on the collected edge list instead
-    *                            of iterative join rounds. Near-dup edge lists
+    *                            of iterative rounds. Near-dup edge lists
     *                            are tiny relative to the corpus (the 100 TB
     *                            corpus is what stays distributed — dedup
     *                            already reduced it to pairs), so this is the
@@ -665,7 +669,7 @@ object Dedup {
       require(sc.getCheckpointDir.isDefined,
         "reliableCheckpoint=true needs sc.setCheckpointDir(<cluster-durable path>)")
     val idType = pairs.schema("id_a").dataType
-    // both paths hash and compare ids by their internal value
+    // both paths key and compare ids by their value
     require(TypeUtils.typeWithProperEquals(idType),
       s"clusters: id type ${idType.simpleString} has no value equality")
 
@@ -688,7 +692,7 @@ object Dedup {
     // `dedup.clusters: driver union-find` (the probe, which collects the
     // whole edge list when it is small) or `dedup.clusters: distributed,
     // <R> rounds` (R counts the rounds started so far, so the last job
-    // carries the total)
+    // carries the total; `0 rounds: adjacency` is the edge exchange)
     try describing(sc, "dedup.clusters") { describe =>
       // limit-bounded probe: fetches at most threshold+1 rows, so deciding
       // the path never materializes a billion-edge list on the driver.
@@ -705,8 +709,7 @@ object Dedup {
       complete match {
         case Some(sample) => clustersOnDriver(pairs.sparkSession, sample, idType)
         case None =>
-          describe("distributed, 0 rounds")
-          clustersRddLoop(ids, maxIterations, reliableCheckpoint, () => releaseOwnCache(), describe)
+          Graphs.components(ids, maxIterations, reliableCheckpoint, () => releaseOwnCache(), describe)
       }
     } finally releaseOwnCache() // a no-op once released
   }
@@ -726,8 +729,8 @@ object Dedup {
     finally sc.setLocalProperty(JobDescription, prior)
   }
 
-  /** Reads a row's `(id_a, id_b)` as internal values, the keys both
-    * [[clusters]] paths hash and order; a null id fails the call. */
+  /** Reads a row's `(id_a, id_b)` as internal values, the keys the
+    * driver union-find hashes and orders; a null id fails the call. */
   private def idPair(idType: DataType): Row => (Any, Any) = {
     val toInternal = CatalystTypeConverters.createToCatalystConverter(idType)
     r => {
@@ -737,7 +740,7 @@ object Dedup {
   }
 
   /** The `(id, cluster)` schema of [[clusters]]' result. */
-  private def clusterSchema(idType: DataType) = {
+  private[operators] def clusterSchema(idType: DataType) = {
     import org.apache.spark.sql.types.{StructField, StructType}
     StructType(Seq(StructField("id", idType, nullable = false),
       StructField("cluster", idType, nullable = false)))
@@ -746,7 +749,7 @@ object Dedup {
   /** Driver union-find with path halving over the complete, collected edge
     * list; O(E α(E)) on ≤ threshold edges. Ids are keyed by their internal
     * value and unioned by MIN root under Spark SQL's ordering, so the final
-    * label is the min reachable id, matching [[clustersRddLoop]]. */
+    * label is the min reachable id, matching [[Graphs.components]]. */
   private def clustersOnDriver(spark: org.apache.spark.sql.SparkSession,
                                sample: Array[Row], idType: DataType): DataFrame = {
     val read = idPair(idType)
@@ -776,110 +779,6 @@ object Dedup {
     import scala.jdk.CollectionConverters._
     val rows = ids.asScala.toSeq.map(id => Row(toScala(id), toScala(find(id))))
     spark.createDataFrame(rows.asJava, clusterSchema(idType))
-  }
-
-  /** Distributed label propagation + pointer jumping as a Pregel-style RDD
-    * loop, keyed by the ids' internal values and ordered by Spark SQL's
-    * ordering for their type. Two properties a per-round DataFrame loop
-    * cannot offer:
-    *
-    *  - the symmetric edge table is hash-partitioned ONCE and every
-    *    per-round join against it is partitioner-aligned — zero edge
-    *    shuffles after round 0, only O(V) label rows move per round;
-    *  - the loop body is fixed closures — no per-round Catalyst
-    *    optimization or codegen compilation (measured ~300 ms/round of
-    *    pure planning latency at sf0.1).
-    *
-    * Each node takes the min label among itself and its neighbors, then
-    * pointer-jumps through its new label's new label; converged when a
-    * full round changes nothing. The convergence count rides a
-    * LongAccumulator evaluated during the round's single materializing
-    * action (task retries can only inflate it, and only `== 0` is tested,
-    * so retries are safe). `releaseInput` runs once the edge table holds
-    * the pair list; `describe` labels each round's jobs. */
-  private def clustersRddLoop(ids: DataFrame, maxIterations: Int,
-                              reliableCheckpoint: Boolean,
-                              releaseInput: () => Unit,
-                              describe: String => Unit): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    val spark = ids.sparkSession
-    val idType = ids.schema("id_a").dataType
-    val ord = TypeUtils.getInterpretedOrdering(idType)
-    val read = idPair(idType)
-
-    val width = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    val part = new HashPartitioner(width)
-    def ckptRdd[T](r: RDD[T]): RDD[T] = {
-      if (reliableCheckpoint) r.checkpoint() else r.localCheckpoint()
-      r
-    }
-
-    // the ONLY edge shuffle of the whole loop; persisted before the
-    // checkpoint, so a reliable checkpoint's write reads the cache instead
-    // of re-running the upstream. Tracked: a call that fails mid-loop
-    // leaves it to releaseCaches.
-    val edges = track(ids.rdd
-      .flatMap { r =>
-        val (a, b) = read(r)
-        Iterator((a, b), (b, a))
-      }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    // the "0 rounds" job: materializes the edge table, after which the
-    // rounds never touch the pair list again
-    val nEdges = ckptRdd(edges).count()
-    releaseInput()
-
-    // keys are co-located by `part`, so a per-partition distinct is global
-    var labels: RDD[(Any, Any)] = edges
-      .mapPartitions({ it =>
-        val seen = new java.util.HashSet[Any]()
-        it.collect { case (k, _) if seen.add(k) => (k, k) }
-      }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var converged = nEdges == 0L
-    var i = 0
-    while (!converged && i < maxIterations) {
-      describe(s"distributed, ${i + 1} rounds")
-      // neighbor min: edges join labels is partitioner-aligned (narrow);
-      // only the (dst, label) messages shuffle, V rows not E
-      val nbrMin = edges.join(labels)
-        .map { case (_, (dst, srcLabel)) => (dst, srcLabel) }
-        .reduceByKey(part, ord.min(_, _))
-      // min(self, neighbors), carrying the pre-round label for convergence
-      val l1 = labels.join(nbrMin)
-        .mapValues { case (old, nbr) => (ord.min(old, nbr), old) }
-      // pointer jump: follow the new label's new label (path compression)
-      val byLabel = l1.map { case (node, (lab, old)) => (lab, (node, old)) }
-      val justLabels = l1.mapValues(_._1)
-      val changedAcc = spark.sparkContext.longAccumulator
-      val next = byLabel.join(justLabels, part)
-        .map { case (_, ((node, old), labOfLab)) =>
-          if (labOfLab != old) changedAcc.add(1L)
-          (node, labOfLab)
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // checkpoint truncates lineage (each round otherwise nests all
-      // previous rounds); count() is the round's single action and also
-      // populates the accumulator
-      ckptRdd(next).count()
-      labels.unpersist(blocking = false)
-      labels = next
-      converged = changedAcc.value == 0L
-      i += 1
-    }
-    // the final labels RDD backs the returned frame (its localCheckpoint
-    // blocks ARE the data) — released via Dedup.releaseCaches(). Without a
-    // round, the labels still read the edge table, which then stays too.
-    if (i > 0) edges.unpersist(blocking = false)
-    track(labels)
-    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
-    spark.createDataFrame(labels.map { case (id, c) =>
-      Row(toScala(id), toScala(c))
-    }, clusterSchema(idType))
   }
 
   /** End-to-end near-duplicate removal: MinHash-LSH pairs → connected

@@ -2,10 +2,16 @@ package graft.operators
 
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, MicrosToTimestamp}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType, TimestampType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed graph analytics over edge DataFrames.
   *
@@ -22,12 +28,19 @@ import org.apache.spark.storage.StorageLevel
   * every per-round join/merge narrow (measured 7.2 → ~2.5 s on the
   * pageRank gate when this file made that switch).
   *
-  * All four are vertex programs (Pregel: init, message, combine,
-  * update, halt) on ONE loop: a packed adjacency ([[buildAdj]]), its
-  * node set ([[nodeSet]]), the message step ([[messages]]), the round
-  * driver ([[iterate]]) and the result frame ([[resultFrame]]). Each
-  * operator supplies only its initial state, its message and combiner,
-  * its update and its halt check.
+  * All four, and [[Dedup.clusters]]' distributed path ([[components]]),
+  * are vertex programs (Pregel: init, message, combine, update, halt) on
+  * ONE loop: a packed adjacency ([[buildAdj]]), its node set
+  * ([[nodeSet]]), the message step ([[messages]]), the block shuffle
+  * ([[exchange]]), the round driver ([[iterate]]) and the result frame
+  * ([[resultFrame]]). Each operator supplies only its initial state, its
+  * message and combiner, its update and its halt check. Every node
+  * routes to the partition Spark SQL's own hash partitioning gives its
+  * key ([[homeOf]]). The round driver persists each round's state when
+  * the operator checks a halt condition, and cuts the lineage with a
+  * reliable checkpoint every `checkpointEvery` rounds (every round for
+  * clusters with `reliableCheckpoint`); an operator that stops at its
+  * round cap unconverged says so (clusters raises).
   *
   * State and messages move as one block per partition, not one object
   * per node or message (Pregel's combiners, GraphX's array-backed vertex
@@ -39,32 +52,21 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graphs {
 
-  /** SQL-compatible node partitioner (round 15): routes a node STRING
-    * to the partition Spark SQL's `repartition(n, col)` sends rows
-    * whose repartition column holds that string —
-    * `pmod(murmur3(utf8 bytes, seed 42), n)`, the exact
-    * `HashPartitioning.partitionIdExpression`. This is what lets the
-    * adjacency arrive PRE-ROUTED from one UnsafeRow SQL exchange
-    * ([[buildAdj]]) while the |V|-sized state blocks land on the SAME
-    * layout: the old build shuffle — ((String, String), w) tuples
-    * through the Java serializer, measured as the single heaviest step
-    * of every graph gate — is gone entirely, and the per-round
-    * zipPartitions merges stay narrow by construction. */
-  private[operators] final class SqlHashPartitioner(val n: Int)
-      extends org.apache.spark.Partitioner {
-    override def numPartitions: Int = n
-    override def getPartition(key: Any): Int = {
-      val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-        .hash(org.apache.spark.unsafe.types.UTF8String
-            .fromString(key.asInstanceOf[String]), StringType, 42L).toInt
-      val m = h % n
-      if (m < 0) m + n else m
-    }
-    override def equals(o: Any): Boolean = o match {
-      case p: SqlHashPartitioner => p.n == n
-      case _ => false
-    }
-    override def hashCode: Int = n
+  /** The node partition of a key among `n`: the partition Spark SQL's
+    * `repartition(n, col)` sends a row whose column holds that string,
+    * by Spark's own `HashPartitioning.partitionIdExpression`, evaluated
+    * interpreted (no generated class). This is what lets the adjacency
+    * arrive PRE-ROUTED from one UnsafeRow SQL exchange ([[buildAdj]])
+    * while the |V|-sized state blocks land on the SAME layout, so the
+    * per-round zipPartitions merges stay narrow. A misroute would need a
+    * different partition count, which zipPartitions rejects. Callers
+    * route each distinct key once; the function reuses one row, so each
+    * task makes its own. */
+  private[operators] def homeOf(n: Int): String => Int = {
+    val at = HashPartitioning(Seq(BoundReference(0, StringType, nullable = false)), n)
+      .partitionIdExpression
+    val row = new GenericInternalRow(1)
+    s => { row.update(0, UTF8String.fromString(s)); at.eval(row).asInstanceOf[Int] }
   }
 
   /** Builds the dict-packed, src-routed adjacency with NO RDD shuffle:
@@ -76,10 +78,9 @@ object Graphs {
     * keep-first for the reachability loops, min/sum for the weighted
     * ones), so the old DISTINCT-then-shuffle and the Java-serialized
     * ((String, String), w) reduceByKey are both gone. Partition i holds
-    * exactly the srcs [[SqlHashPartitioner]] routes to i (the explicit
-    * partition count pins the layout — AQE never coalesces
-    * REPARTITION_BY_NUM exchanges; [[checkRouted]] fails the build
-    * otherwise), so the state loops zip against it narrowly. `checkW`
+    * exactly the srcs [[homeOf]] routes to i (the explicit partition
+    * count pins the layout — AQE never coalesces REPARTITION_BY_NUM
+    * exchanges), so the state loops zip against it narrowly. `checkW`
     * validates weights executor-side, where the data is. */
   private def buildAdj(e: DataFrame, undirected: Boolean, weighted: Boolean,
                        merge: (Double, Double) => Double, n: Int,
@@ -95,10 +96,9 @@ object Graphs {
         e.select(explode(array(s("src", "dst"), s("dst", "src"))).as("e"))
           .select(base.map(c => col(s"e.$c").as(c)): _*)
       }
-    val part = new SqlHashPartitioner(n)
     doubled.repartition(n, col("src")).queryExecution.toRdd
-      .mapPartitionsWithIndex { (i, it) =>
-        val b = new PackBuilder(weighted, merge, part, i)
+      .mapPartitions { it =>
+        val b = new PackBuilder(weighted, merge, homeOf(n))
         it.foreach { r =>
           val w = if (weighted) r.getDouble(2) else 0.0
           if (checkW ne null) checkW(w)
@@ -106,18 +106,6 @@ object Graphs {
         }
         b.result()
       }
-  }
-
-  /** The runtime half of the layout contract above: raises when a src
-    * node arrives in adjacency partition `i` although `part` routes it to
-    * another partition. The state loops zip partition i against it
-    * narrowly, so a misrouted node would silently lose its state instead
-    * of failing. [[PackBuilder]] calls it once per distinct src per
-    * build, never per iteration. */
-  private[operators] def checkRouted(part: SqlHashPartitioner, node: String, i: Int): Unit = {
-    val j = part.getPartition(node)
-    if (j != i) throw new IllegalStateException(
-      s"buildAdj: node $node arrived in partition $i, SqlHashPartitioner routes it to $j")
   }
 
   /** Dictionary-packed adjacency partition — what the |E|-sized
@@ -138,18 +126,17 @@ object Graphs {
     def size: Int = src.length
   }
 
-  /** Packs adjacency partition `i` under `part`. `mergeDup`: duplicate
-    * `(src, dst)` pairs collapse into their first occurrence's slot,
+  /** Packs one adjacency partition, each dict entry routed by `home`.
+    * `mergeDup`: duplicate `(src, dst)` pairs collapse into their first
+    * occurrence's slot,
     * weights merged by the function — the pack is where the edge multiset
     * dedups, since the input arrives as a raw (possibly doubled) row
     * stream. Dict and edge index are primitive open-addressing tables
     * ([[StringIds]], [[LongSlots]]): no boxed key per edge. */
   private[operators] final class PackBuilder(weighted: Boolean,
                                              mergeDup: (Double, Double) => Double,
-                                             part: SqlHashPartitioner, i: Int) {
+                                             home: String => Int) {
     private val dict = new StringIds
-    // dict ids already checked by checkRouted
-    private val srcSeen = new java.util.BitSet()
     // (srcId << 32 | dstId) -> edge slot, for the duplicate merge
     private val edges = new LongSlots
     // unweighted packs never touch the weight array — no transient
@@ -157,7 +144,6 @@ object Graphs {
     private var wA = if (weighted) new Array[Double](64) else Array.emptyDoubleArray
     def add(s: String, d: String, weight: Double): Unit = {
       val si = dict.add(s); val di = dict.add(d)
-      if (!srcSeen.get(si)) { srcSeen.set(si); checkRouted(part, s, i) }
       val n = edges.size
       val at = edges.slot(si.toLong << 32 | (di & 0xffffffffL))
       if (weighted) {
@@ -177,7 +163,7 @@ object Graphs {
           Array.tabulate(n)(e => (edges.key(e) >>> 32).toInt),
           Array.tabulate(n)(e => edges.key(e).toInt),
           if (weighted) java.util.Arrays.copyOf(wA, n) else Array.emptyDoubleArray,
-          keys.map(part.getPartition)))
+          keys.map(home)))
       }
   }
 
@@ -368,7 +354,7 @@ object Graphs {
 
     val base = (1.0 - damping) / n
     val init = nodes.map(ids => new Block(ids, Array.fill(ids.size)(1.0 / n), null))
-    val ranks = iterate("pageRank", init, iterations, checkpointEvery)(roundJob = None) { rk =>
+    val ranks = iterate("graphs.pageRank", init, iterations, checkpointEvery)(roundJob = None) { rk =>
       val in = messages(rk, adj, nParts, _ + _)(tag = null)((r, k, p, i) => r(k) * p.w(i))
       // narrow merge onto the node set: no-inbound nodes get base rank.
       // It zips the cached nodes, not the previous ranks, so the lazy
@@ -488,7 +474,7 @@ object Graphs {
     new ShuffledRDD[Int, Msgs, Msgs](blocks, new HashPartitioner(n))
       .mapPartitions(it => Iterator(it.map(_._2).toArray.sortBy(_.from)))
 
-  /** Routes strings to the node partition [[SqlHashPartitioner]] sends
+  /** Routes strings to the node partition [[homeOf]] sends
     * each to, where each is kept once: one [[StringIds]] per partition.
     * A map task hands in its strings with their partitions. The node set
     * of an adjacency (its dicts: each partition's dict IS its unique
@@ -510,7 +496,7 @@ object Graphs {
 
   /** The message step of every vertex program. State partition i zips
     * with adjacency partition i: both are routed by the node partitioner
-    * ([[SqlHashPartitioner]]), so the zip is narrow. Each src resolves
+    * ([[homeOf]]), so the zip is narrow. Each src resolves
     * its state id once per DICT ENTRY into an array, so the edge loop
     * reads the array instead of probing per edge. Every out-edge `i` of
     * a sending src with state id `k` sends `send(values, k, p, i)`,
@@ -579,12 +565,13 @@ object Graphs {
     * cut (from the fresh cache), and materializes it. Every persist
     * joins [[Dedup.track]] when it is made, so a loop that fails mid-call
     * leaves nothing [[Dedup.releaseCaches]] cannot reach. The round's
-    * jobs are described `graphs.<op>: round <k>`, and the caller's
-    * description is back when the driver returns. Stops after
-    * `maxRounds` rounds. */
-  private def iterate[B](op: String, init: RDD[B], maxRounds: Int, checkpointEvery: Int)(
+    * jobs are described `<job>: <label(k)>` (`graphs.<op>: round <k>`
+    * for the graph operators), and the caller's description is back when
+    * the driver returns. Stops after `maxRounds` rounds. */
+  private def iterate[B](job: String, init: RDD[B], maxRounds: Int, checkpointEvery: Int,
+                         label: Int => String = k => s"round $k")(
       roundJob: Option[RDD[B] => Boolean])(step: RDD[B] => RDD[B]): RDD[B] =
-    Dedup.describing(init.sparkContext, s"graphs.$op") { describe =>
+    Dedup.describing(init.sparkContext, job) { describe =>
       var state = init
       var round = 0
       var halted = false
@@ -595,7 +582,7 @@ object Graphs {
         if (roundJob.isDefined || cut) {
           Dedup.track(next.persist(StorageLevel.MEMORY_AND_DISK))
           if (cut) next.checkpoint()
-          describe(s"round $round")
+          describe(label(round))
           halted = roundJob.fold { next.count(); false }(_(next))
           state.unpersist(blocking = false) // a no-op on an unpersisted state
         }
@@ -810,7 +797,6 @@ object Graphs {
                     sources: DataFrame, nodeCol: String, maxRounds: Int,
                     checkpointEvery: Int, step: Send[Array[Double]],
                     distType: DataType): DataFrame = {
-    val part = new SqlHashPartitioner(nParts)
     val adj = Dedup.track(adj0.persist(StorageLevel.MEMORY_AND_DISK))
     val seeds = sources.select(col(nodeCol).cast("string"))
       .where(col(nodeCol).isNotNull)
@@ -818,14 +804,14 @@ object Graphs {
         val ids = new StringIds
         it.foreach(r => ids.add(r.getString(0)))
         val ks = ids.toArray
-        Iterator((ks, ks.map(part.getPartition)))
+        Iterator((ks, ks.map(homeOf(nParts))))
       }
     val init = Dedup.track(keySet(seeds, nParts).map { ids =>
       val all = new java.util.BitSet
       all.set(0, ids.size)
       new Block(ids, new Array[Double](ids.size), all)
     }.persist(StorageLevel.MEMORY_AND_DISK))
-    val dist = iterate(op, init, maxRounds, checkpointEvery)(
+    val dist = iterate(s"graphs.$op", init, maxRounds, checkpointEvery)(
         roundJob = Some(_.map(_.frontier.isEmpty).fold(true)(_ && _))) { state =>
       val relaxed = messages(state, adj, nParts, math.min(_: Double, _: Double))(tag = null)(step)
       // narrow merge: candidates against settled distances; the ids a
@@ -905,7 +891,7 @@ object Graphs {
     val init = nodes.map(ids => new Block(ids, ids.toArray, null))
     // the round's job only materializes the labels, so that the previous
     // ones can go: a fixed round count never halts early
-    val labels = iterate("labelPropagation", init, rounds, checkpointEvery)(
+    val labels = iterate("graphs.labelPropagation", init, rounds, checkpointEvery)(
         roundJob = Some { next => next.count(); false }) { labels =>
       val counts = messages(labels, adj, nParts, _ + _)(_(_))((_, _, _, _) => 1.0)
       labels.zipPartitions(counts) { (lit, mit) =>
@@ -930,5 +916,129 @@ object Graphs {
     adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     resultFrame(spark, labels, "label", StringType)(_(_))
+  }
+
+  /** Connected components by min-label propagation with pointer jumping
+    * (Shiloach–Vishkin shortcutting): the distributed path of
+    * [[Dedup.clusters]], a vertex program on the same loop. `ids` holds
+    * `(id_a, id_b)` of one atomic type, and each id becomes a node key:
+    * a string injective under the ids' value equality — the id cast to
+    * a string, or a timestamp's epoch microseconds, since a timestamp's
+    * string form repeats across a DST fall-back. Labels compare by Spark
+    * SQL's ordering of the ids they stand for ([[idOf]]), so a
+    * component converges to its `min(id)` whatever the id type.
+    *
+    * The adjacency is the undirected [[buildAdj]] (self-pairs keep an
+    * isolated id). A round is three block shuffles, ≤ P² records each:
+    * the frontier sends its labels along its edges and each node keeps
+    * the least label it hears ([[messages]], [[inbox]]); then each node
+    * partition asks the home of every label it holds for that label's
+    * own label, and the answers come back in a second block shuffle
+    * (pointer jumping). The frontier is the set of nodes a round
+    * changed: a node that kept its label has told its neighbors already.
+    * The loop halts after a round that changes nothing, and raises if
+    * `maxRounds` rounds pass without one — unconverged labels are no
+    * answer. `reliable` cuts the lineage with a reliable checkpoint
+    * every round. Jobs are described through `describe`: `distributed,
+    * 0 rounds: adjacency` (the SQL exchange), `distributed, 0 rounds`
+    * (the adjacency and initial labels materialized, after which
+    * `releaseInput` runs), then `distributed, <r> rounds` for round r. */
+  private[operators] def components(ids: DataFrame, maxRounds: Int, reliable: Boolean,
+                                    releaseInput: () => Unit,
+                                    describe: String => Unit): DataFrame = {
+    val spark = ids.sparkSession
+    val idType = ids.schema("id_a").dataType
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    val nParts = spark.sessionState.conf.numShufflePartitions
+    def key(c: Column) = coalesce(
+      (if (idType == TimestampType) unix_micros(c) else c).cast(StringType),
+      raise_error(lit("clusters: id_a/id_b must not be null")))
+    describe("distributed, 0 rounds: adjacency")
+    val adj = Dedup.track(buildAdj(ids.select(key(col("id_a")).as("src"), key(col("id_b")).as("dst")),
+      undirected = true, weighted = false, (a, _) => a, nParts).persist(StorageLevel.MEMORY_AND_DISK))
+    val init = Dedup.track(nodeSet(adj, nParts)
+      .map(keys => new Block(keys, keys.toArray, null)).persist(StorageLevel.MEMORY_AND_DISK))
+    describe("distributed, 0 rounds")
+    init.count()
+    releaseInput()
+
+    var converged = false
+    val labels = iterate("dedup.clusters", init, maxRounds, if (reliable) 1 else 0,
+        r => s"distributed, $r rounds")(roundJob = Some { next =>
+      converged = next.map(_.frontier.isEmpty).fold(true)(_ && _)
+      converged
+    }) { state =>
+      val heard = messages(state, adj, nParts, (a, _) => a)(_(_))((_, _, _, _) => 0.0)
+      // each node's least label: its own or one it heard
+      val lowered = state.zipPartitions(heard) { (sit, mit) =>
+        val b = sit.next()
+        val id = idOf(idType, zone)
+        val ord = TypeUtils.getInterpretedOrdering(idType)
+        val (c, _) = inbox(b.ids, mit.next(), (a, _) => a)
+        val least = b.values.clone()
+        var s = 0
+        while (s < c.size) {
+          val k = c.node(s)
+          if (ord.lt(id(c.tag(s)), id(least(k)))) least(k) = c.tag(s)
+          s += 1
+        }
+        Iterator(new Block(b.ids, least, null))
+      }
+      // pointer jumping: each partition asks the homes of the labels it
+      // holds (its nodes' own keys aside) for their labels ...
+      val asks = exchange(lowered.mapPartitionsWithIndex { (j, it) =>
+        val b = it.next()
+        val asked = new StringIds
+        var k = 0
+        while (k < b.ids.size) { if (b.values(k) != b.ids.key(k)) asked.add(b.values(k)); k += 1 }
+        val ls = asked.toArray
+        val home = homeOf(nParts)
+        split(j, nParts, ls.length)(s => home(ls(s)), ls(_), null, null)
+      }, nParts)
+      // ... each home answers from its own lowered labels ...
+      val answers = exchange(lowered.zipPartitions(asks) { (bit, ait) =>
+        val b = bit.next()
+        val t = TaskContext.getPartitionId()
+        ait.next().iterator.map(m =>
+          (m.from, new Msgs(t, m.keys, m.keys.map(l => b.values(b.ids.id(l))), null)))
+      }, nParts)
+      // ... and each node takes its label's label; the frontier is the
+      // nodes whose label moved this round
+      state.zipPartitions(lowered, answers) { (sit, lit, ait) =>
+        val old = sit.next().values
+        val b = lit.next()
+        val jump = new java.util.HashMap[String, String]
+        ait.next().foreach(m => m.keys.indices.foreach(i => jump.put(m.keys(i), m.tags(i))))
+        val next = b.values.map(l => jump.getOrDefault(l, l))
+        val moved = new java.util.BitSet
+        next.indices.foreach(k => if (next(k) != old(k)) moved.set(k))
+        Iterator(new Block(b.ids, next, moved))
+      }
+    }
+    adj.unpersist(blocking = false)
+    if (!converged) {
+      labels.unpersist(blocking = false)
+      throw new IllegalStateException(
+        s"clusters: labels still changed after maxIterations = $maxRounds rounds")
+    }
+    spark.createDataFrame(labels.mapPartitions { it =>
+      val id = idOf(idType, zone)
+      val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+      it.flatMap(b => Iterator.tabulate(b.ids.size)(k =>
+        Row(toScala(id(b.ids.key(k))), toScala(id(b.values(k))))))
+    }, Dedup.clusterSchema(idType))
+  }
+
+  /** The internal id value a [[components]] node key stands for — the
+    * inverse of its key: Spark's own cast back from the string, or the
+    * timestamp of the epoch microseconds. Interpreted, with one reused
+    * row, so each task makes its own. */
+  private def idOf(idType: DataType, zone: String): String => Any = {
+    val ref = BoundReference(0, StringType, nullable = false)
+    val back =
+      if (idType == TimestampType) MicrosToTimestamp(Cast(ref, LongType))
+      else Cast(ref, idType, Some(zone))
+    val row = new GenericInternalRow(1)
+    s => { row.update(0, UTF8String.fromString(s)); back.eval(row) }
   }
 }

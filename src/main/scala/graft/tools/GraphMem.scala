@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc cache-footprint probe for the graph loops: runs the
   * q_pagerank/q_graph_bfs-shaped builds at a given SF dir and prints
   * each persisted RDD's in-memory size — how the round-14 dict-packed
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   * measured. Usage: `runMain graft.tools.GraphMem <sfDir>`. */
 object GraphMem {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-graph-mem")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = LocalSession("graft-graph-mem", shufflePartitions = Some(32))
     try {
       val dir = args(0)
       // the frames stay reachable until the listing below: a graph result

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round measurement aid: writes `.explain("formatted")`
@@ -16,15 +15,7 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val filter = args.lift(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-plan-dump")
     Files.createDirectories(Paths.get(outDir))
     graft.SparkEntry.queries
       .filter { case (n, _) => filter.forall(f => n.matches(f)) }

@@ -181,6 +181,59 @@ class DedupSpec extends SparkTestBase {
     assert(driver(41L) == 1L && driver(103L) == 100L && driver(202L) == 200L)
   }
 
+  test("clusters raises when maxIterations runs out before the labels converge") {
+    // a 64-node chain cannot converge in one round: unconverged labels
+    // must not come back as the answer
+    val long = (1L to 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.clusters(long, maxIterations = 1, smallGraphThreshold = 0))
+    assert(e.getMessage.contains("maxIterations = 1"), e.getMessage)
+    // a 41-node chain converges within the default 20
+    val chain = (1L to 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val got = Dedup.clusters(chain, smallGraphThreshold = 0).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 41L).map(_ -> 1L).toMap)
+    Dedup.releaseCaches(); Dedup.releaseResults()
+  }
+
+  test("the distributed clusters path labels like the driver union-find for every id type") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val rnd = new scala.util.Random(97)
+    // UTF-8 and UTF-16 order these differently (see the UTF-8 spec above)
+    val utf = Seq("\uD83D\uDE00b", "\uE000x", "\uFF5Aa", "a", "\uD83D\uDE00b2", "é", "ñ", "\uD83D\uDE01")
+    // 01:30 EDT and 01:30 EST: one hour apart, one local time in New York
+    val fallBack = Seq("2021-11-07T05:30:00Z", "2021-11-07T06:30:00Z")
+      .map(t => java.sql.Timestamp.from(java.time.Instant.parse(t)))
+    val day0 = java.time.LocalDate.of(1990, 1, 1)
+    val pools = Seq[(DataType, Seq[Any])](
+      LongType -> Seq.fill(40)(rnd.nextLong() % 1000000L),
+      IntegerType -> Seq.fill(40)(rnd.nextInt(1000) - 500),
+      StringType -> (utf ++ Seq.fill(30)(rnd.alphanumeric.take(1 + rnd.nextInt(3)).mkString)),
+      DateType -> Seq.fill(40)(java.sql.Date.valueOf(day0.plusDays(rnd.nextInt(20000).toLong))),
+      DecimalType(10, 2) -> Seq.fill(40)(java.math.BigDecimal.valueOf(rnd.nextInt(2000000) - 1000000L, 2)),
+      DoubleType -> Seq.fill(40)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(20) - 10)),
+      TimestampType -> (fallBack ++ Seq.fill(40)(new java.sql.Timestamp(rnd.nextLong() % 4000000000000L))))
+    val conf = spark.conf
+    val zone = conf.get("spark.sql.session.timeZone")
+    conf.set("spark.sql.session.timeZone", "America/New_York")
+    try for ((t, values) <- pools; trial <- 0 until 3) {
+      val pool = values.distinct.toIndexedSeq
+      def any = pool(rnd.nextInt(pool.size))
+      val pairs = Seq.fill(10 + rnd.nextInt(50))(Row(any, any)) ++
+        (if (t == TimestampType) fallBack.map(Row(_, any)) else Nil)
+      val df = spark.createDataFrame(pairs.asJava,
+        StructType(Seq(StructField("id_a", t), StructField("id_b", t))))
+      def labels(threshold: Long) = Dedup.clusters(df, smallGraphThreshold = threshold)
+        .collect().map(r => r.get(0) -> r.get(1)).toMap
+      val driver = labels(1L << 20)
+      assert(labels(0L) == driver, s"$t trial $trial")
+      if (t == TimestampType) assert(fallBack.forall(driver.contains))
+    } finally conf.set("spark.sql.session.timeZone", zone)
+    Dedup.releaseCaches(); Dedup.releaseResults()
+  }
+
   test("string-id pair lists take the distributed path and still label correctly") {
     val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_a", "id_b")
     // the default threshold runs the driver union-find on string ids too;

@@ -471,7 +471,8 @@ class GraphsSpec extends SparkTestBase {
   }
 
   /** Each graph operator on a random graph of 300 nodes, with the number
-    * of block shuffles it runs: the node or seed set, then one per round. */
+    * of block shuffles it runs: the node or seed set, then one per round
+    * (three for clusters' distributed path: labels, asks, answers). */
   private lazy val loops: Seq[(String, () => DataFrame, Int)] = {
     val rnd = new scala.util.Random(19)
     val edges = (1 to 2000).map(_ =>
@@ -484,7 +485,10 @@ class GraphsSpec extends SparkTestBase {
       ("labelPropagation", () => Graphs.labelPropagation(plain, "s", "t", rounds = 2), 1 + 2),
       ("bfs", () => Graphs.bfs(plain, "s", "t", sources, "node", maxHops = 3), 1 + 3),
       ("shortestPaths", () => Graphs.shortestPaths(weighted, "s", "t", "w", sources, "node",
-        maxIter = 3), 1 + 3))
+        maxIter = 3), 1 + 3),
+      // four rounds, the last of which moves no label
+      ("clusters", () => Dedup.clusters(plain.toDF("id_a", "id_b"), smallGraphThreshold = 0),
+        1 + 3 * 4))
   }
 
   test("each graph loop keeps only the RDDs behind its result") {
@@ -522,7 +526,7 @@ class GraphsSpec extends SparkTestBase {
 
   test("the pack builder merges duplicate (src, dst) edges like a plain-Scala model") {
     // one partition, so every node routes home
-    val part = new Graphs.SqlHashPartitioner(1)
+    val home = Graphs.homeOf(1)
     val rnd = new scala.util.Random(41)
     val merges = Seq[(String, (Double, Double) => Double)](
       "keep-first" -> ((a, _) => a), "min" -> (math.min(_, _)), "sum" -> (_ + _))
@@ -530,7 +534,7 @@ class GraphsSpec extends SparkTestBase {
       val nodes = 1 + rnd.nextInt(25)
       val edges = Seq.fill(rnd.nextInt(300))(
         (s"v${rnd.nextInt(nodes)}", s"v${rnd.nextInt(nodes)}", (1 + rnd.nextInt(9)) / 3.0))
-      val b = new Graphs.PackBuilder(weighted = true, merge, part, 0)
+      val b = new Graphs.PackBuilder(weighted = true, merge, home)
       edges.foreach { case (s, d, w) => b.add(s, d, w) }
       val packs = b.result().toSeq
       val got = packs.flatMap(p =>
@@ -558,10 +562,10 @@ class GraphsSpec extends SparkTestBase {
     assert(sc.getPersistentRDDs.keySet == baseline)
   }
 
-  test("SqlHashPartitioner routes every string where repartition(n, col) sends it") {
+  test("homeOf routes every string where repartition(n, col) sends it") {
     // the graph loops zip SQL-exchanged adjacency against RDD state routed
-    // by this partitioner; if a Spark upgrade changes HashPartitioning's
-    // formula, this fails instead of the loops silently misrouting state
+    // by homeOf, which evaluates Spark's own partition-id expression: the
+    // two must agree on every string, whatever Spark's formula is
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val nonAscii = Gen.oneOf("é", "ß", "Ω", "ж", "中", "文", "😀", "𝄞", "\u0000", "ﬀ")
@@ -577,25 +581,14 @@ class GraphsSpec extends SparkTestBase {
       strings.exists(s => s.nonEmpty && s.forall(_ < '\u0080')))
     val df = strings.toDF("s")
     for (n <- Seq(1, 3, 4, 32)) {
-      val part = new Graphs.SqlHashPartitioner(n)
+      val home = Graphs.homeOf(n)
       val routed = df.repartition(n, col("s"))
         .select(col("s"), spark_partition_id().as("p")).collect()
       assert(routed.length == strings.size)
-      val wrong = routed.filter(r => part.getPartition(r.getString(0)) != r.getInt(1))
+      val wrong = routed.filter(r => home(r.getString(0)) != r.getInt(1))
       assert(wrong.isEmpty, s"n=$n: ${wrong.take(5).map(r =>
-        s"'${r.getString(0)}' -> spark ${r.getInt(1)}, partitioner ${part.getPartition(r.getString(0))}")
+        s"'${r.getString(0)}' -> spark ${r.getInt(1)}, homeOf ${home(r.getString(0))}")
         .mkString("; ")}")
     }
-  }
-
-  test("buildAdj's routing guard fails loudly on a node in the wrong partition") {
-    val part = new Graphs.SqlHashPartitioner(4)
-    val node = "node-7"
-    val home = part.getPartition(node)
-    Graphs.checkRouted(part, node, home) // the partition it belongs to passes
-    val wrong = (home + 1) % 4
-    val e = intercept[IllegalStateException](Graphs.checkRouted(part, node, wrong))
-    assert(e.getMessage ==
-      s"buildAdj: node $node arrived in partition $wrong, SqlHashPartitioner routes it to $home")
   }
 }
