@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -128,55 +129,58 @@ object TextOps {
     (a, b)
   }
 
-  /** MinHash signature over lowercase char k-shingles.
-    * Shingle hashes are rolling (O(len)), then each of `num` permutations
-    * takes a min over affine transforms (O(distinct·num) adds, no re-hash):
-    * a repeated shingle cannot change any permutation's minimum, so the
-    * inner loop runs once per DISTINCT shingle — natural text repeats
-    * shingles heavily ("the ", boilerplate), making this a large win with
-    * bit-identical output. */
-  def minhashSignature(text: UTF8String, k: Int, num: Int): ArrayData = {
-    require(num <= MaxHashes, s"numHashes $num > $MaxHashes")
+  /** The distinct char k-shingle hashes of a text, sorted ascending: the
+    * one shingle set that [[minhashSignature]], [[sortedShingles]] and
+    * [[jaccardShingles]] measure. The text is lowercased (`Locale.ROOT`)
+    * and every window of k chars hashes to `mix64(polyHash(window))`. A
+    * non-empty text shorter than k is one shingle, [[hash64]] of the
+    * whole text (the single shingle a text of length k has), and an empty
+    * text has none; the DuckDB oracle of the dedup gates shingles short
+    * texts the same way (`ELSE [s]`). */
+  private def shingles(text: UTF8String, k: Int): Array[Long] = {
+    require(k >= 1, s"shingle size k must be >= 1, got $k")
     val s = text.toString.toLowerCase(java.util.Locale.ROOT)
-    val sig = new Array[Long](num)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    if (s.length >= k) {
-      val seen = new java.util.HashSet[java.lang.Long](math.min(s.length, 1 << 16))
-      var i = 0
-      val end = s.length - k
-      while (i <= end) {
-        val h = mix64(polyHash(s, i, i + k))
-        if (seen.add(h)) {
-          var j = 0
-          while (j < num) {
-            val v = h * hashA(j) + hashB(j)
-            if (v < sig(j)) sig(j) = v
-            j += 1
-          }
-        }
-        i += 1
-      }
+    val hs = new Array[Long](if (s.isEmpty) 0 else math.max(1, s.length - k + 1))
+    var i = 0
+    while (i < hs.length) { hs(i) = mix64(polyHash(s, i, math.min(i + k, s.length))); i += 1 }
+    java.util.Arrays.sort(hs)
+    var n = math.min(1, hs.length) // in-place unique
+    i = 1
+    while (i < hs.length) {
+      if (hs(i) != hs(n - 1)) { hs(n) = hs(i); n += 1 }
+      i += 1
     }
-    new GenericArrayData(sig)
+    if (n == hs.length) hs else java.util.Arrays.copyOf(hs, n)
   }
 
-  /** Distinct char k-shingle hashes of a text, sorted ascending — computed
-    * once per document so pairwise Jaccard refinement is a cheap merge
-    * instead of per-pair re-shingling. */
-  def sortedShingles(text: UTF8String, k: Int): ArrayData = {
-    val s = text.toString.toLowerCase(java.util.Locale.ROOT)
-    val set = new java.util.TreeSet[java.lang.Long]()
-    if (s.length >= k) {
-      var i = 0
-      val end = s.length - k
-      while (i <= end) { set.add(mix64(polyHash(s, i, i + k))); i += 1 }
-    } else if (s.nonEmpty) set.add(hash64(s))
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
+  /** MinHash signature over [[shingles]]: each of `num` permutations
+    * takes a min over affine transforms of the distinct shingle hashes
+    * (O(distinct·num) adds, no re-hash). A text without shingles (the
+    * empty text) signs as all `Long.MaxValue`. */
+  def minhashSignature(text: UTF8String, k: Int, num: Int): ArrayData = {
+    require(num >= 1 && num <= MaxHashes,
+      s"minhash_signature: num must be in [1, $MaxHashes], got $num")
+    val sh = shingles(text, k)
+    val sig = new Array[Long](num)
+    java.util.Arrays.fill(sig, Long.MaxValue)
     var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
+    while (i < sh.length) {
+      var j = 0
+      while (j < num) {
+        val v = sh(i) * hashA(j) + hashB(j)
+        if (v < sig(j)) sig(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
+
+  /** [[shingles]] as an array — computed once per document so pairwise
+    * Jaccard refinement is a cheap merge instead of per-pair
+    * re-shingling. */
+  def sortedShingles(text: UTF8String, k: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(shingles(text, k))
 
   /** Per-band hash of a minhash signature (band b = rows [b·r, (b+1)·r),
     * r = len/bands): the LSH bucket keys, one long per band. Native kernel
@@ -251,27 +255,32 @@ object TextOps {
     m.toDouble / n
   }
 
-  /** Jaccard of two sorted long arrays via linear merge (no allocation). */
-  def jaccardSorted(a: ArrayData, b: ArrayData): Double = {
+  /** |a ∩ b| of two sorted long arrays via linear merge (no allocation).
+    * The declared element type is nullable (file-source reads), and a null
+    * slot would read as 0L and fabricate matches: fail loudly instead. */
+  private def sortedIntersection(a: ArrayData, b: ArrayData, nullMessage: String): Int = {
     val na = a.numElements()
     val nb = b.numElements()
-    if (na == 0 && nb == 0) return 1.0
     var i = 0
     var j = 0
     var inter = 0
     while (i < na && j < nb) {
-      // nullable declared type (file-source reads) — a null slot would
-      // read as 0L and fabricate matches; fail loudly instead
-      require(!a.isNullAt(i) && !b.isNullAt(j),
-        "jaccard_sorted: null shingle-hash element")
+      require(!a.isNullAt(i) && !b.isNullAt(j), nullMessage)
       val x = a.getLong(i)
       val y = b.getLong(j)
       if (x == y) { inter += 1; i += 1; j += 1 }
       else if (x < y) i += 1
       else j += 1
     }
-    val union = na + nb - inter
-    if (union == 0) 1.0 else inter.toDouble / union
+    inter
+  }
+
+  /** Jaccard of two sorted distinct long arrays; two empty ones answer 1.0. */
+  def jaccardSorted(a: ArrayData, b: ArrayData): Double = {
+    val union = a.numElements() + b.numElements()
+    if (union == 0) return 1.0
+    val inter = sortedIntersection(a, b, "jaccard_sorted: null shingle-hash element")
+    inter.toDouble / (union - inter)
   }
 
   /** Exact CONTAINMENT |a ∩ b| / |a| of two sorted distinct hash sets —
@@ -282,43 +291,14 @@ object TextOps {
     * (nothing to contain). */
   def containmentSorted(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
-    val nb = b.numElements()
-    if (na == 0) return 0.0
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      require(!a.isNullAt(i) && !b.isNullAt(j), // see jaccardSorted note
-        "containment_sorted: null token-hash element")
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    inter.toDouble / na
+    if (na == 0) 0.0
+    else sortedIntersection(a, b, "containment_sorted: null token-hash element").toDouble / na
   }
 
-  /** Exact Jaccard similarity of the two texts' char k-shingle hash sets
-    * (refinement step after LSH candidate generation). */
-  def jaccardShingles(a: UTF8String, b: UTF8String, k: Int): Double = {
-    def shingleSet(t: UTF8String): java.util.HashSet[Long] = {
-      val s = t.toString.toLowerCase(java.util.Locale.ROOT)
-      val set = new java.util.HashSet[Long]()
-      var i = 0
-      val end = s.length - k
-      while (i <= end) { set.add(mix64(polyHash(s, i, i + k))); i += 1 }
-      set
-    }
-    val sa = shingleSet(a)
-    val sb = shingleSet(b)
-    if (sa.isEmpty && sb.isEmpty) return 1.0
-    var inter = 0
-    val it = sa.iterator()
-    while (it.hasNext) if (sb.contains(it.next())) inter += 1
-    val union = sa.size + sb.size - inter
-    if (union == 0) 1.0 else inter.toDouble / union
-  }
+  /** Exact Jaccard similarity of the two texts' [[shingles]] (refinement
+    * step after LSH candidate generation). */
+  def jaccardShingles(a: UTF8String, b: UTF8String, k: Int): Double =
+    jaccardSorted(sortedShingles(a, k), sortedShingles(b, k))
 
   // ------------------------------------------------- Unicode normalization
 

@@ -241,6 +241,10 @@ object Dedup {
     misses.unionByName(newFromHits).drop("__h")
   }
 
+  /** `_INDEX.json` tag of `TextOps.shingles`' rule; an index without it
+    * signed short texts as all `Long.MaxValue` and is refused. */
+  private val ShingleRule = "short_text_one_shingle"
+
   /** Builds the frozen MinHash near-dup index — the NEAR-duplicate analog
     * of [[dropSeen]]'s cross-snapshot shape, and the serving-path pattern
     * `VectorStorage` established for ANN: pay the signature pass ONCE
@@ -251,8 +255,8 @@ object Dedup {
     *                                  the self-contained refine payload
     *   path/bands/  (band, h, id)   — LSH bucket table, partitioned by
     *                                  band, h-sorted for row-group skips
-    *   path/_INDEX.json             — (shingleK, numHashes, bands); the
-    *                                  query path refuses a mismatch
+    *   path/_INDEX.json             — (shingleK, numHashes, bands, rule);
+    *                                  the query path refuses a mismatch
     *
     * One corpus scan builds both tables (the signature frame persists
     * across the two writes). */
@@ -277,7 +281,7 @@ object Dedup {
       val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val out = fs.create(manifest, false)
       try out.write(
-        s"""{"shingle_k": $shingleK, "num_hashes": $numHashes, "bands": $bands}"""
+        s"""{"shingle_k": $shingleK, "num_hashes": $numHashes, "bands": $bands, "shingle_rule": "$ShingleRule"}"""
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     } finally payload.unpersist(blocking = false)
@@ -310,6 +314,8 @@ object Dedup {
       (params.path("shingle_k").asInt(), params.path("num_hashes").asInt(),
         params.path("bands").asInt())
     require(shingleK > 0 && numHashes > 0 && bands > 0, s"corrupt index manifest: $params")
+    require(params.path("shingle_rule").asText() == ShingleRule,
+      s"the MinHash index at $path predates shingle_rule $ShingleRule; rebuild it with writeMinhashIndex")
 
     val margin = 1.75 / math.sqrt(numHashes.toDouble)
     val incPayload = track(incoming

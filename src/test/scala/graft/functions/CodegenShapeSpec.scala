@@ -195,4 +195,54 @@ class CodegenShapeSpec extends SparkTestBase {
       ((ranks, labels), (r.view.mapValues(nine).toMap, lab))
     }
   }
+
+  /** A corpus per input set in the shape of the `corpus_dedup` benchmark:
+    * 150 texts of 15 to 35 words over a 400-word vocabulary, an edited copy
+    * of each of the first 30 and a second one of the first 10 (so some
+    * clusters have three members), as `(id, text)` parquet written before
+    * any measured run. */
+  private lazy val corpora: Map[String, Seq[(Long, String)]] = Map("a" -> 3L, "b" -> 41L).map {
+    case (set, seed) =>
+      val rnd = new Random(seed)
+      val vocab = IndexedSeq.fill(400)(
+        Iterator.continually(('a' + rnd.nextInt(26)).toChar).take(2 + rnd.nextInt(7)).mkString)
+      def edit(w: IndexedSeq[String]) = w.updated(rnd.nextInt(w.size), vocab(rnd.nextInt(vocab.size)))
+      val texts = IndexedSeq.fill(150)(IndexedSeq.fill(15 + rnd.nextInt(21))(vocab(rnd.nextInt(vocab.size))))
+      val docs = texts ++ texts.take(30).map(edit) ++ texts.take(10).map(edit)
+      set -> docs.zipWithIndex.map { case (w, i) => (1000L + 7L * i, w.mkString(" ")) }
+  }
+
+  private lazy val corpusFiles: Map[String, String] = corpora.map { case (set, docs) =>
+    val path = s"$dir/$set-docs"
+    spark.createDataFrame(docs).toDF("id", "text").write.parquet(path)
+    set -> path
+  }
+
+  test("Dedup.minhashPairs then clusters: no compile on a second corpus") {
+    corpusFiles
+    def nine(d: Double): Double = math.rint(d * 1e9) / 1e9
+    pinned { set =>
+      val pairs = Dedup.minhashPairs(spark.read.parquet(corpusFiles(set)), "id", "text")
+      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1)) -> nine(r.getDouble(2))).toMap
+      val labels = Dedup.clusters(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Dedup.releaseResults(); Dedup.releaseCaches()
+      // exact all-pairs Jaccard >= 0.7 over the lowercased 5-char shingles
+      // (a text shorter than 5 is one shingle), and the min-id components
+      val sh = corpora(set).map { case (id, t) =>
+        val s = t.toLowerCase(java.util.Locale.ROOT)
+        id -> (if (s.length >= 5) s.sliding(5).toSet else Set(s))
+      }
+      val want = (for ((a, sa) <- sh; (b, sb) <- sh if a < b;
+                       j = (sa & sb).size.toDouble / (sa | sb).size if j >= 0.7)
+        yield (a, b) -> nine(j)).toMap
+      assert(want.size >= 30, want.size)
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+      for ((a, b) <- want.keys) {
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      ((got, labels), (want, parent.keys.map(x => x -> find(x)).toMap))
+    }
+  }
 }

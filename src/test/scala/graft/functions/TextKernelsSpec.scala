@@ -127,6 +127,138 @@ class TextKernelsSpec extends SparkTestBase {
     }
   }
 
+  // ------------------------------------------------ one shingle kernel
+
+  private def utf(t: String) = UTF8String.fromString(t)
+  private def lower(t: String) = t.toLowerCase(java.util.Locale.ROOT)
+
+  /** The shingle kernels as they were before they shared one shingle
+    * array, kept as references for texts of length >= k: `sorted_shingles`
+    * filled a TreeSet, `jaccard_shingles` a boxed HashSet per text, and
+    * `minhash_signature` skipped repeated shingles through a HashSet. A
+    * window's shingle hash is `hash64` of the window. */
+  private def refWindows(t: String, k: Int): Seq[Long] = {
+    val s = lower(t)
+    (0 to s.length - k).map(i => TextOps.hash64(s.substring(i, i + k)))
+  }
+
+  private def refSortedShingles(t: String, k: Int): Array[Long] = {
+    val set = new java.util.TreeSet[java.lang.Long]()
+    refWindows(t, k).foreach(h => set.add(h))
+    set.toArray(new Array[java.lang.Long](0)).map(_.longValue)
+  }
+
+  private def refJaccardShingles(a: String, b: String, k: Int): Double = {
+    def set(t: String) = { val s = new java.util.HashSet[Long](); refWindows(t, k).foreach(s.add); s }
+    val (sa, sb) = (set(a), set(b))
+    if (sa.isEmpty && sb.isEmpty) return 1.0
+    var inter = 0
+    sa.forEach(h => if (sb.contains(h)) inter += 1)
+    inter.toDouble / (sa.size + sb.size - inter)
+  }
+
+  private def refMinhash(t: String, k: Int, num: Int): Array[Long] = {
+    var state = 0x5deece66dL
+    def next(): Long = { state = state * 6364136223846793005L + 1442695040888963407L; state }
+    val ab = Array.fill(num) { val a = next() | 1L; (a, next()) }
+    val sig = Array.fill(num)(Long.MaxValue)
+    val seen = new java.util.HashSet[java.lang.Long]()
+    for (h <- refWindows(t, k) if seen.add(h); j <- 0 until num) {
+      val v = h * ab(j)._1 + ab(j)._2
+      if (v < sig(j)) sig(j) = v
+    }
+    sig
+  }
+
+  /** Random texts: ASCII, mixed case, BMP non-ASCII (Latin-1, Greek,
+    * Cyrillic, CJK) and heavy repetition of a short unit. */
+  private def randomTexts(rnd: scala.util.Random, n: Int): Seq[String] = {
+    val alphabets = IndexedSeq(
+      ('a' to 'z') ++ Seq(' ', ' ', '.'),
+      ('a' to 'z') ++ ('A' to 'Z') ++ Seq(' ', ','),
+      ('\u00c0' to '\u00ff') ++ ('\u0391' to '\u03c9') ++ ('\u0410' to '\u044f') ++
+        ('\u4e00' to '\u4e20') ++ Seq(' ', 'a', 'B'))
+    Seq.fill(n) {
+      val abc = alphabets(rnd.nextInt(alphabets.size))
+      def chars(m: Int) = Seq.fill(m)(abc(rnd.nextInt(abc.size))).mkString
+      if (rnd.nextInt(4) == 0) chars(1 + rnd.nextInt(4)) * (3 + rnd.nextInt(30))
+      else chars(rnd.nextInt(120))
+    }
+  }
+
+  test("one shingle kernel equals the set-based kernels on texts of length >= k") {
+    val rnd = new scala.util.Random(13)
+    val texts = randomTexts(rnd, 300)
+    // near pairs share most shingles, so the Jaccard check sees values in (0, 1)
+    val near = texts.map(t => t.patch(rnd.nextInt(t.length + 1), "xY\u00e9", rnd.nextInt(3)))
+    var checked = 0
+    for (k <- Seq(1, 3, 5, 9)) {
+      def long(t: String) = lower(t).length >= k
+      for (t <- texts if long(t)) {
+        val sig = TextOps.minhashSignature(utf(t), k, 128).toLongArray()
+        assert(sig.sameElements(refMinhash(t, k, 128)), s"minhash k=$k: $t")
+        val sh = TextOps.sortedShingles(utf(t), k).toLongArray()
+        assert(sh.sameElements(refSortedShingles(t, k)), s"sorted_shingles k=$k: $t")
+        checked += 1
+      }
+      val pairs = texts.zip(near) ++ texts.zip(texts.tail)
+      for ((a, b) <- pairs if long(a) && long(b)) {
+        assert(TextOps.jaccardShingles(utf(a), utf(b), k) == refJaccardShingles(a, b, k),
+          s"jaccard_shingles k=$k: $a | $b")
+      }
+    }
+    assert(checked > 900, checked)
+  }
+
+  test("short-text rule: a non-empty text shorter than k is one shingle, the empty text none") {
+    val k = 5
+    def jac(a: String, b: String) = TextOps.jaccardShingles(utf(a), utf(b), k)
+    def sh(t: String) = TextOps.sortedShingles(utf(t), k)
+    def mh(t: String) = TextOps.minhashSignature(utf(t), k, 128).toLongArray().toSeq
+    assert(jac("abc", "xyz") == 0.0)
+    assert(jac("abc", "abc") == 1.0)
+    assert(jac("abc", "") == 0.0)
+    assert(jac("", "") == 1.0)
+    assert(mh("abc") != mh("xyz"))
+    assert(!mh("abc").forall(_ == Long.MaxValue) && !mh("xyz").forall(_ == Long.MaxValue))
+    assert(mh("").forall(_ == Long.MaxValue))
+    assert(sh("abc").toLongArray().toSeq == Seq(TextOps.hash64("abc")))
+    assert(sh("ABC").toLongArray().toSeq == Seq(TextOps.hash64("abc"))) // lowercased first
+    assert(sh("").numElements() == 0)
+    // a short text's one shingle matches no k-window of a longer text; the
+    // one shingle of a length-k text does
+    assert(jac("abcd", "hello world abcd") == 0.0 && jac("abcde", "abcde fghij") > 0.0)
+    val texts = Seq("abc", "xyz", "", "ABC", "abcd", "abcde", "abcdef", "hello world abcd",
+      "\u00e9t\u00e9", "a") ++ randomTexts(new scala.util.Random(5), 40)
+    for (a <- texts; b <- texts)
+      assert(jac(a, b) == TextOps.jaccardSorted(sh(a), sh(b)), s"$a | $b")
+  }
+
+  test("a shingle size k < 1 is refused by every shingle kernel") {
+    for (k <- Seq(0, -3)) {
+      val errs = Seq(
+        intercept[IllegalArgumentException](TextOps.sortedShingles(utf("hello world"), k)),
+        intercept[IllegalArgumentException](TextOps.minhashSignature(utf("hello world"), k, 64)),
+        intercept[IllegalArgumentException](
+          TextOps.jaccardShingles(utf("hello world"), utf("completely different"), k)))
+      errs.foreach(e => assert(e.getMessage.contains(s"k must be >= 1, got $k"), e.getMessage))
+    }
+    // the SQL path surfaces the same refusal instead of one shingle for all
+    val e = intercept[Exception](graft.operators.Dedup.minhashPairs(
+      spark.createDataFrame(Seq((1L, "hello world"), (2L, "completely different")))
+        .toDF("id", "text"), "id", "text", shingleK = 0).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("k must be >= 1")), e)
+    graft.operators.Dedup.releaseCaches()
+  }
+
+  test("a MinHash signature length num < 1 is refused") {
+    for (num <- Seq(0, -1, 257)) {
+      val e = intercept[IllegalArgumentException](TextOps.minhashSignature(utf("hello world"), 5, num))
+      assert(e.getMessage.contains(s"num must be in [1, 256], got $num"), e.getMessage)
+    }
+  }
+
   test("fast fingerprint SQL function is registered") {
     val r = spark.sql(
       "SELECT rolling_fingerprint_fast('the quick brown fox jumps over it', 16) AS fp")

@@ -106,6 +106,49 @@ class DedupSpec extends SparkTestBase {
     Dedup.releaseCaches()
   }
 
+  test("nearDupsAgainstIndex refuses an index written without the shingle rule") {
+    val dir = java.nio.file.Files.createTempDirectory("mhidx-rule").toString + "/idx"
+    val corpus = Seq((1L, "abc"), (2L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    Dedup.writeMinhashIndex(corpus, "doc_id", "text", dir)
+    // a fresh index finds an identical short incoming text
+    val incoming = Seq((10L, "abc")).toDF("doc_id", "text")
+    val hits = Dedup.nearDupsAgainstIndex(incoming, "doc_id", "text", dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(hits == Seq((10L, 1L, 1.0)), hits)
+    // the same index with the manifest an older build wrote
+    val manifest = new org.apache.hadoop.fs.Path(dir, "_INDEX.json")
+    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val in = fs.open(manifest)
+    val params = try mapper.readTree(in) finally in.close()
+    assert(params.has("shingle_rule"), params)
+    params.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("shingle_rule")
+    val out = fs.create(manifest, true)
+    try out.write(mapper.writeValueAsBytes(params)) finally out.close()
+    val e = intercept[IllegalArgumentException](
+      Dedup.nearDupsAgainstIndex(incoming, "doc_id", "text", dir))
+    assert(e.getMessage.contains("rebuild it with writeMinhashIndex"), e.getMessage)
+    Dedup.releaseCaches()
+  }
+
+  test("distinct short texts share no MinHash buckets: O(n) shuffle records") {
+    // 600 distinct 4-character texts, each shorter than the shingle size:
+    // one shingle apiece, so no two sign alike and no band bucket fills up
+    val rnd = new scala.util.Random(23)
+    val texts = Iterator.continually(Seq.fill(4)(('a' + rnd.nextInt(26)).toChar).mkString)
+      .distinct.take(600).toSeq
+    val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    Dedup.releaseCaches()
+    val (pairs, log) = JobLog.during(spark.sparkContext)(
+      Dedup.minhashPairs(corpus, "doc_id", "text").collect())
+    assert(pairs.isEmpty, pairs.take(5).toSeq)
+    val records = log.stageShuffleRecords.map(_._2).sum
+    assert(records < 50L * texts.size, s"$records shuffle records for ${texts.size} documents: " +
+      log.stageShuffleRecords)
+    Dedup.releaseCaches()
+  }
+
   test("dropSeen treats NULL text as a value: refused iff the corpus has one") {
     val corpusWithNull = Seq((1L, "alpha"), (2L, null)).toDF("doc_id", "text")
     val corpusNoNull = Seq((1L, "alpha")).toDF("doc_id", "text")
